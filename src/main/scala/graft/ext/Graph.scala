@@ -1,7 +1,13 @@
 package graft.ext
 
-import org.apache.spark.sql.DataFrame
+import scala.collection.mutable
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.HashPartitioner
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 /** Graph analytics over plain (src, dst) edge DataFrames — the iterative
   * join workload Spark was built for. Connected components lives in
@@ -10,17 +16,18 @@ import org.apache.spark.sql.functions._
   */
 object Graph {
 
-  /** Canonical projection builders for the helper frames every operator
-    * here derives from its edge input. They exist so a CALLER can
-    * pre-persist exactly these plans (a session-scoped graph context —
+  /** Canonical projection builders for the helper frames the join-based
+    * operators here ([[labelPropagation]], [[hits]], [[bfsHops]]) derive
+    * from their edge input. They exist so a CALLER can pre-persist
+    * exactly these plans (a session-scoped graph context —
     * [[graft.SparkEntry.coengagementGraphWarm]]): Spark's cache manager
     * matches by canonicalized plan, so an operator's internal
     * [[acquire]] of the same projection becomes a cache HIT and the
     * operator leaves the frame's lifecycle to its owner. Without a
-    * pre-warmed context the behavior is unchanged — each operator
-    * persists and releases its own helpers (round-8 measured that
-    * per-call rebuild at ~2.5 s swept-cold per graph query on the
-    * sf0.1 co-engagement graph, ×4 queries — the motivating waste).
+    * pre-warmed context each operator persists and releases its own
+    * helpers. The sum-of-messages walks ([[pageRank]] and friends) read
+    * their edge input exactly once, into [[walkGraph]]'s adjacency, so
+    * a pre-warmed [[edgeProj]] only serves as their scan source.
     */
   private[graft] def edgeProj(edges: DataFrame, srcCol: String = "src",
                               dstCol: String = "dst"): DataFrame =
@@ -29,9 +36,6 @@ object Graph {
   private[graft] def nodesOf(e: DataFrame): DataFrame =
     e.select(col("src").as("id"))
       .union(e.select(col("dst").as("id"))).distinct()
-
-  private[graft] def outDegOf(e: DataFrame): DataFrame =
-    e.groupBy(col("src")).agg(count(lit(1)).as("_d"))
 
   /** Persist `df` unless an identical (canonicalized) plan is already
     * cached; the flag records who owns the entry — `release` unpersists
@@ -46,75 +50,288 @@ object Graph {
   private def release(df: DataFrame, callerOwned: Boolean): Unit =
     if (!callerOwned) df.unpersist(blocking = false)
 
+  /** One hash partition of a [[walkGraph]] adjacency, in compressed
+    * sparse row form over dense local indices.
+    *
+    * Local indices follow the id order, and slot j of the message block
+    * this partition sends to partition q is the j-th smallest distinct
+    * destination in q. The receiving partition lists the same nodes in
+    * the same order (its own local order, restricted to the nodes with
+    * an in-edge from this partition), so sender and receiver agree on
+    * slots without exchanging ids, and a recomputed partition lays out
+    * identically. Out-edges are sorted by (destination, weight), which
+    * fixes every floating-point sum order for a given partition count.
+    */
+  private final class WalkBlock(
+      val part: Int,
+      val ids: Array[Any],
+      val seeds: java.util.BitSet,
+      val outTotal: Array[Double],  // Σ out-weight (out-degree unweighted)
+      val outStart: Array[Int],     // CSR offsets, one per node plus one
+      val outPart: Array[Int],      // edge → destination partition
+      val outSlot: Array[Int],      // edge → slot in that partition's block
+      val outW: Array[Double],
+      val sendSlots: Array[Int],    // destination partition → block length
+      val recvIdx: Array[Array[Int]]) // source partition → slot → local index
+    extends Serializable
+
+  /** Per-walk arithmetic for [[sumWalk]], given the seed count. Seeds
+    * start at `start` and every other node at 0 (and inactive). Each
+    * round, every active node u sends `message(r(u), w, W(u))` along its
+    * out-edges (weight w, out-total W); a node's new value is
+    * `update(Σ received, isSeed)`, and it stays active when it is a seed
+    * or received a message. `output` shapes the (id, _v) frame of the
+    * active nodes into the operator's result.
+    */
+  private final case class Walk(
+      start: Double,
+      message: (Double, Double, Double) => Double,
+      update: (Double, Boolean) => Double,
+      output: DataFrame => DataFrame)
+
+  // build-shuffle record tags; a tag >= 0 is an in-edge from that partition
+  private final val OutEdge = -1
+  private final val Mention = -2
+  private final val SeedTag = -3
+
+  /** Build-shuffle records for one destination partition, column-wise:
+    * the shuffle moves one object per (input, destination) partition
+    * pair instead of one per record. Record i is node(i)'s out-edge to
+    * other(i) with weight w(i) when tag(i) == [[OutEdge]], else a tag.
+    */
+  private final class Recs(val node: Array[Any], val other: Array[Any],
+                           val w: Array[Double], val tag: Array[Int])
+    extends Serializable
+
+  /** Node-id order shared by every partition (nulls first). */
+  private val idOrder: Ordering[Any] = (a: Any, b: Any) =>
+    if (a == null) { if (b == null) 0 else -1 }
+    else if (b == null) 1
+    else a.asInstanceOf[Comparable[Any]].compareTo(b)
+
+  /** The walk adjacency of a (src, dst, w: double) edge frame, built by
+    * ONE shuffle keyed by node id: every node lands in the partition
+    * `HashPartitioner(spark.sql.shuffle.partitions)` gives its id, with
+    * its out-edges and out-total folded in. `seeds` (one column of ids)
+    * marks seed nodes and adds them as nodes; without it every node is
+    * a seed. The blocks are persisted, and the one job that materializes
+    * them also returns the seed count.
+    *
+    * Null ids follow SQL equi-join semantics: a null source sends
+    * nothing, a null destination receives nothing but still counts
+    * toward its source's out-total, and null is a node of its own.
+    * Ids must be of an ordered, hashable type (numeric, string, date);
+    * binary and nested ids are refused.
+    */
+  private def walkGraph(edges: DataFrame, seeds: Option[DataFrame])
+  : (RDD[WalkBlock], Long) = {
+    val idType = edges.schema("src").dataType
+    require(idType match {
+      case _: NumericType | _: StringType | DateType | TimestampType |
+           BooleanType => true
+      case _ => false
+    }, s"walk node ids must be atomic and ordered, not $idType")
+    val part = new HashPartitioner(
+      edges.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt)
+    val edgeRecs = edges.select(col("src"), col("dst"), col("w")).rdd
+      .flatMap { r =>
+        val (s, d, w) = (r.get(0), r.get(1), r.getDouble(2))
+        if (s == null) Iterator((s, null, 0.0, Mention), (d, null, 0.0, Mention))
+        else if (d == null) Iterator((s, null, w, OutEdge), (d, null, 0.0, Mention))
+        else Iterator((s, d, w, OutEdge), (d, null, 0.0, part.getPartition(s)))
+      }
+    val recs = seeds.fold(edgeRecs)(sd =>
+      edgeRecs.union(sd.select(col(sd.columns.head).cast(idType)).rdd
+        .map[(Any, Any, Double, Int)](r => (r.get(0), null, 0.0, SeedTag))))
+    val chunks = recs.mapPartitions { it =>
+      val cols = Array.fill(part.numPartitions)((Array.newBuilder[Any],
+        Array.newBuilder[Any], Array.newBuilder[Double], Array.newBuilder[Int]))
+      it.foreach { case (k, o, w, tag) =>
+        val c = cols(part.getPartition(k))
+        c._1 += k; c._2 += o; c._3 += w; c._4 += tag
+      }
+      cols.indices.iterator.map { q =>
+        val c = cols(q)
+        q -> new Recs(c._1.result(), c._2.result(), c._3.result(), c._4.result())
+      }
+    }
+    val allSeeds = seeds.isEmpty
+    val adj = chunks.partitionBy(part)
+      .mapPartitionsWithIndex((p, it) =>
+        Iterator(buildBlock(p, it.map(_._2), part, allSeeds)),
+        preservesPartitioning = true)
+      .persist()
+    val nSeeds = adj.map(_.seeds.cardinality.toLong).reduce(_ + _)
+    (adj, nSeeds)
+  }
+
+  private def buildBlock(p: Int, chunks: Iterator[Recs],
+                         part: HashPartitioner, allSeeds: Boolean)
+  : WalkBlock = {
+    final class Acc {
+      val outs = mutable.ArrayBuffer.empty[(Any, Double)]
+      val from = mutable.BitSet.empty
+      var seed = allSeeds
+    }
+    // java.util.HashMap: plain equals/hashCode on boxed ids, not Scala's
+    // cooperative numeric equality
+    val acc = new java.util.HashMap[Any, Acc]
+    chunks.foreach { c =>
+      for (i <- c.node.indices) {
+        val a = acc.computeIfAbsent(c.node(i), _ => new Acc)
+        val tag = c.tag(i)
+        if (tag == OutEdge) a.outs += (c.other(i) -> c.w(i))
+        else if (tag == SeedTag) a.seed = true
+        else if (tag >= 0) a.from += tag
+      }
+    }
+    val ids = acc.keySet.asScala.toArray[Any].sorted(idOrder)
+    val nodes = ids.map(acc.get)
+    val outs = nodes.map(_.outs.toArray.sorted(
+      Ordering.Tuple2(idOrder, Ordering.Double.TotalOrdering)))
+    val edges = outs.map(_.filter(_._1 != null))
+    val flat = edges.flatten
+    val outPart = flat.map(e => part.getPartition(e._1))
+    // slots: per destination partition, the distinct destinations in id
+    // order — one pass over the edges sorted by destination
+    val outSlot = new Array[Int](flat.length)
+    val sendSlots = new Array[Int](part.numPartitions)
+    flat.indices.sortBy(flat(_)._1)(idOrder).foldLeft(-1) { (prev, e) =>
+      val q = outPart(e)
+      if (prev < 0 || idOrder.compare(flat(prev)._1, flat(e)._1) != 0)
+        sendSlots(q) += 1
+      outSlot(e) = sendSlots(q) - 1
+      e
+    }
+    val recv = Array.fill(part.numPartitions)(Array.newBuilder[Int])
+    for (i <- nodes.indices; q <- nodes(i).from) recv(q) += i
+    val seeds = new java.util.BitSet(ids.length)
+    for (i <- nodes.indices if nodes(i).seed) seeds.set(i)
+    new WalkBlock(p, ids, seeds,
+      outs.map(_.iterator.map(_._2).sum),
+      edges.scanLeft(0)(_ + _.length),
+      outPart, outSlot, flat.map(_._2), sendSlots,
+      recv.map(_.result()))
+  }
+
+  /** The fixed-iteration sum-of-messages kernel behind [[pageRank]],
+    * [[pageRankWeighted]] and [[personalizedPageRank]].
+    *
+    * [[walkGraph]] builds and counts the adjacency in one job; then all
+    * `iters` rounds are chained lazily over the cached blocks, with
+    * per-partition state in primitive arrays whatever the id type. Each
+    * round's only exchange is one message block per (source, destination)
+    * partition pair, summed map-side, so the single
+    * [[graft.core.Caches.materialized]] action at the end evaluates the
+    * whole loop: the job count does not grow with `iters`, and no
+    * round's state is ever materialized. The adjacency is released once
+    * the result is cached.
+    */
+  private def sumWalk(edges: DataFrame, seeds: Option[DataFrame],
+                      iters: Int)(walk: Long => Walk): DataFrame = {
+    val (adj, nSeeds) = walkGraph(edges, seeds)
+    val w = walk(nSeeds)
+    val nParts = adj.getNumPartitions
+    var state = adj.map { b =>
+      val v = new Array[Double](b.ids.length)
+      var i = b.seeds.nextSetBit(0)
+      while (i >= 0) { v(i) = w.start; i = b.seeds.nextSetBit(i + 1) }
+      (v, b.seeds)
+    }
+    for (_ <- 1 to iters) {
+      val sent = adj.zipPartitions(state) { (bs, ss) =>
+        val b = bs.next()
+        val (v, active) = ss.next()
+        val sums = b.sendSlots.map(new Array[Double](_))
+        val got = b.sendSlots.map(new java.util.BitSet(_))
+        var i = active.nextSetBit(0)
+        while (i >= 0) {
+          val t = b.outTotal(i)
+          var e = b.outStart(i)
+          while (e < b.outStart(i + 1)) {
+            val q = b.outPart(e)
+            // a zero out-total divides to SQL null: the edge reaches
+            // its destination but adds nothing to the sum
+            if (t != 0.0) sums(q)(b.outSlot(e)) += w.message(v(i), b.outW(e), t)
+            got(q).set(b.outSlot(e))
+            e += 1
+          }
+          i = active.nextSetBit(i + 1)
+        }
+        b.sendSlots.indices.iterator.filter(b.sendSlots(_) > 0)
+          .map(q => q -> ((b.part, sums(q), got(q))))
+      }.partitionBy(new HashPartitioner(nParts))
+      state = adj.zipPartitions(sent) { (bs, ms) =>
+        val b = bs.next()
+        val sum = new Array[Double](b.ids.length)
+        val active = b.seeds.clone().asInstanceOf[java.util.BitSet]
+        ms.map(_._2).toArray.sortBy(_._1).foreach { case (p, vals, got) =>
+          val idx = b.recvIdx(p)
+          var j = got.nextSetBit(0)
+          while (j >= 0) {
+            sum(idx(j)) += vals(j)
+            active.set(idx(j))
+            j = got.nextSetBit(j + 1)
+          }
+        }
+        val v = new Array[Double](b.ids.length)
+        var i = active.nextSetBit(0)
+        while (i >= 0) {
+          v(i) = w.update(sum(i), b.seeds.get(i))
+          i = active.nextSetBit(i + 1)
+        }
+        Iterator((v, active))
+      }
+    }
+    val rows = adj.zipPartitions(state) { (bs, ss) =>
+      val b = bs.next()
+      val (v, active) = ss.next()
+      Iterator.iterate(active.nextSetBit(0))(i => active.nextSetBit(i + 1))
+        .takeWhile(_ >= 0).map(i => Row(b.ids(i), v(i)))
+    }
+    val out = graft.core.Caches.materialized(w.output(
+      edges.sparkSession.createDataFrame(rows, StructType(Seq(
+        StructField("id", edges.schema("src").dataType),
+        StructField("_v", DoubleType, nullable = false))))))
+    adj.unpersist(blocking = false)
+    out
+  }
+
   /** Fixed-iteration PageRank over a directed edge list.
     *
-    * Per iteration (the canonical distributed shape):
-    *   1. join ranks onto edges by src (both sides keyed on the
-    *      high-cardinality node id; AQE handles hub skew),
-    *   2. per-dst sum of pr/out-degree (map-side partial agg),
-    *   3. left-join back onto the node set so in-degree-0 nodes keep the
-    *      teleport mass: pr' = (1−d)/N + d·Σ.
-    *
-    * Only the (id, pr) frame crosses iterations — lineage grows
-    * linearly in `iters`, which is why this takes a FIXED iteration
-    * count rather than a convergence loop: callers at scale checkpoint
-    * or re-seed between batches of iterations (same plan-size argument
-    * as [[Similarity.kmeans]], which re-seeds from the driver because
-    * its state is k rows; a rank vector is |V| rows, so it must stay
-    * distributed and the plan must stay bounded).
+    * Runs on [[sumWalk]] with every node a seed: r₀ = 1/N, each node u
+    * sends r(u)/outdeg(u) along each out-edge (duplicate edges count
+    * twice), and r' = (1−d)/N + d·Σ received, so in-degree-0 nodes keep
+    * the teleport mass. The Spark jobs per call do not depend on
+    * `iters`: one adjacency build (which also counts N), then the
+    * result's materialization. Lineage grows linearly in `iters`, which
+    * is why this takes a FIXED iteration count rather than a
+    * convergence loop.
     *
     * Dangling mass (nodes with no OUT-edges) is dropped, the common
     * simplification; on a symmetrized edge list (undirected graphs)
     * there are no dangling nodes and ranks sum to 1.
     *
-    * The projected edge list, out-degree, and node frames are cached
-    * while the rank plan executes (every iteration re-reads them;
-    * uncached, each reference would re-execute the edge-derivation
-    * plan — for a derived graph like q86's basket self-join that
-    * multiplies the most expensive stage by 2·iters+2), then RELEASED:
-    * the result is materialized via [[graft.core.Caches.materialized]]
-    * and the helpers unpersisted before returning, so repeated calls
-    * don't accumulate dead graph frames in executor storage. The
-    * returned (|V|-row) frame is the one persisted handle the caller
-    * owns.
-    *
-    * Returns (id, pr, pr_scaled = pr·N): pr for mass accounting,
-    * pr_scaled (mean 1.0) as the display/threshold form — computed here
-    * because N is already on hand, saving callers a recount.
+    * Returns (id, pr, pr_scaled = pr·N) as a materialized, persisted
+    * frame the caller owns: pr for mass accounting, pr_scaled (mean
+    * 1.0) as the display/threshold form — computed here because N is
+    * already on hand, saving callers a recount.
     */
   def pageRank(edges: DataFrame, iters: Int, damping: Double = 0.85,
                srcCol: String = "src", dstCol: String = "dst")
   : DataFrame = {
     require(iters >= 1, "pageRank needs at least one iteration")
-    val (e, eOwn) = acquire(edgeProj(edges, srcCol, dstCol))
-    val (outDeg, dOwn) = acquire(outDegOf(e))
-    val (nodes, nOwn) = acquire(nodesOf(e))
-    // |V| as a driver scalar, not a broadcast-agg subtree: the count is
-    // ONE Long off the just-persisted node frame (model-sized, the
-    // k-means-collect class), and the literal replaces three broadcast
-    // joins whose subtrees each re-executed the node aggregate per plan
-    // reference — the HITS normalizer lesson applied at N's smaller
-    // scale
-    val n = nodes.count()
-    var ranks = nodes.select(col("id"), lit(1.0 / n).as("pr"))
-    for (_ <- 1 to iters) {
-      val contribs = e.join(outDeg, Seq("src"))
-        .join(ranks, col("src") === col("id"))
-        .select(col("dst"), (col("pr") / col("_d")).as("_c"))
-        .groupBy(col("dst")).agg(sum(col("_c")).as("_s"))
-      ranks = nodes.join(contribs, col("id") === col("dst"), "left")
-        .select(col("id"),
-          (lit((1.0 - damping) / n) +
-            lit(damping) * coalesce(col("_s"), lit(0.0))).as("pr"))
+    sumWalk(edgeProj(edges, srcCol, dstCol).withColumn("w", lit(1.0)),
+      None, iters) { n =>
+      val teleport = (1.0 - damping) / n
+      Walk(1.0 / n, (r, _, d) => r / d, (s, _) => teleport + damping * s,
+        scaledRanks(n))
     }
-    val out = graft.core.Caches.materialized(
-      ranks.select(col("id"), col("pr"),
-        (col("pr") * lit(n.toDouble)).as("pr_scaled")))
-    release(e, eOwn)
-    release(outDeg, dOwn)
-    release(nodes, nOwn)
-    out
   }
+
+  private def scaledRanks(n: Long)(ranks: DataFrame): DataFrame =
+    ranks.select(col("id"), col("_v").as("pr"),
+      (col("_v") * lit(n.toDouble)).as("pr_scaled"))
 
   /** Edge-WEIGHTED PageRank: [[pageRank]] with transition probability
     * w/Σ_out w instead of 1/out-degree — on a co-engagement graph the
@@ -122,47 +339,30 @@ object Graph {
     * item-importance ranking over weighted affinity should do (the
     * unweighted variant treats a 40-user tie like a 3-user one).
     *
-    * Keeps (w, Σw) separate in the transition frame rather than
-    * pre-dividing — `(d·pr·w)/Σw` is the fixed left-associated chain
-    * both engines compute, so an unrolled SQL oracle matches to float
-    * order ([[personalizedPageRank]]'s trick). Same per-iteration
-    * shape, lifecycle, and (id, pr, pr_scaled) contract as
-    * [[pageRank]]; dangling mass likewise dropped.
+    * Each message is `(d·pr·w)/Σw`, the fixed left-associated chain an
+    * unrolled SQL oracle computes too, so the two match to float order
+    * ([[personalizedPageRank]]'s trick). Same kernel, job count, and
+    * (id, pr, pr_scaled) contract as [[pageRank]]; dangling mass
+    * likewise dropped.
     */
   def pageRankWeighted(edges: DataFrame, iters: Int,
                        damping: Double = 0.85, srcCol: String = "src",
                        dstCol: String = "dst", weightCol: String = "w")
   : DataFrame = {
     require(iters >= 1, "pageRankWeighted needs at least one iteration")
-    val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"),
-      col(weightCol).as("_w"))
-    val outW = e.groupBy(col("src")).agg(sum(col("_w")).as("_wtot"))
-    val (trans, tOwn) = acquire(e.join(outW, Seq("src"))
-      .select(col("src"), col("dst"), col("_w"), col("_wtot")))
-    // node set from the unweighted projection — identical rows (trans
-    // is an inner join on src, every endpoint survives) and the same
-    // canonical plan [[nodesOf]] callers pre-warm
-    val (nodes, nOwn) = acquire(nodesOf(edgeProj(edges, srcCol, dstCol)))
-    // driver-scalar |V|, same rationale as [[pageRank]]
-    val n = nodes.count()
-    var ranks = nodes.select(col("id"), lit(1.0 / n).as("pr"))
-    for (_ <- 1 to iters) {
-      val contribs = trans.join(ranks, col("src") === col("id"))
-        .select(col("dst"),
-          (lit(damping) * col("pr") * col("_w") / col("_wtot")).as("_c"))
-        .groupBy(col("dst")).agg(sum(col("_c")).as("_s"))
-      ranks = nodes.join(contribs, col("id") === col("dst"), "left")
-        .select(col("id"),
-          (lit((1.0 - damping) / n) +
-            coalesce(col("_s"), lit(0.0))).as("pr"))
+    sumWalk(weightedEdges(edges, srcCol, dstCol, weightCol), None,
+      iters) { n =>
+      val teleport = (1.0 - damping) / n
+      Walk(1.0 / n, (r, w, t) => damping * r * w / t,
+        (s, _) => teleport + s, scaledRanks(n))
     }
-    val out = graft.core.Caches.materialized(
-      ranks.select(col("id"), col("pr"),
-        (col("pr") * lit(n.toDouble)).as("pr_scaled")))
-    release(trans, tOwn)
-    release(nodes, nOwn)
-    out
   }
+
+  /** (src, dst, w: double); a null weight counts as 0. */
+  private def weightedEdges(edges: DataFrame, srcCol: String,
+                            dstCol: String, weightCol: String): DataFrame =
+    edges.select(col(srcCol).as("src"), col(dstCol).as("dst"),
+      coalesce(col(weightCol).cast("double"), lit(0.0)).as("w"))
 
   /** Degree assortativity of an undirected CANONICAL pair list
     * (aCol < bCol): the Pearson correlation of endpoint degrees over
@@ -200,17 +400,15 @@ object Graph {
     * Differences from [[pageRank]], each deliberate:
     *   - restart mass `alpha/|seeds|` goes ONLY to seeds — r₀ likewise
     *     (mass 1 split over seeds);
-    *   - the rank frame holds only REACHED nodes (unreached = exact 0;
-    *     no |V|-row left-join per round) — per-iteration state is the
-    *     reachable set, which for a localized walk is far smaller than
-    *     the graph, exactly why RWR scales as a per-seed-batch query;
+    *   - only REACHED nodes are active and returned (unreached = exact
+    *     0): a node is reached in a round when it is a seed or received
+    *     an edge from a node reached in the round before;
     *   - edges carry a weight column (co-engagement count): transition
     *     probability = w / Σ_out w.
     * Walk mass exiting a dangling node is dropped ([[pageRank]]'s
-    * convention); a symmetrized interaction graph has none. Fixed
-    * `iters` keeps lineage linear (same argument as [[pageRank]]); the
-    * edge/out-weight frames are cached across rounds and released after
-    * the result materializes (same lifecycle).
+    * convention); a symmetrized interaction graph has none. Same
+    * [[sumWalk]] kernel and job count as [[pageRank]], with the seeds
+    * folded into the adjacency build.
     *
     * Returns (id, ppr) for reached nodes; Σ ppr ≤ 1 (= 1 when no
     * dangling mass drops). Scores are engine-exact modulo float-sum
@@ -223,37 +421,13 @@ object Graph {
                            dstCol: String = "dst", weightCol: String = "w")
   : DataFrame = {
     require(iters >= 1, "personalizedPageRank needs at least one iteration")
-    val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"),
-      col(weightCol).as("_w"))
-    val outW = e.groupBy(col("src")).agg(sum(col("_w")).as("_wtot"))
-    // normalize ONCE outside the loop: w/W is iteration-invariant, and
-    // `(1−α)·r·w / W` keeps its left-associated order by multiplying the
-    // rank against w BEFORE this precomputed division's result — i.e.
-    // ((1−α)·r)·w/W ≠ ((1−α)·r)·(w/W) in floats, so the transition frame
-    // keeps (w, W) separate to stay oracle-exact
-    val trans = e.join(outW, Seq("src"))
-      .select(col("src"), col("dst"), col("_w"), col("_wtot")).persist()
-    val s = seeds.select(col(seeds.columns.head).as("id")).distinct()
-      .persist()
-    val nSeeds = s.agg(count(lit(1)).as("_ns"))
-    val restart = s.join(broadcast(nSeeds))
-      .select(col("id"), (lit(alpha) / col("_ns")).as("_r"))
-    var ranks = s.join(broadcast(nSeeds))
-      .select(col("id"), (lit(1.0) / col("_ns")).as("ppr"))
-    for (_ <- 1 to iters) {
-      // rename the rank frame's columns before the self-lineage join so
-      // every reference below is unambiguous by name
-      val r = ranks.select(col("id").as("_rid"), col("ppr").as("_rp"))
-      val spread = trans.join(r, col("src") === col("_rid"))
-        .select(col("dst").as("id"),
-          (lit(1.0 - alpha) * col("_rp") * col("_w") / col("_wtot")).as("_c"))
-      ranks = spread.union(restart.select(col("id"), col("_r").as("_c")))
-        .groupBy(col("id")).agg(sum(col("_c")).as("ppr"))
+    sumWalk(weightedEdges(edges, srcCol, dstCol, weightCol), Some(seeds),
+      iters) { nSeeds =>
+      val (keep, restart) = (1.0 - alpha, alpha / nSeeds)
+      Walk(1.0 / nSeeds, (r, w, t) => keep * r * w / t,
+        (s, seed) => if (seed) s + restart else s,
+        _.select(col("id"), col("_v").as("ppr")))
     }
-    val out = graft.core.Caches.materialized(ranks)
-    trans.unpersist(blocking = false)
-    s.unpersist(blocking = false)
-    out
   }
 
   /** Synchronous label propagation over a directed edge list: start

@@ -81,6 +81,15 @@ object Profile {
     * the whole frame is oracle-checkable. Still a single wide aggregate:
     * the three percentiles come from one `percentile(col, array(...))`
     * sort per column, unpacked by position.
+    *
+    * Precondition (all `summaryAll*` forms): `df` should be a
+    * scan-stage input — a table scan plus narrow projections/filters,
+    * or a cached frame. The aggregate is split into one subtree per
+    * column (per exact AND sketch column for [[summaryAllGated]]), and
+    * each subtree re-executes `df`'s plan: over a scan that is one
+    * column-pruned read per subtree, but over a computed input (a join
+    * or aggregate upstream) the whole upstream runs up to 2·|cols|
+    * times. Cache such an input before profiling it.
     */
   def summaryAll(df: DataFrame, cols: Seq[String]): DataFrame =
     summaryAllImpl(df, cols, exact = true)
@@ -145,8 +154,11 @@ object Profile {
     //  - the exact subtrees ride fanOutForMapWork (their percentile
     //    value→count map merge is order-exact), and per-column splitting
     //    also parallelizes the FINAL merge+sort, which a single wide
-    //    aggregate funnels into one reducer task for all columns. All
-    //    exact subtrees share one fanned exchange (ReusedExchange).
+    //    aggregate funnels into one reducer task for all columns. The
+    //    exact subtrees do NOT share an exchange: column pruning narrows
+    //    each one to its own column, so every subtree (exact and sketch)
+    //    plans its own scan of `df` (plans/r18/q62_after.txt: one
+    //    Scan parquet per subtree, no ReusedExchange).
     // Every part is a one-row frame; broadcast cross joins reassemble
     // the wide row the gating expressions below read — values, and
     // therefore every gated cell, are IDENTICAL to the one-aggregate
@@ -199,10 +211,11 @@ object Profile {
     // every column's percentile merge+sort into ONE final reducer task —
     // splitting per column runs those finals in parallel. EXACT subtrees
     // ride fanOutForMapWork (order-exact value→count map merge; ADVICE
-    // r17 keeps the fan off the approx path) and share one fanned
-    // exchange via ReusedExchange; APPROX subtrees keep the input
-    // partitioning as given, one per column, so each sketch stream stays
-    // single and its values are bit-identical to the one-aggregate form.
+    // r17 keeps the fan off the approx path), each over its own
+    // column-pruned scan (no shared exchange); APPROX subtrees keep the
+    // input partitioning as given, one per column, so each sketch stream
+    // stays single and its values are bit-identical to the one-aggregate
+    // form.
     val sel = df.select(cols.map(col): _*)
     val base = if (exact) graft.sources.Tables.fanOutForMapWork(sel) else sel
     def wideFor(c: String): DataFrame = {

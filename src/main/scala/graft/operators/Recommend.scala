@@ -209,8 +209,11 @@ object Recommend {
     * Σ_u |items(u)|², so `maxItemsPerUser` caps each user's item list
     * first (keep the cap smallest item ids — deterministic, the
     * oracle reproduces it; the capping window partitions on the
-    * HIGH-cardinality user id). The pair aggregate shuffles on
-    * (item_a, item_b) — high cardinality; norms join item-keyed; the
+    * HIGH-cardinality user id). `maxItemsPerUser <= 0` means uncapped:
+    * no window is planned at all, for callers whose input is already
+    * bounded. Any positive cap, however large, is enforced. The pair
+    * aggregate shuffles on (item_a, item_b) — high cardinality; norms
+    * join item-keyed; the
     * final ranking is the k-bounded TopKScoredAggregator per item,
     * never a window over the full pair stream.
     *
@@ -225,15 +228,11 @@ object Recommend {
     val sel = ratings
       .select(col(userCol).as("_u"), col(itemCol).as("_i"),
         col(ratingCol).as("_r"))
-    // maxItemsPerUser >= 2^30 means "cap disabled" (r18): row_number is
-    // a 32-bit rank, so a cap that large was never enforceable anyway —
-    // a >2^30-row single window partition is a straggler catastrophe
-    // long before the filter could bite — and skipping the window drops
-    // a per-partition sort+filter that every downstream reference
-    // (norms + both self-join sides) re-executes above the reused
-    // exchange. Callers wanting a real cap pass a real cap.
+    // uncapped skips the window: it drops a per-partition sort+filter
+    // that every downstream reference (norms + both self-join sides)
+    // re-executes above the reused exchange
     val capped =
-      if (maxItemsPerUser >= (1 << 30)) sel
+      if (maxItemsPerUser <= 0) sel
       else sel.withColumn("_rn", row_number().over(w))
         .filter(col("_rn") <= maxItemsPerUser).drop("_rn")
     val norms = capped.groupBy(col("_i"))

@@ -2,13 +2,16 @@ package graft.tools
 
 import org.apache.spark.sql.SparkSession
 
-/** Diagnostic for the graph family's swept-cold overhead (round-8
-  * verdict "What's wrong" #2): after a JIT warm-up pass, sweeps all
-  * caches ONCE and runs the whole graph family in sequence — the
-  * bench's cold protocol as the family actually experiences it, where
-  * the first query rebuilds the session-shared projections
-  * ([[graft.SparkEntry.coengagementGraphWarm]]) and the rest should
-  * ride them. Usage: `runMain graft.tools.GraphProbe [sfDir]`.
+/** Diagnostic for the graph family's swept-cold overhead: after a JIT
+  * warm-up pass, sweeps all caches ONCE and runs the whole graph family
+  * in sequence — the bench's cold protocol as the family actually
+  * experiences it. The first query rebuilds the session-shared edge
+  * and node projections ([[graft.SparkEntry.coengagementGraphWarm]])
+  * and the join-based operators ride them; the PageRank walks
+  * (q86/q174/q148) build their own per-call adjacency in one job and
+  * run every round inside their result job, so their time should not
+  * grow with the iteration count. Usage:
+  * `runMain graft.tools.GraphProbe [sfDir]`.
   */
 object GraphProbe {
   private val family = Seq("q86_pagerank", "q100_label_communities",

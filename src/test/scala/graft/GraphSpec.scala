@@ -1,5 +1,12 @@
 package graft
 
+import java.util.concurrent.atomic.AtomicInteger
+
+import scala.util.Random
+
+import org.apache.spark.ListenerBusSync
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.ext.Graph
 
@@ -44,6 +51,128 @@ class GraphSpec extends SparkTestBase {
     assert(math.abs(got(1L) - teleport) < 1e-12)
     assert(got.values.forall(_ >= teleport - 1e-12))
     assert(got(3L) > got(2L)) // chain end accumulates
+  }
+
+  /** A seeded random multigraph over `ids`, as (src, dst, w) triples:
+    * duplicate edges, weights 1..5, dangling nodes (ids 40..44 only
+    * ever receive) and in-degree-0 nodes (ids 45..49 only ever send).
+    */
+  private def randomGraph[K](seed: Long, id: Int => K): Seq[(K, K, Long)] = {
+    val rnd = new Random(seed)
+    val core = Seq.fill(150)((rnd.nextInt(40), rnd.nextInt(40)))
+    val dangling = (40 until 45).map(d => (rnd.nextInt(40), d))
+    val sources = (45 until 50).map(s => (s, rnd.nextInt(40)))
+    val all = core ++ core.take(20) ++ dangling ++ sources
+    all.map { case (s, d) => (id(s), id(d), 1L + rnd.nextInt(5)) }
+  }
+
+  /** Plain-Scala power iteration of the three walks' definitions. */
+  private def refPageRank[K](edges: Seq[(K, K, Long)], iters: Int,
+                             weighted: Boolean, damping: Double = 0.85)
+  : Map[K, Double] = {
+    val nodes = edges.flatMap(e => Seq(e._1, e._2)).distinct
+    val n = nodes.size
+    val w = (e: (K, K, Long)) => if (weighted) e._3.toDouble else 1.0
+    val out = edges.groupMapReduce(_._1)(w)(_ + _)
+    var r = nodes.map(_ -> 1.0 / n).toMap
+    for (_ <- 1 to iters) {
+      val in = edges.groupMapReduce(_._2)(e =>
+        if (weighted) damping * r(e._1) * w(e) / out(e._1)
+        else r(e._1) / out(e._1))(_ + _)
+      r = nodes.map { v =>
+        val s = in.getOrElse(v, 0.0)
+        v -> ((1.0 - damping) / n + (if (weighted) s else damping * s))
+      }.toMap
+    }
+    r
+  }
+
+  private def refPpr[K](edges: Seq[(K, K, Long)], seeds: Set[K], iters: Int,
+                        alpha: Double = 0.15): Map[K, Double] = {
+    val out = edges.groupMapReduce(_._1)(_._3.toDouble)(_ + _)
+    var r = seeds.map(_ -> 1.0 / seeds.size).toMap
+    for (_ <- 1 to iters) {
+      val spread = edges.filter(e => r.contains(e._1)).groupMapReduce(_._2)(
+        e => (1.0 - alpha) * r(e._1) * e._3 / out(e._1))(_ + _)
+      r = (spread.keySet ++ seeds).map(v => v -> (spread.getOrElse(v, 0.0) +
+        (if (seeds(v)) alpha / seeds.size else 0.0))).toMap
+    }
+    r
+  }
+
+  private def assertClose[K](got: Map[K, Double], want: Map[K, Double],
+                             what: String): Unit = {
+    assert(got.keySet === want.keySet, what)
+    got.foreach { case (k, v) =>
+      assert(math.abs(v - want(k)) < 1e-12, s"$what: node $k $v vs ${want(k)}")
+    }
+  }
+
+  private def withShufflePartitions[T](p: Int)(body: => T): T = {
+    val key = "spark.sql.shuffle.partitions"
+    val before = spark.conf.get(key)
+    spark.conf.set(key, p.toLong)
+    try body finally spark.conf.set(key, before)
+  }
+
+  private def walkCase[K](edges: Seq[(K, K, Long)], seeds: Set[K],
+                          df: DataFrame, seedDf: DataFrame): Unit =
+    for (p <- Seq(1, 4, 7); iters <- Seq(1, 3)) withShufflePartitions(p) {
+      def ranks(out: DataFrame, c: String) = out.select(col("id"), col(c))
+        .collect().map(r => r.get(0).asInstanceOf[K] -> r.getDouble(1)).toMap
+      val what = s"partitions=$p iters=$iters"
+      val pr = Graph.pageRank(df, iters)
+      val prs = ranks(pr, "pr")
+      assertClose(prs, refPageRank(edges, iters, weighted = false),
+        s"pageRank $what")
+      val n = edges.flatMap(e => Seq(e._1, e._2)).distinct.size
+      assertClose(ranks(pr, "pr_scaled"), prs.map { case (k, v) => k -> v * n },
+        s"pr_scaled $what")
+      assertClose(ranks(Graph.pageRankWeighted(df, iters), "pr"),
+        refPageRank(edges, iters, weighted = true), s"pageRankWeighted $what")
+      assertClose(ranks(Graph.personalizedPageRank(df, seedDf, iters), "ppr"),
+        refPpr(edges, seeds, iters), s"personalizedPageRank $what")
+    }
+
+  test("sum-of-messages walks match a plain power iteration on random " +
+    "multigraphs at any partition count (Long ids)") {
+    val edges = randomGraph(7L, _.toLong)
+    // seed 99 is not in the graph: it still restarts and is returned
+    walkCase(edges, Set(3L, 99L), edges.toDF("src", "dst", "w"),
+      Seq(3L, 99L, 3L).toDF("id"))
+  }
+
+  test("sum-of-messages walks match a plain power iteration on random " +
+    "multigraphs at any partition count (String ids)") {
+    val edges = randomGraph(11L, i => s"n$i")
+    walkCase(edges, Set("n5", "n45"), edges.toDF("src", "dst", "w"),
+      Seq("n5", "n45").toDF("id"))
+  }
+
+  test("pageRank launches the same number of Spark jobs for 2 and 6 " +
+    "iterations") {
+    val sc = spark.sparkContext
+    val edges = randomGraph(3L, _.toLong).map(e => (e._1, e._2))
+      .toDF("src", "dst")
+    def jobs(iters: Int): Int = {
+      val n = new AtomicInteger
+      val l = new SparkListener {
+        override def onJobStart(e: SparkListenerJobStart): Unit =
+          n.incrementAndGet()
+      }
+      ListenerBusSync.drain(sc)
+      sc.addSparkListener(l)
+      try {
+        Graph.pageRank(edges, iters).unpersist()
+        ListenerBusSync.drain(sc)
+        n.get
+      } finally sc.removeSparkListener(l)
+    }
+    // one adjacency job, then the result's materialization (under AQE:
+    // the cache build, the count's map stage and its final stage)
+    val two = jobs(2)
+    assert(two === jobs(6))
+    assert(two <= 4, s"$two jobs")
   }
 
   test("labelPropagation: triangle + pendant converges to one community; " +

@@ -146,4 +146,36 @@ class RecommenderPipelineSpec extends SparkTestBase {
       (2L, 1L, 1L, c12), (2L, 3L, 2L, c12),
       (3L, 2L, 1L, c12), (3L, 1L, 2L, 0.2)))
   }
+
+  test("itemItemCosine: maxItemsPerUser <= 0 is uncapped; a large " +
+    "explicit cap is still planned and enforced") {
+    val ratings = Seq(
+      (1L, 1L, 2L), (1L, 2L, 1L),
+      (2L, 1L, 1L), (2L, 2L, 1L), (2L, 3L, 1L),
+      (3L, 2L, 1L), (3L, 3L, 2L))
+      .toDF("user_id", "item_id", "cnt")
+    def run(cap: Int) = graft.operators.Recommend.itemItemCosine(ratings,
+      "user_id", "item_id", "cnt", k = 2, maxItemsPerUser = cap)
+    def windows(df: org.apache.spark.sql.DataFrame) =
+      df.queryExecution.optimizedPlan.collect {
+        case w: org.apache.spark.sql.catalyst.plans.logical.Window => w
+      }.size
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.as[(Long, Long, Long, Double)].collect().toSet
+    val uncapped = run(0)
+    assert(windows(uncapped) === 0)
+    assert(rows(run(-1)) === rows(uncapped))
+    // 2^30 is a real cap, not a "disabled" sentinel: the capping window
+    // is planned (once per reference to the capped ratings), and with no
+    // user above it the rows are unchanged
+    val large = run(1 << 30)
+    assert(windows(large) > 0)
+    assert(rows(large) === rows(uncapped))
+    // a biting cap keeps each user's two smallest item ids: u2 drops i3,
+    // so i3's only co-rater left is u3 and every cosine moves
+    val two = rows(run(2))
+    assert(windows(run(2)) > 0)
+    assert(two.nonEmpty)
+    assert(two != rows(uncapped))
+  }
 }
