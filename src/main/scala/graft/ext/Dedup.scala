@@ -12,7 +12,10 @@ import org.apache.spark.sql.functions._
   *                bucket-join (shuffle on band hash only; candidate pairs
   *                verified in-bucket, never all-pairs)
   *  - SimHash:    64-bit signature (map-side) → bucket on signature
-  *  - n-gram Jaccard: exact verification on candidate pairs
+  *  - n-gram Jaccard / containment / shared spans: inverted index —
+  *                postings shuffled once on a 64-bit posting key, then
+  *                capped and paired in one streaming pass
+  *                ([[graft.plans.PostingPairs]]), never all-pairs
   *  - embedding near-dup: sign-LSH buckets → in-bucket cosine
   */
 object Dedup {
@@ -698,21 +701,26 @@ object Dedup {
     *
     * Hot-posting cap (`maxPostingDf`): a shingle appearing in f documents
     * contributes f(f−1)/2 candidate pairs — ONE boilerplate stop-shingle
-    * ("all rights reserved") makes the self-join quadratic in its posting
-    * list at corpus scale. The document frequency is computed as a window
-    * count over the postings repartitioned on the posting key — the SAME
-    * exchange the pair join hangs off (ReuseExchange/AQE dedupes it), so
-    * the cap rides a shuffle the join needed anyway; over-cap postings are
-    * filtered before any pair forms. (An aggregate + broadcast anti-join
-    * formulation was measured slower — it re-derives the expensive
-    * shingle projection per side; see PLANS.md.) Dropping a hot shingle
-    * from both sides undercounts `inter` only for pairs whose overlap was
-    * that boilerplate — which is exactly the overlap a near-dup pipeline
+    * ("all rights reserved") makes pairing quadratic in its posting list
+    * at corpus scale. Postings are shuffled ONCE on the posting key and
+    * sorted; [[graft.plans.PostingPairs]] then walks each posting list in
+    * one streaming pass, drops a list with more than `maxPostingDf`
+    * distinct documents whole, and emits every pair of the rest — so an
+    * over-cap list never forms a pair and never sits in memory beyond
+    * its first `maxPostingDf + 1` rows. Dropping a hot shingle from both
+    * sides undercounts `inter` only for pairs whose overlap was that
+    * boilerplate — which is exactly the overlap a near-dup pipeline
     * wants to ignore. Pairs sharing nothing but capped shingles do not
     * materialize at all. Note `jaccard` keeps the PRE-cap set sizes in
     * its denominator, so pairs that do share a capped shingle score lower
     * than their true Jaccard — the exact-oracle hash-match (q61) holds
     * while the corpus has no shingle over the cap.
+    *
+    * The operator de-duplicates ids within a posting list. A document's
+    * shingles are distinct, so that changes nothing unless two of one
+    * document's shingles collide in the 64-bit posting key (the pair's
+    * `inter` then counts the key once, not twice); several NULL-id
+    * documents on one key count once toward the cap.
     */
   def ngramJaccardPairs(df: DataFrame, idCol: String, textCol: String,
                         shingleN: Int = 3,
@@ -759,49 +767,32 @@ object Dedup {
                                 partitionCols: Seq[String],
                                 maxPostingDf: Int): DataFrame = {
     val part = partitionCols.map(col)
-    // fanOutForMapWork (r17, guide §2.5): the shingle build is the
-    // operator's dominant narrow work and runs in the scan stage — a
-    // one-row-group input would shingle the whole corpus in one task
+    // fanOutForMapWork: the shingle build is the operator's dominant
+    // narrow work — a one-row-group input would shingle the whole
+    // corpus in one task
     val d = graft.sources.Tables.fanOutForMapWork(
         df.select(part :+ col(idCol) :+ col(textCol): _*))
       .select(part :+ col(idCol) :+
         graft.functions.ShingleHashes(col(textCol), shingleN).as("sh"): _*)
       .select(part :+ col(idCol) :+ col("sh") :+
-        size(col("sh")).as("n_sh"): _*)
+        size(col("sh")).as("n"): _*)
+    // explode_outer + a null filter on the GENERATED column, not explode:
+    // for explode(sh) Spark infers `size(sh) > 0 AND isnotnull(sh)` on
+    // the generator input and pushes it, with sh inlined, below the
+    // fan-out exchange, so every document would be shingled twice. The
+    // outer generator's one null row per shingle-less document is
+    // dropped here instead.
     // posting key = one 64-bit remix of (partition cols, shingle hash):
     // the shuffle moves longs instead of string tuples. A cross-key
     // collision needs two xxhash64 values to agree (~n²/2⁶⁵ for n
     // distinct postings) — negligible against shingling sampling noise.
-    val rawPostings = d
-      .select(part :+ col(idCol) :+ col("n_sh") :+
-        explode(col("sh")).as("_shingle"): _*)
-      .select(col(idCol), col("n_sh"),
-        xxhash64(part :+ col("_shingle"): _*).as("pkey"))
-    // shingles are distinct per doc, so count(*) per pkey == document
-    // frequency. Computed as a window over postings repartitioned on
-    // pkey: both join sides then hang off ONE identical exchange
-    // (ReuseExchange dedupes it), so the cap costs one posting shuffle
-    // — which the pair join needed anyway — instead of a second
-    // shingle-build pass per side.
-    val postings = {
-      import org.apache.spark.sql.expressions.Window
-      rawPostings
-        .repartition(col("pkey"))
-        .withColumn("_df", count(lit(1)).over(Window.partitionBy("pkey")))
-        .filter(col("_df") <= maxPostingDf)
-        .drop("_df")
-    }
-    val a = postings.select(col("pkey"),
-      col(idCol).as("id_a"), col("n_sh").as("n_a"))
-    val b = postings.select(col("pkey").as("pkey_b"),
-      col(idCol).as("id_b"), col("n_sh").as("n_b"))
-    // merge hint (r17, sharedSpanPairs' rationale): both sides are the
-    // IDENTICAL posting subtree — sort-merge shares its one exchange
-    // via ReusedExchange, where the size-estimated broadcast would
-    // rebuild the whole shingle pipeline for the build side and is
-    // corpus-sized (OOM) at scale
-    a.hint("merge")
-      .join(b, col("pkey") === col("pkey_b") && col("id_a") < col("id_b"))
+    val postings = d
+      .select(part :+ col(idCol) :+ col("n") :+
+        explode_outer(col("sh")).as("_shingle"): _*)
+      .filter(col("_shingle").isNotNull)
+      .select(xxhash64(part :+ col("_shingle"): _*).as("pkey"),
+        col(idCol), col("n"))
+    graft.plans.PostingPairs(postings, "pkey", idCol, Seq("n"), maxPostingDf)
       .groupBy(col("id_a"), col("id_b"), col("n_a"), col("n_b"))
       .agg(count(lit(1)).as("inter"))
   }
@@ -829,19 +820,20 @@ object Dedup {
     * cost of oracle-exactness).
     *
     * Shape at 100 TB: the posting stream is |corpus chars|/16 rows;
-    * pair generation is the inverted-index join — Σ posting² with the
+    * pair generation is the inverted-index pass — Σ posting² with the
     * same hot-window cap as [[ngramJaccardPairs]] (`maxPostingDf`
-    * bounds the boilerplate blowup; the cap rides the SAME exchange
-    * the pair join needs, via the window-over-repartition pattern).
-    * Docs shorter than `window` yield no postings (both engines'
-    * empty position range).
+    * bounds the boilerplate blowup). One exchange on the window key
+    * feeds [[graft.plans.PostingPairs]], which de-duplicates each
+    * document's repeated windows, drops over-cap lists and pairs the
+    * rest in one streaming pass. Docs shorter than `window` yield no
+    * postings (both engines' empty position range).
     *
     * Output: (id_a, id_b, n_shared) with id_a < id_b,
     * n_shared ≥ `minShared` anchored windows in common.
     *
     * 64-bit posting-key collision bound (VERDICT r17 #6 — the one
     * documented divergence from the string-keyed oracle): pair
-    * generation joins on `xxhash64(window)`, so two DISTINCT surviving
+    * generation keys on `xxhash64(window)`, so two DISTINCT surviving
     * windows colliding in 64 bits merge their posting groups. At
     * 100 TB ≈ 10¹⁴ chars the anchored-window stream is ~6×10¹² rows
     * (1/16 sampling), so expected colliding distinct-window pairs are
@@ -873,35 +865,13 @@ object Dedup {
     // instead of 32-char strings, and a cross-key collision needs two
     // xxhash64 values to agree (~n²/2⁶⁵ for n distinct windows) —
     // negligible against the 1/16 anchor sampling itself (r17)
-    val wins = staged
+    val postings = staged
       .select(col(idCol), explode(transform(
         sequence(lit(1), length(col("_txt")) - (window - 1)),
         i => col("_txt").substr(i, lit(window)))).as("_win"))
       .filter(md5(col("_win")).startsWith("0"))
-      .select(col(idCol), xxhash64(col("_win")).as("_wkey"))
-    // ONE exchange for the whole tail (r17: was distinct-exchange +
-    // repartition-exchange): partitioning by _wkey alone already
-    // co-locates every (id, _wkey) duplicate, so the per-doc dedup
-    // aggregate, the posting-cap window, and (via ReuseExchange) both
-    // pair-join sides all ride the same shuffle
-    val postings = {
-      import org.apache.spark.sql.expressions.Window
-      wins.repartition(col("_wkey"))
-        .dropDuplicates(idCol, "_wkey")
-        .withColumn("_df", count(lit(1)).over(Window.partitionBy("_wkey")))
-        .filter(col("_df") <= maxPostingDf)
-        .drop("_df")
-    }
-    val a = postings.select(col("_wkey"), col(idCol).as("id_a"))
-    val b = postings.select(col("_wkey").as("_wkey_b"), col(idCol).as("id_b"))
-    // merge hint (r17): the self-join's sides are the IDENTICAL posting
-    // subtree — as sort-merge they share ONE exchange (ReusedExchange);
-    // the size-estimated broadcast alternative rebuilds the whole
-    // anchored-window pipeline for the build side, and at corpus scale
-    // a posting-stream broadcast is corpus-sized (OOM), so SMJ is also
-    // the only 100 TB-correct strategy here
-    a.hint("merge")
-      .join(b, col("_wkey") === col("_wkey_b") && col("id_a") < col("id_b"))
+      .select(xxhash64(col("_win")).as("_wkey"), col(idCol))
+    graft.plans.PostingPairs(postings, "_wkey", idCol, Nil, maxPostingDf)
       .groupBy(col("id_a"), col("id_b"))
       .agg(count(lit(1)).as("n_shared"))
       .filter(col("n_shared") >= minShared)

@@ -18,6 +18,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     ext.injectFunction(GraftExtensions.langId)
     ext.injectFunction(GraftExtensions.jaccardSim)
     ext.injectPlannerStrategy(_ => new graft.plans.AsOfJoinStrategy)
+    ext.injectPlannerStrategy(_ => new graft.plans.PostingPairsStrategy)
   }
 }
 

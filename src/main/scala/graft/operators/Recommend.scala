@@ -237,7 +237,7 @@ object Recommend {
         .filter(col("_rn") <= maxItemsPerUser).drop("_rn")
     val norms = capped.groupBy(col("_i"))
       .agg(sum(col("_r") * col("_r")).as("_sq"))
-    // merge hint (r18; sharedSpanPairs' r17 rationale): both self-join
+    // merge hint (r18): both self-join
     // sides are the IDENTICAL capped subtree — as sort-merge they share
     // ONE exchange (ReusedExchange), where the size-estimated broadcast
     // REBUILT the whole ratings/cap pipeline for the build side, and at

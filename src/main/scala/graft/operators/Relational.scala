@@ -3,7 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
+import org.apache.spark.sql.catalyst.expressions.{AttributeReference, XxHash64}
+import org.apache.spark.sql.types.{ByteType, DataType, IntegerType, LongType, ShortType}
 
 /** The relational operator surface of the reference, re-expressed as
   * composable DataFrame transformations (SURVEY.md §2.2–2.6).
@@ -215,11 +216,18 @@ object Relational {
     *    tying it blindly to a 10⁴-core cluster's parallelism would
     *    explode the replicated side — callers size it to the hot key.)
     *  - `saltCols` names the columns hashed into the salt; default all
-    *    columns. Pass the big side's unique key (or any high-entropy
-    *    subset that VARIES WITHIN a hot join key) when the full row is
-    *    wide — hashing 16 columns per row measurably beat the join
-    *    itself on a 16-column fact table (r18: q43 0.99→1.57 s before
-    *    this knob).
+    *    columns `xxhash64` can hash (a MAP or VARIANT column is left
+    *    out rather than failing analysis). Pass the big side's unique
+    *    key (or any high-entropy subset that VARIES WITHIN a hot join
+    *    key) when the full row is wide — hashing 16 columns per row
+    *    measurably beat the join itself on a 16-column fact table
+    *    (r18: q43 0.99→1.57 s before this knob). A named salt column
+    *    `xxhash64` cannot hash is rejected with its name.
+    *
+    * Duplicate rows collapse to ONE salt: rows of a hot key that are
+    * identical on every hashed column all land in the same bucket, so
+    * a key whose hot rows are exact copies stays skewed. Dedup the big
+    * side first, or pass `saltCols` that vary within the key.
     */
   def saltedJoin(big: DataFrame, small: DataFrame,
                  bigKey: String, smallKey: String,
@@ -228,7 +236,19 @@ object Relational {
     val width =
       if (buckets > 0) buckets
       else math.max(2, big.sparkSession.sparkContext.defaultParallelism)
-    val hashed = if (saltCols.nonEmpty) saltCols else big.columns.toSeq
+    def hashable(t: DataType): Boolean = new XxHash64(Seq(
+      AttributeReference("c", t)())).checkInputDataTypes().isSuccess
+    val hashed =
+      if (saltCols.isEmpty)
+        big.schema.fields.filter(f => hashable(f.dataType)).map(_.name).toSeq
+      else {
+        saltCols.foreach { c =>
+          val t = big.select(col(c)).schema.head.dataType
+          require(hashable(t), s"saltedJoin: salt column '$c' has type " +
+            s"${t.sql}, which xxhash64 cannot hash")
+        }
+        saltCols
+      }
     val salted = big.withColumn("__salt_b",
       pmod(xxhash64(hashed.map(col): _*), lit(width.toLong)))
     val replicated = small.withColumn("__salt_s",

@@ -81,6 +81,12 @@ object Tables {
     *  - a malformed minBytes override degrades to the default with a
     *    warning instead of throwing NumberFormatException inside every
     *    fanned operator.
+    *
+    * The bytes-derived count assumes every file splits at
+    * maxPartitionBytes. A non-splittable file (gzipped JSON/CSV) scans
+    * whole in ONE task however large it is, so when that estimate alone
+    * would decline and some leaf file cannot split, the real partition
+    * count is probed instead — safe, since the input plans no exchange.
     */
   def fanOutForMapWork(df: DataFrame): DataFrame = {
     val spark = df.sparkSession
@@ -111,23 +117,29 @@ object Tables {
       return df
     }
     val leaves = plan.collectLeaves()
-    val fileLeafBytes = leaves.collect {
+    val fileLeaves = leaves.collect {
       case lr: LogicalRelation if lr.relation.isInstanceOf[HadoopFsRelation] =>
-        lr.relation.asInstanceOf[HadoopFsRelation].location.sizeInBytes
+        lr.relation.asInstanceOf[HadoopFsRelation]
     }
+    val fileLeafBytes = fileLeaves.map(_.location.sizeInBytes)
     val allLeavesAreFiles = fileLeafBytes.size == leaves.size
     val maxSplit = math.max(1L,
       spark.sessionState.conf.filesMaxPartitionBytes)
+    // non-file leaves (LocalRelation in tests, cached frames) and
+    // non-splittable files: the shuffling guard above proved the plan
+    // exchange-free, so the physical probe is safe and cheap here
+    def probed: Long = df.rdd.getNumPartitions.toLong
+    def unsplittable(fs: HadoopFsRelation): Boolean =
+      fs.location.inputFiles.exists(f => !fs.fileFormat.isSplitable(
+        spark, fs.options, new org.apache.hadoop.fs.Path(f)))
     val (inputBytes, estPartitions): (BigInt, Long) =
-      if (allLeavesAreFiles && fileLeafBytes.nonEmpty)
+      if (allLeavesAreFiles && fileLeafBytes.nonEmpty) {
+        val est = fileLeafBytes
+          .map(b => math.max(1L, (b + maxSplit - 1) / maxSplit)).sum
         (BigInt(fileLeafBytes.sum),
-          fileLeafBytes.map(b => math.max(1L, (b + maxSplit - 1) / maxSplit))
-            .sum)
-      else
-        // non-file leaves (LocalRelation in tests, cached frames): the
-        // shuffling guard above proved the plan exchange-free, so the
-        // physical probe is safe and cheap here
-        (plan.stats.sizeInBytes, df.rdd.getNumPartitions.toLong)
+          if (est >= target && fileLeaves.exists(unsplittable)) probed
+          else est)
+      } else (plan.stats.sizeInBytes, probed)
     if (estPartitions >= target) df // the at-scale case: silent by design
     else if (inputBytes < BigInt(minBytes)) {
       System.err.println(s"[graft] fanOutForMapWork: declined — input " +

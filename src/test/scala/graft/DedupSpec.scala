@@ -396,4 +396,79 @@ class DedupSpec extends SparkTestBase {
     assert(prop === expected)
     assert(star === expected)
   }
+
+  /** Every node of the final plan, AQE stages opened up. Runs the frame
+    * first, so adaptive plans are their executed, final form.
+    */
+  private def executedNodes(df: org.apache.spark.sql.DataFrame)
+  : Seq[org.apache.spark.sql.execution.SparkPlan] = {
+    df.collect()
+    subtree(df.queryExecution.executedPlan)
+  }
+
+  private def subtree(p: org.apache.spark.sql.execution.SparkPlan)
+  : Seq[org.apache.spark.sql.execution.SparkPlan] = {
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    p match {
+      case a: AdaptiveSparkPlanExec => subtree(a.executedPlan)
+      case s: QueryStageExec => subtree(s.plan)
+      case o => o +: o.children.flatMap(subtree)
+    }
+  }
+
+  /** The pair operator's plan shape: one exchange on the posting key
+    * (hash-partitioned on the key the operator reads), no Window, no
+    * sort-merge join. Returns the nodes for further checks.
+    */
+  private def assertOnePostingExchange(df: org.apache.spark.sql.DataFrame,
+                                       what: String)
+  : Seq[org.apache.spark.sql.execution.SparkPlan] = {
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.execution.joins.SortMergeJoinExec
+    import org.apache.spark.sql.execution.window.WindowExec
+    val nodes = executedNodes(df)
+    val ops = nodes.collect { case p: graft.plans.PostingPairsExec => p }
+    assert(ops.size === 1, s"$what: one pair operator\n${nodes.head}")
+    val keyExchanges = nodes.collect {
+      case e: ShuffleExchangeExec => e.outputPartitioning
+    }.collect {
+      case HashPartitioning(Seq(k), _) if k.semanticEquals(ops.head.key) => k
+    }
+    assert(keyExchanges.size === 1, s"$what: posting-key exchanges\n${nodes.head}")
+    assert(!nodes.exists(_.isInstanceOf[WindowExec]), s"$what: Window")
+    assert(!nodes.exists(_.isInstanceOf[SortMergeJoinExec]),
+      s"$what: SortMergeJoin")
+    nodes
+  }
+
+  test("ngramJaccardPairs shingles each document once, after the fan-out " +
+    "exchange, and pairs postings over one posting-key exchange") {
+    import org.apache.spark.sql.catalyst.plans.physical.RoundRobinPartitioning
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    val key = "spark.graft.scan.fanout.minBytes"
+    val docs = graft.sources.Tables.load(spark, sf, "documents")
+    try {
+      spark.conf.set(key, "1") // the one-file fixture fans out
+      val nodes = assertOnePostingExchange(
+        Dedup.ngramJaccardPairs(docs, "doc_id", "text", 3,
+          Seq("lang", "source")), "ngramJaccardPairs")
+      val shingling = nodes.filter(_.expressions.exists(
+        _.exists(_.isInstanceOf[graft.functions.ShingleHashes])))
+      assert(shingling.size === 1,
+        s"shingle_hashes evaluated ${shingling.size}×:\n${nodes.head}")
+      assert(subtree(shingling.head).exists {
+        case e: ShuffleExchangeExec =>
+          e.outputPartitioning.isInstanceOf[RoundRobinPartitioning]
+        case _ => false
+      }, s"shingling must sit above the fan-out exchange:\n${nodes.head}")
+    } finally spark.conf.unset(key)
+  }
+
+  test("sharedSpanPairs pairs postings over one posting-key exchange, " +
+    "no window, no sort-merge join") {
+    assertOnePostingExchange(Dedup.sharedSpanPairs(
+      SparkEntry.withNearDups(spark, sf), "doc_id", "text"),
+      "sharedSpanPairs")
+  }
 }

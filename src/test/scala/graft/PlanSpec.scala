@@ -39,14 +39,17 @@ class PlanSpec extends SparkTestBase {
     assert(broadcasts >= 3, s"expected >=3 broadcast dims, got $broadcasts:\n$p")
   }
 
-  test("q32 hot-posting cap adds no extra table scan (window, not anti-join)") {
+  test("q32 hot-posting cap adds no extra table scan (pair operator, " +
+    "not anti-join)") {
     val p = plan(SparkEntry.queries("q32_ngram_jaccard")(spark, sf))
-    // one documents scan per join side — the rejected agg+anti-join cap
-    // formulation needed four; a regression here means the cap went back
-    // to re-deriving postings
+    // ONE documents scan: the cap and the pairing are one operator over
+    // one posting stream — the rejected agg+anti-join cap formulation
+    // needed four scans, the window + self-join two; a regression here
+    // means postings are derived more than once
     val scans = "Scan parquet".r.findAllIn(p).size
-    assert(scans == 2, s"expected 2 scans, got $scans:\n$p")
-    assert(p.contains("Window"), s"df cap should be a window:\n$p")
+    assert(scans == 1, s"expected 1 scan, got $scans:\n$p")
+    assert(p.contains("PostingPairs"), s"df cap should be the pair operator:\n$p")
+    assert(!p.contains("Window"), s"no window cap:\n$p")
   }
 
   test("q294 ALS half-rounds: no cartesian anywhere; partial aggregation " +

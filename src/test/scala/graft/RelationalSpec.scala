@@ -114,6 +114,24 @@ class RelationalSpec extends SparkTestBase {
     assert(!planTxt.contains("monotonically_increasing_id"))
   }
 
+  test("saltedJoin salts on the hashable columns and names an " +
+    "unhashable salt column") {
+    val big = Seq((1, "x", Map("a" -> 1)), (1, "y", Map("b" -> 2)),
+      (2, "w", Map.empty[String, Int])).toDF("k", "v", "m")
+    val small = Seq((1, "dim1"), (2, "dim2")).toDF("sk", "d")
+    val plain = big.join(small, $"k" === $"sk")
+      .select($"k", $"v", $"d").collect().map(_.toString).sorted.toSeq
+    // no saltCols: the MAP column is left out of the salt hash instead
+    // of failing analysis
+    val salted = Relational.saltedJoin(big, small, "k", "sk", buckets = 4)
+    assert(salted.columns.contains("m"))
+    assert(salted.select($"k", $"v", $"d").collect().map(_.toString)
+      .sorted.toSeq === plain)
+    val err = intercept[IllegalArgumentException](
+      Relational.saltedJoin(big, small, "k", "sk", saltCols = Seq("v", "m")))
+    assert(err.getMessage.contains("'m'"), err.getMessage)
+  }
+
   test("topKPerGroupAgg equals the window form and keeps the id's width") {
     val df = Seq(("g1", 1, 0.5), ("g1", 2, 0.9), ("g1", 3, 0.7),
       ("g2", 4, 0.1)).toDF("g", "id", "s")

@@ -104,4 +104,34 @@ class TablesSpec extends SparkTestBase {
         .rdd.getNumPartitions === 1)
     } finally spark.conf.unset(key)
   }
+
+  test("fanOutForMapWork fans out a non-splittable file that the bytes " +
+      "estimate prices as many splits") {
+    val dir = java.nio.file.Files.createTempDirectory("fanout-gz").toString
+    val target = spark.sparkContext.defaultParallelism
+    val docs = Tables.load(spark, sf, "documents").select("doc_id", "text")
+    docs.coalesce(1).write.mode("overwrite")
+      .option("compression", "gzip").json(s"$dir/gz")
+    docs.coalesce(1).write.mode("overwrite").json(s"$dir/plain")
+    val keys = Seq("spark.graft.scan.fanout.minBytes",
+      "spark.sql.files.maxPartitionBytes")
+    try {
+      spark.conf.set(keys(0), "1")
+      // 2 KiB splits: the gzipped file's bytes alone price it at over
+      // `target` partitions, yet it scans in ONE task
+      spark.conf.set(keys(1), "2048")
+      val gz = spark.read.schema(docs.schema).json(s"$dir/gz")
+      assert(gz.rdd.getNumPartitions === 1, "precondition: one task")
+      assert(new java.io.File(s"$dir/gz").listFiles()
+        .filter(_.getName.endsWith(".gz")).map(_.length).sum > 2048L * target,
+        "precondition: the bytes estimate reaches target")
+      assert(Tables.fanOutForMapWork(gz).rdd.getNumPartitions === target)
+      // the same rows uncompressed really split: returned unchanged
+      val plain = spark.read.schema(docs.schema).json(s"$dir/plain")
+      assert(Tables.fanOutForMapWork(plain) eq plain)
+    } finally {
+      keys.foreach(spark.conf.unset)
+      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
+    }
+  }
 }
