@@ -349,27 +349,12 @@ object Bench {
     // a warm-pass-only failure corrupts steady just as surely.
     val failed = failedAll
       .map(n => "\"" + n + "\"").mkString("[", ",", "]")
-    // one-time staged-artifact build costs (_SETUP_SECONDS, written by
-    // stagedStreamResult when it runs the REAL streaming query): folded
-    // into the tracked artifact so the amortized costs stay visible to
-    // consumers instead of living only in tmp-dir files (VERDICT r10 #6).
-    // Reads ONLY the dirs stagedStreamResult registered during THIS
-    // run — a blanket /tmp/graft_* scan also swept up stale dirs from
-    // prior code fingerprints and other corpora, accumulating and
-    // misattributing setup costs across rounds (ADVICE r11; superseded
-    // fingerprint dirs are now also GC'd at staging time).
-    val setup = {
-      import scala.jdk.CollectionConverters._
-      SparkEntry.stagedStreamDirsThisRun.asScala.toSeq.flatMap { p =>
-        val d = new java.io.File(p)
-        val f = new java.io.File(d, "_SETUP_SECONDS")
-        if (!f.isFile) None
-        else try Some(d.getName -> new String(
-            java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
-          .trim.toDouble)
-        catch { case _: Throwable => None }
-      }.sortBy(_._1)
-    }
+    // one-time staged-artifact build costs (each artifact's
+    // _SETUP_SECONDS marker), for every staged directory served or built
+    // in THIS run, so amortized costs stay visible in the tracked
+    // artifact (VERDICT r10 #6) without sweeping up dirs of other code
+    // builds or corpora (ADVICE r11)
+    val setup = graft.core.Staging.setupSeconds
     val setupJson = setup.map { case (k, v) => "\"" + k + "\":" + num(v) }
       .mkString("{", ",", "}")
     val detail =

@@ -56,11 +56,12 @@ class DriverCollectCensusSpec extends org.scalatest.funsuite.AnyFunSuite {
   /** The ARGFUL take(n)/head(n) residual surface (VERDICT r14 #5 /
     * round 15): a source census cannot type-resolve the receiver, and
     * the call shape is identical on Scala collections — so instead of
-    * guessing, every argful site is COUNT-PINNED per file. All 14
-    * current sites are Scala-collection receivers (reviewed this
-    * round): Bench's top-10 sort of an in-driver seconds list,
-    * SparkEntry's string/byte-array prefixes (PGM/WAV fixture
-    * synthesis, digest hex, a temp-file name), MakeTenX's alphabet
+    * guessing, every argful site is COUNT-PINNED per file. All 15
+    * current sites are Scala-collection receivers (reviewed per
+    * site): Bench's top-10 sort of an in-driver seconds list,
+    * SparkEntry's string prefixes (PGM/WAV fixture synthesis),
+    * Staging's byte-array/string prefixes (digest hex, a tmp-dir
+    * name), MakeTenX's alphabet
     * rotation, BroadcastProbe's schema-name label, and the top-k
     * aggregators' bounded buffer merges. ZERO are Dataset-typed — a
     * Dataset take(n) ships n rows to the driver and would need a
@@ -73,9 +74,11 @@ class DriverCollectCensusSpec extends org.scalatest.funsuite.AnyFunSuite {
       "top-10 selection over the in-driver per-query seconds list; " +
         "failedAll.take(5) — first five names from the in-driver " +
         "failed-query Seq[String] for the broken-run stderr message")),
-    "graft/SparkEntry.scala" -> ((5,
-      "string/byte-array prefixes: PGM/WAV fixture text (2), digest " +
-        "hex truncations (2), a UUID temp-file suffix (1)")),
+    "graft/SparkEntry.scala" -> ((2,
+      "string prefixes: PGM/WAV fixture text (2)")),
+    "graft/core/Staging.scala" -> ((3,
+      "byte-array/string prefixes: digest hex truncations (2), a UUID " +
+        "tmp-dir suffix (1)")),
     "graft/tools/MakeTenX.scala" -> ((1,
       "alphabet-string rotation for replica text mutation")),
     "graft/tools/BroadcastProbe.scala" -> ((1,

@@ -48,22 +48,4 @@ class EntrySpec extends SparkTestBase {
       }
     }
   }
-
-  test("stagedFrame builds at most once per source fingerprint and " +
-    "serves a parquet scan after") {
-    // the amortized-setup contract the pair lists / codebook rely on: a
-    // second call with the same (source, tag) must NOT re-run the
-    // builder (it may not run at all if a previous test session staged
-    // the same fingerprint — /tmp persists)
-    var builds = 0
-    def call() =
-      SparkEntry.stagedFrame(spark, sf, "documents", "spec_stage_probe") {
-        builds += 1
-        sources.Tables.load(spark, sf, "documents")
-          .select(org.apache.spark.sql.functions.col("doc_id")).limit(5)
-      }
-    assert(call().count() === 5L)
-    assert(call().count() === 5L)
-    assert(builds <= 1, s"builder ran $builds times")
-  }
 }

@@ -1,103 +1,103 @@
 package graft
 
+import java.io.File
+
+import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.functions._
 
-/** The fingerprint-keyed staged-artifact layer (stagedFrame) now carries
-  * the chain-pair list, the PQ codebook, AND the whole materialized
-  * stream family — pin its publish protocol directly:
+import graft.core.Staging
+
+/** The publish protocol of the staged-artifact layer, pinned through its
+  * frame helper (the pair lists, signature frames and profiles use it;
+  * streams, sources, bucketed tables and the codebook share the same
+  * primitive):
   *
-  *  - a COMMITTED artifact (_SUCCESS present) must be served without
-  *    re-invoking the build closure (the amortized-setup contract);
-  *  - a TORN artifact (directory present, no _SUCCESS — a crash mid-
-  *    publish) must be rebuilt, never read.
+  *  - a COMMITTED artifact (`_SETUP_SECONDS` present) is served without
+  *    re-invoking the build;
+  *  - a TORN artifact (directory present, marker missing) is rebuilt,
+  *    never read;
+  *  - a build collects old entries of the same site that this binary
+  *    cannot serve, keeps young ones, and registers what it built.
   *
-  * Uses a synthetic table name under the test SF dir fingerprint via a
-  * unique tag per test run-shape, so no production staging is touched.
+  * Each test stages a synthetic site name over the tiny `region` table,
+  * so no production staging is touched.
   */
 class StagedFrameSpec extends SparkTestBase {
 
-  private def stagedDirFor(tag: String): java.io.File = {
-    // mirror stagedPath's key derivation by just building once and
-    // finding the dir it published (the path algebra stays private)
-    val built = SparkEntry.stagedFrame(spark, sf, "region", tag) {
-      graft.sources.Tables.load(spark, sf, "region")
-        .select(col("r_regionkey"))
+  private def stage(name: String)(onBuild: => Unit) =
+    Staging.frame(spark, sf, "region", name) {
+      onBuild
+      graft.sources.Tables.load(spark, sf, "region").select(col("r_regionkey"))
     }
-    built.count()
-    val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
-    tmp.listFiles().filter(f => f.getName.startsWith(s"graft_${tag}_"))
-      .maxBy(_.lastModified())
-  }
 
   test("committed staged artifact is served without re-running the build") {
-    val tag = "spec_commit_check"
-    val dest = stagedDirFor(tag)
-    assert(new java.io.File(dest, "_SUCCESS").exists())
+    val name = "spec_commit_check"
+    assert(stage(name)(()).count() > 0)
+    assert(new File(Staging.dirFor(sf, "region", name), Staging.Marker).isFile)
     var rebuilt = false
-    val again = SparkEntry.stagedFrame(spark, sf, "region", tag) {
-      rebuilt = true
-      graft.sources.Tables.load(spark, sf, "region")
-        .select(col("r_regionkey"))
-    }
-    assert(again.count() > 0)
-    assert(!rebuilt,
-      "build closure re-ran despite a committed _SUCCESS artifact")
+    assert(stage(name) { rebuilt = true }.count() > 0)
+    assert(!rebuilt, "build closure re-ran despite a committed artifact")
   }
 
-  test("torn staged artifact (no _SUCCESS) is rebuilt, never read") {
-    val tag = "spec_torn_check"
-    val dest = stagedDirFor(tag)
-    // simulate the crash-mid-publish state: contents present with the
-    // commit marker missing, plus garbage a reader would choke on
-    new java.io.File(dest, "_SUCCESS").delete()
+  test("a frame builds at most once per key and serves a parquet scan after") {
+    var builds = 0
+    def call() = stage("spec_stage_probe")(builds += 1)
+    assert(call().count() === 5L)
+    assert(call().count() === 5L)
+    assert(builds <= 1, s"builder ran $builds times")
+    assert(call().queryExecution.executedPlan.toString.contains("FileScan parquet"))
+  }
+
+  test("torn staged artifact (no _SETUP_SECONDS) is rebuilt, never read") {
+    val name = "spec_torn_check"
+    stage(name)(()).count()
+    val dest = Staging.dirFor(sf, "region", name)
+    // the crash-mid-publish state: contents present with the commit
+    // marker missing, plus garbage a reader would choke on
+    assert(new File(dest, Staging.Marker).delete())
     java.nio.file.Files.writeString(
-      new java.io.File(dest, "part-garbage.parquet").toPath, "not parquet")
+      new File(dest, "part-garbage.parquet").toPath, "not parquet")
     var rebuilt = false
-    val again = SparkEntry.stagedFrame(spark, sf, "region", tag) {
-      rebuilt = true
-      graft.sources.Tables.load(spark, sf, "region")
-        .select(col("r_regionkey"))
-    }
+    val again = stage(name) { rebuilt = true }
     assert(rebuilt, "torn artifact was served instead of rebuilt")
     assert(again.count() > 0)
-    assert(new java.io.File(dest, "_SUCCESS").exists(),
+    assert(new File(dest, Staging.Marker).isFile,
       "rebuild did not republish a committed artifact")
-    assert(!new java.io.File(dest, "part-garbage.parquet").exists(),
+    assert(!new File(dest, "part-garbage.parquet").exists(),
       "garbage from the torn publish survived the rebuild")
   }
 
-  test("stagedStreamResult registers its dir for Bench's setup map and " +
-    "GCs superseded-fingerprint stagings") {
-    // a dir for the SAME stream tag under a different (stale) code
-    // fingerprint: this binary can never serve it again, so running
-    // the stream query must delete it (ADVICE r11 — fingerprint-keyed
-    // staging otherwise accumulates one orphan dir per code edit, and
-    // Bench's old blanket /tmp scan misattributed its setup cost)
-    val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
-    val stale = new java.io.File(tmp,
-      "graft_q248_result_v1_cdeadbeef_0123456789abcdef")
-    stale.mkdirs()
-    java.nio.file.Files.writeString(
-      stale.toPath.resolve("_SETUP_SECONDS"), "9.999\n")
-    // age it past the 6 h liveness cutoff (ADVICE r12): a YOUNG
-    // superseded dir may belong to a concurrently running JVM built
-    // from different code and must survive — only old orphans go
-    stale.setLastModified(System.currentTimeMillis() - 7L * 3600 * 1000)
-    // and a young sibling that must NOT be collected
-    val live = new java.io.File(tmp,
-      "graft_q248_result_v1_clivebeef_0123456789abcdef")
-    live.mkdirs()
-    SparkEntry.queries("q248_stream_static_enrich")(spark, sf).count()
-    assert(!stale.exists(),
-      "superseded-fingerprint staging dir survived a stream run")
-    assert(live.exists(),
-      "young superseded dir was collected — a concurrent JVM's live " +
-        "staging would be deleted mid-read")
-    org.apache.commons.io.FileUtils.deleteQuietly(live)
-    import scala.jdk.CollectionConverters._
-    val registered = SparkEntry.stagedStreamDirsThisRun.asScala
-    assert(registered.exists(_.contains("graft_q248_result_v1_c")),
-      s"stream staging dir not registered for setup attribution: " +
-        s"$registered")
+  test("a build collects old entries under another code fingerprint and " +
+    "orphaned tmp copies, keeps young ones, and registers its directory") {
+    val name = "spec_gc_check"
+    val tmp = new File(System.getProperty("java.io.tmpdir"))
+    val dest = Staging.dirFor(sf, "region", name)
+    // GC runs on a build only: make this call a miss
+    FileUtils.deleteQuietly(dest)
+    def entry(n: String, ageHours: Int): File = {
+      val d = new File(tmp, n)
+      d.mkdirs()
+      java.nio.file.Files.writeString(d.toPath.resolve(Staging.Marker), "9.999\n")
+      d.setLastModified(System.currentTimeMillis() - ageHours * 3600L * 1000)
+      d
+    }
+    val data = Staging.dataFingerprint(sf, "region")
+    // this binary can never serve these again
+    val stale = entry(Staging.key(name, data, "deadbeef"), ageHours = 7)
+    val orphan = entry(dest.getName + ".tmp.0badf00d", ageHours = 7)
+    // possibly a concurrent JVM's live staging: must survive
+    val young = entry(Staging.key(name, data, "0badc0de"), ageHours = 1)
+    // another site whose name extends this one: never this site's entry
+    val other = entry(Staging.key(name + "_x", data, "deadbeef"), ageHours = 7)
+    try {
+      stage(name)(()).count()
+      assert(!stale.exists(), "superseded-fingerprint staging survived a build")
+      assert(!orphan.exists(), "orphaned tmp copy survived a build")
+      assert(young.exists(), "a young superseded dir was collected — a " +
+        "concurrent JVM's live staging would be deleted mid-read")
+      assert(other.exists(), "another site's staging was collected")
+      assert(Staging.setupSeconds.map(_._1).contains(dest.getName),
+        s"built dir not registered: ${Staging.setupSeconds}")
+    } finally Seq(young, other).foreach(FileUtils.deleteQuietly)
   }
 }
