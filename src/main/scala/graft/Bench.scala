@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import graft.core.GraftSession
 
 /** Benchmark main: times every SparkEntry query on SPARK_GRAFT_SF_DIR and
   * emits one JSON metric line for the driver (BENCH_r{N}.json). The FULL
@@ -28,29 +28,14 @@ import org.apache.spark.sql.SparkSession
   * Timing note: each query is driven by `.count()`, which lets Catalyst
   * prune columns and drop a final orderBy — fine for relative iteration
   * (every round pays the same discount), but absolute parity with the
-  * Verify path would need a noop-write sink. Same trade in tools/TimeQ.
+  * Verify path would need a noop-write sink. Same trade in `tools.Cli time`.
   */
 object Bench {
 
-  /** The core count named by SPARK_GRAFT_CPUS (default 32), validated as
-    * a positive integer. Every JSON emission site writes this Int, never
-    * the raw string, so a padded value like "032" still yields valid
-    * JSON (`"cpus":32`).
-    */
-  private[graft] def cpusFrom(raw: Option[String]): Int = {
-    val s = raw.getOrElse("32").trim
-    s.toIntOption.filter(_ >= 1).getOrElse(throw new IllegalArgumentException(
-      s"SPARK_GRAFT_CPUS must be a positive integer, got '$s'"))
-  }
-
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = cpusFrom(sys.env.get("SPARK_GRAFT_CPUS"))
-    val spark = graft.core.GraftSession.tuned(
-      SparkSession.builder().master(s"local[$cpus]").appName("graft-bench"),
-      shufflePartitions = cpus
-    ).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = GraftSession.cpus
+    val spark = GraftSession.local(cpus, "graft-bench")
     // parallelism evidence (VERDICT r17 #2): the driver's scaling probe
     // kept flagging `suspect_cpus_ignored` because nothing in the
     // emitted JSON proved the resolved core count — at sf0.1 the
@@ -188,7 +173,7 @@ object Bench {
     // ---- disturbance index (VERDICT r13 #5) ----
     // Same-HEAD bench totals swing 122–176 s with ambient machine load;
     // the acceptance discipline (quiet loadavg, confirm deltas with
-    // TimeMany) lived in PLANS.md prose. Make it machine-readable: the
+    // `Cli time`) lived in PLANS.md prose. Make it machine-readable: the
     // index is (a) 1-min loadavg at START (contention the run began
     // under) and (b) the MEDIAN per-query ratio of this run's steady
     // seconds vs the COMMITTED BENCH_DETAIL — the median is insensitive

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
@@ -9,19 +8,14 @@ import java.nio.file.{Files, Paths}
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = graft.core.GraftSession.tuned(
-      SparkSession.builder().master(s"local[$cpus]").appName("graft-verify"),
-      shufflePartitions = cpus.toInt
-    ).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // dev affordance: SPARK_GRAFT_ONLY=q66,q17_except restricts the dump
+    // (and oracle_sql.json) to the named queries, each an exact full or
+    // short qNN name; an unknown name fails before the session starts
+    val only = sys.env.get("SPARK_GRAFT_ONLY").map(v =>
+      SparkEntry.resolve(v.split(",").map(_.trim).filter(_.nonEmpty).toSeq).toSet)
+    def selected(name: String): Boolean = only.forall(_.contains(name))
+    val spark = graft.core.GraftSession.local(appName = "graft-verify")
     new java.io.File(outDir).mkdirs()
-    // dev affordance: SPARK_GRAFT_ONLY=q66,q12 restricts the dump (and
-    // oracle_sql.json) to queries whose name starts with a listed prefix
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
-    def selected(name: String): Boolean =
-      only.forall(_.exists(name.startsWith))
     SparkEntry.queries.filter(q => selected(q._1)).foreach { case (name, fn) =>
       // per-query wall time on stderr: ladder rungs run this main at
       // 10-100× corpora, where one opaque multi-hour pass is

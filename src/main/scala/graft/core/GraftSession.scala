@@ -13,8 +13,8 @@ import org.apache.spark.sql.SparkSession
   */
 object GraftSession {
 
-  /** Apply graft's standard tuning to any builder. Kept separate so
-    * Verify/Bench (which own master/memory settings) share one config set.
+  /** Apply graft's standard tuning to any builder. Kept separate so a
+    * caller that owns its master and memory settings shares the config.
     */
   def tuned(b: SparkSession.Builder, shufflePartitions: Int): SparkSession.Builder =
     b.withExtensions(new graft.functions.GraftExtensions)
@@ -35,9 +35,25 @@ object GraftSession {
       .config("spark.sql.parquet.filterPushdown", "true")
       .config("spark.ui.enabled", "false")
 
-  /** Local session for tests and ad-hoc runs. */
-  def local(cores: Int = Runtime.getRuntime.availableProcessors() - 1,
-            appName: String = "graft"): SparkSession = {
+  /** The core count named by SPARK_GRAFT_CPUS (default 32), validated as
+    * a positive integer. Every JSON emission site writes this Int, never
+    * the raw string, so a padded value like "032" still yields valid
+    * JSON (`"cpus":32`).
+    */
+  private[graft] def cpusFrom(raw: Option[String]): Int = {
+    val s = raw.getOrElse("32").trim
+    s.toIntOption.filter(_ >= 1).getOrElse(throw new IllegalArgumentException(
+      s"SPARK_GRAFT_CPUS must be a positive integer, got '$s'"))
+  }
+
+  /** The core count of every graft main: [[cpusFrom]] of the environment. */
+  def cpus: Int = cpusFrom(sys.env.get("SPARK_GRAFT_CPUS"))
+
+  /** Local session: `local[cores]`, as many shuffle partitions, graft's
+    * tuning, WARN logging. The one session builder of Bench, Verify, the
+    * tools and the tests.
+    */
+  def local(cores: Int = cpus, appName: String = "graft"): SparkSession = {
     val n = math.max(cores, 1)
     val spark = tuned(
       SparkSession.builder().master(s"local[$n]").appName(appName),

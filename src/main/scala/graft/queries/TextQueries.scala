@@ -1,0 +1,2039 @@
+package graft
+package queries
+
+import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.functions._
+
+import graft.SparkEntry._
+import graft.core.Staging
+import graft.sources.Tables
+
+/** The text and dedup family: tokenization, TF-IDF, phrase search,
+  * exact and near-duplicate detection, decontamination and multimodal
+  * feature extraction, through [[graft.ext.TextOps]], [[graft.ext.Dedup]]
+  * and [[graft.ext.Multimodal]].
+  */
+object TextQueries {
+
+  val all: Seq[Query] = Seq(
+    Query("q25_dedup_exact", (s, dir) =>
+      ext.Dedup.exact(t(s, dir, "documents"), "doc_id", "text")
+        .orderBy(col("keep_id")),
+      Oracle("""SELECT md5(text) AS content_hash, min(doc_id) AS keep_id,
+        |       CAST(count(*) AS BIGINT) AS n_copies
+        |FROM documents GROUP BY md5(text) ORDER BY keep_id""".stripMargin)),
+
+    Query("q26_token_stats", (s, dir) =>
+      t(s, dir, "documents")
+        .withColumn("n_tok", ext.TextOps.tokenCount(col("text")))
+        .groupBy(col("lang"))
+        .agg(round(avg(col("n_tok")), 4).as("avg_tokens"),
+          max(col("n_tok")).as("max_tokens"),
+          sum(col("n_tok")).as("sum_tokens"))
+        .orderBy(col("lang")),
+      Oracle("""SELECT lang,
+        |  round(avg(len(regexp_split_to_array(lower(text), '\s+'))), 4)
+        |    AS avg_tokens,
+        |  CAST(max(len(regexp_split_to_array(lower(text), '\s+'))) AS BIGINT)
+        |    AS max_tokens,
+        |  CAST(sum(len(regexp_split_to_array(lower(text), '\s+'))) AS BIGINT)
+        |    AS sum_tokens
+        |FROM documents GROUP BY lang ORDER BY lang""".stripMargin)),
+
+    Query("q27_quality_score", (s, dir) =>
+      ext.TextOps.qualityScore(t(s, dir, "documents"), "text")
+        .select(col("doc_id"), col("n_tokens"), col("stopword_ratio"),
+          col("distinct_ratio"), col("quality"))
+        .orderBy(col("doc_id")),
+      // rounds carry the same +1e-9 half-boundary nudge as TextOps.r4
+      Oracle("""WITH f AS (
+        |  SELECT doc_id,
+        |    CAST(len(toks) AS BIGINT) AS n_tokens,
+        |    round(len(list_filter(toks, t -> t IN
+        |      ('the','a','of','and','to','in','is','it','that','for')))
+        |      / greatest(len(toks), 1) + 1e-9, 4) AS stopword_ratio,
+        |    round(list_unique(toks) / greatest(len(toks), 1) + 1e-9, 4)
+        |      AS distinct_ratio,
+        |    round(length(regexp_replace(text, '[^[:punct:]]', '', 'g'))
+        |      / greatest(length(text), 1) + 1e-9, 4) AS punct_ratio
+        |  FROM (SELECT doc_id, text,
+        |          regexp_split_to_array(lower(text), '\s+') AS toks
+        |        FROM documents))
+        |SELECT doc_id, n_tokens, stopword_ratio, distinct_ratio,
+        |  round(CASE WHEN n_tokens BETWEEN 5 AND 10000 THEN 0.4 ELSE 0.0 END
+        |    + 0.3 * distinct_ratio
+        |    + 0.2 * least(stopword_ratio * 2, 1.0)
+        |    + CASE WHEN punct_ratio < 0.2 THEN 0.1 ELSE 0.0 END + 1e-9, 4)
+        |    AS quality
+        |FROM f ORDER BY doc_id""".stripMargin)),
+
+    // min-k sketch over md5-hex shingle digests (oracle-checkable; the
+    // xxhash64 fingerprintFromShingles variant stays for hot pipelines).
+    // _toks is referenced twice inside shinglesFromTokens, so
+    // CollapseProject cannot inline the tokenizer into the lambda (the
+    // O(L²) re-tokenization trap).
+    Query("q29_fingerprint", (s, dir) =>
+      t(s, dir, "documents")
+        .select(col("doc_id"), ext.TextOps.tokens(col("text")).as("_toks"))
+        .select(col("doc_id"),
+          ext.TextOps.shinglesFromTokens(col("_toks"), 3).as("_sh"))
+        .select(col("doc_id"),
+          concat_ws(",", ext.TextOps.md5FingerprintFromShingles(col("_sh"), 8))
+            .as("fp"))
+        .orderBy(col("doc_id")),
+      // same 3-gram construction as the q32 oracle; md5 over each shingle
+      Oracle("""WITH d AS (
+        |  SELECT doc_id, list_distinct(list_transform(
+        |    generate_series(1, greatest(len(t) - 2, 1)),
+        |    i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2])) AS sh
+        |  FROM (SELECT doc_id, regexp_split_to_array(lower(text), '\s+') AS t
+        |        FROM documents))
+        |SELECT doc_id,
+        |  array_to_string(list_sort(list_transform(sh, s -> md5(s)))[1:8], ',')
+        |    AS fp
+        |FROM d ORDER BY doc_id""".stripMargin)),
+
+    Query("q30_minhash_neardup", (s, dir) =>
+      ext.Dedup.minhashNearDups(withNearDups(s, dir), "doc_id", "text",
+          threshold = 0.5)
+        .orderBy(col("id_a"), col("id_b")),
+      RowsOnly(Seq("LshRecallSpec", "DedupSpec", "LshRecallAtScaleSpec"))),
+
+    // LEGACY 64-bit shape, kept as the q296 oracle twin's mirror —
+    // its 16-bit blocking is Θ(n²/2^16) (pair-budget audit: ×60.6 for
+    // ×9.2 rows), bounded-corpus only; the at-scale path is q298's
+    // simhashNearDups128 (32-bit blocks, measured linear)
+    Query("q31_simhash_neardup", (s, dir) =>
+      ext.Dedup.simhashNearDups(withNearDups(s, dir), "doc_id", "text",
+          maxHamming = 3)
+        .orderBy(col("id_a"), col("id_b")),
+      RowsOnly(Seq("LshRecallSpec", "DedupSpec", "LshRecallAtScaleSpec"))),
+
+    // inverted-index join: only shingle-sharing pairs materialize (the
+    // oracle's |intersect| > 0 filter is structural here)
+    Query("q32_ngram_jaccard", (s, dir) =>
+      ext.Dedup.ngramJaccardPairs(t(s, dir, "documents"), "doc_id", "text",
+          shingleN = 3, partitionCols = Seq("lang", "source"))
+        .withColumn("jaccard", round(col("jaccard"), 4))
+        .select(col("id_a"), col("id_b"), col("jaccard"))
+        .orderBy(col("jaccard").desc, col("id_a"), col("id_b"))
+        .limit(20),
+      // shared-shingle posting join (not all-pairs) — exact: the output
+      // condition len(intersect) > 0 IS candidate membership; keeps the
+      // oracle linear-ish in corpus (q119-family rewrite, round 11)
+      Oracle("""WITH d AS (
+        |  SELECT doc_id, lang, source,
+        |    list_distinct(list_transform(
+        |      generate_series(1, greatest(len(t) - 2, 1)),
+        |      i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2])) AS sh
+        |  FROM (SELECT doc_id, lang, source,
+        |          regexp_split_to_array(lower(text), '\s+') AS t
+        |        FROM documents)),
+        |ex AS (SELECT doc_id, lang, source, unnest(sh) AS g FROM d),
+        |cand AS (SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
+        |  FROM ex a JOIN ex b ON a.g = b.g AND a.lang = b.lang
+        |    AND a.source = b.source AND a.doc_id < b.doc_id)
+        |SELECT id_a, id_b,
+        |  round(len(list_intersect(da.sh, db.sh))
+        |    / len(list_distinct(da.sh || db.sh)), 4) AS jaccard
+        |FROM cand JOIN d da ON da.doc_id = cand.id_a
+        |  JOIN d db ON db.doc_id = cand.id_b
+        |ORDER BY jaccard DESC, id_a, id_b LIMIT 20""".stripMargin)),
+
+    // end-to-end dedup: exact-Jaccard pairs → drop every doc with a
+    // lower-id partner ≥ threshold. The whole pipeline (inverted index,
+    // pair scoring, representative selection) is oracle-checked
+    Query("q61_dedup_corpus", (s, dir) => {
+      val docs = t(s, dir, "documents")
+      val pairs = ext.Dedup.ngramJaccardPairs(docs, "doc_id", "text",
+          shingleN = 3, partitionCols = Seq("lang", "source"))
+        .filter(col("jaccard") >= 0.5)
+      ext.Dedup.dropNearDups(docs, pairs, "doc_id")
+        .select(col("doc_id"), col("lang"), col("source"))
+        .orderBy(col("doc_id"))
+    },
+      // same 3-gram/partition construction as the q32 oracle; NOT IN drops
+      // the higher-id member of every qualifying pair. The oracle is
+      // UNCAPPED: hash-match holds while no shingle's document frequency
+      // exceeds maxPostingDf=1000 (max df ~30 at test SF) — a capped
+      // shingle would bias the Spark side's jaccard down vs this SQL
+      Oracle("""WITH d AS (
+        |  SELECT doc_id, lang, source,
+        |    list_distinct(list_transform(
+        |      generate_series(1, greatest(len(t) - 2, 1)),
+        |      i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2])) AS sh
+        |  FROM (SELECT doc_id, lang, source,
+        |          regexp_split_to_array(lower(text), '\s+') AS t
+        |        FROM documents)),
+        |ex AS (SELECT doc_id, lang, source, unnest(sh) AS g FROM d),
+        |cand AS (SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
+        |  FROM ex a JOIN ex b ON a.g = b.g AND a.lang = b.lang
+        |    AND a.source = b.source AND a.doc_id < b.doc_id),
+        |drop_ids AS (
+        |  SELECT DISTINCT id_b
+        |  FROM cand JOIN d da ON da.doc_id = cand.id_a
+        |    JOIN d db ON db.doc_id = cand.id_b
+        |  WHERE len(list_intersect(da.sh, db.sh))
+        |        / len(list_distinct(da.sh || db.sh)) >= 0.5)
+        |SELECT doc_id, lang, source FROM documents
+        |WHERE doc_id NOT IN (SELECT id_b FROM drop_ids)
+        |ORDER BY doc_id""".stripMargin)),
+
+    // the dedup pipeline a 100 TB user actually runs: MinHash-LSH
+    // candidates (exact hash-Jaccard-verified in-bucket) → min-id
+    // representative. Corpus is withNearDups so LSH has true positives
+    // to find; rows-only (xxhash64), soundness spec-pinned in DedupSpec.
+    // The derived corpus is cached here — this query IS the caller that
+    // owns persistence (PLANS.md measured ~10× re-derivation uncached:
+    // the signature build and the anti-join both walk it)
+    Query("q63_dedup_corpus_lsh", (s, dir) => {
+      val docs = core.Caches.cached(withNearDups(s, dir))
+      val pairs = ext.Dedup.minhashNearDups(docs, "doc_id", "text",
+        threshold = 0.5)
+      ext.Dedup.dropNearDups(docs, pairs, "doc_id")
+        .select(col("doc_id"))
+        .orderBy(col("doc_id"))
+    },
+      RowsOnly(Seq("DedupSpec"))),
+
+    // semantic (embedding-cosine) dedup, cell-bounded — the SemDeDup
+    // shape: nearest-centroid assignment bounds the pair join to
+    // Σ|cell|², never |corpus|². Exact duplicate vectors are injected
+    // (vec_id+100000 copies, reproducible in SQL) so the pipeline has
+    // true positives; they always share a cell, so the full
+    // assign → in-cell pair → min-id-representative chain hash-checks
+    Query("q66_dedup_embedding", (s, dir) => {
+      val emb = t(s, dir, "embeddings")
+      val corpus = emb.select(col("vec_id"), col("embedding"))
+        .unionByName(emb.filter(col("vec_id") % 10 === 0)
+          .select((col("vec_id") + 100000).as("vec_id"), col("embedding")))
+      val centroids = emb.filter(col("vec_id") < 8)
+        .select(col("vec_id").as("centroid_id"), col("embedding").as("centroid"))
+      val pairs = ext.Dedup.embeddingNearDups(corpus, centroids,
+        threshold = 0.9)
+      ext.Dedup.dropNearDups(corpus, pairs, "vec_id")
+        .select(col("vec_id"))
+        .orderBy(col("vec_id"))
+    },
+      // unrolls the SemDeDup chain: duplicate injection → nearest-centroid
+      // assignment (q38's argmax, over the widened corpus) → in-cell pairs
+      // at cosine ≥ 0.9 → drop the id_b side. Injected copies are exact,
+      // so cos(copy, original) ≈ 1 and no value sits near the threshold
+      Oracle("""WITH corpus AS (
+        |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings
+        |  UNION ALL
+        |  SELECT vec_id + 100000, CAST(embedding AS DOUBLE[])
+        |  FROM embeddings WHERE vec_id % 10 = 0),
+        |cent AS (SELECT vec_id AS centroid_id,
+        |                CAST(embedding AS DOUBLE[]) AS c
+        |         FROM embeddings WHERE vec_id < 8),
+        |asg AS (
+        |  SELECT vec_id, emb, centroid_id FROM (
+        |    SELECT v.vec_id, v.emb, c.centroid_id,
+        |      row_number() OVER (PARTITION BY v.vec_id
+        |        ORDER BY list_cosine_similarity(v.emb, c.c) DESC,
+        |                 c.centroid_id) AS rn
+        |    FROM corpus v CROSS JOIN cent c) WHERE rn = 1),
+        |pairs AS (
+        |  SELECT a.vec_id AS id_a, b.vec_id AS id_b
+        |  FROM asg a JOIN asg b
+        |    ON a.centroid_id = b.centroid_id AND a.vec_id < b.vec_id
+        |  WHERE list_cosine_similarity(a.emb, b.emb) >= 0.9)
+        |SELECT vec_id FROM corpus
+        |WHERE vec_id NOT IN (SELECT DISTINCT id_b FROM pairs)
+        |ORDER BY vec_id""".stripMargin)),
+
+    Query("q36_multimodal", (s, dir) =>
+      ext.Multimodal.pipeline(t(s, dir, "documents"), "text", "doc_id")
+        .orderBy(col("doc_id")),
+      // replicates Multimodal's md5-derived header/pixel fakes: every term
+      // is ascii-of-hex-char integer arithmetic, identical in both engines
+      Oracle {
+        def code(i: Int) = s"ascii(substr(d, ${(i - 1) % 32 + 1}, 1))"
+        def px(i: Int) =
+          s"((${code(4 * i + 1)}*131 + ${code(4 * i + 2)}*17 + ${code(4 * i + 3)}) % 2000 - 1000) / 1000.0"
+        val pxs = (0 until 8).map(px)
+        // left-assoc sum from 0.0 mirrors Spark's aggregate() fold order,
+        // so the IEEE result is bit-identical before the 4-dp round
+        val sum = pxs.mkString("(0.0 + ", " + ", ")")
+        s"""WITH m AS (SELECT doc_id, md5(text) AS d,
+           |             octet_length(encode(text)) AS nb FROM documents)
+           |SELECT doc_id, CAST(nb AS BIGINT) AS n_bytes,
+           |  CAST((${code(1)}*131 + ${code(2)}) % 1920 + 1 AS BIGINT) AS width,
+           |  CAST((${code(3)}*131 + ${code(4)}) % 1080 + 1 AS BIGINT) AS height,
+           |  CAST(${code(5)} % 3 + 1 AS BIGINT) AS channels,
+           |  round($sum / 8 + 1e-9, 4) AS feat_mean,
+           |  round(least(${pxs.mkString(", ")}), 4) AS feat_min,
+           |  round(greatest(${pxs.mkString(", ")}), 4) AS feat_max
+           |FROM m ORDER BY doc_id""".stripMargin
+      }),
+
+    // mapPartitions batched inference (stub codec, real plumbing): the
+    // md5-derived stub features make even this imperative stage
+    // oracle-checkable (f0 cast to double — DuckDB round returns double)
+    Query("q44_multimodal_batched", (s, dir) => {
+      val docs = t(s, dir, "documents")
+        .select(col("doc_id"), ext.Multimodal.asBlob(col("text")).as("blob"))
+      ext.Multimodal.batchedFeatures(docs, "doc_id", "blob", batchSize = 128)
+        .select(col("doc_id"),
+          round(element_at(col("features"), 1).cast("double"), 4).as("f0"))
+        .orderBy(col("doc_id"))
+    },
+      // dim-0 of the batched StubModel features (same formula as q36 px(0))
+      Oracle {
+        def code(i: Int) = s"ascii(substr(md5(text), ${(i - 1) % 32 + 1}, 1))"
+        s"""SELECT doc_id,
+           |  round(((${code(1)}*131 + ${code(2)}*17 + ${code(3)}) % 2000 - 1000)
+           |        / 1000.0, 4) AS f0
+           |FROM documents ORDER BY doc_id""".stripMargin
+      }),
+
+    // BPE-ish subword counting (mark-then-split boundary regex — both
+    // Java regex and DuckDB RE2 express it, so the count is oracle-checked)
+    Query("q46_subword_stats", (s, dir) =>
+      t(s, dir, "documents")
+        .select(col("doc_id"),
+          ext.TextOps.tokenCount(col("text")).as("n_ws_tokens"),
+          ext.TextOps.subwordCount(col("text")).as("n_subwords"))
+        .orderBy(col("doc_id")),
+      Oracle("""SELECT doc_id,
+        |  CAST(len(regexp_split_to_array(lower(text), '\s+')) AS BIGINT)
+        |    AS n_ws_tokens,
+        |  CAST(len(list_filter(regexp_split_to_array(
+        |      regexp_replace(regexp_replace(lower(text),
+        |        '(\p{L})(\d)', '\1 \2', 'g'), '(\d)(\p{L})', '\1 \2', 'g'),
+        |      '[\s[:punct:]]+'), t -> t != '')) AS BIGINT) AS n_subwords
+        |FROM documents ORDER BY doc_id""".stripMargin)),
+
+    // Zipf slope of the token frequency curve: ln(freq) ~ ln(rank) OLS
+    // over the top-500 tokens — the corpus-health number (natural text
+    // ~ -1). Token counting is the distributed part (map-side combine);
+    // the ranked fit happens on a 500-row frame, so the row_number
+    // window's single partition is bounded by the limit, not the corpus
+    Query("q181_zipf_slope", (s, dir) => {
+      val top = t(s, dir, "documents")
+        .select(explode(ext.TextOps.tokens(col("text"))).as("token"))
+        .groupBy(col("token")).agg(count(lit(1)).as("cnt"))
+        .orderBy(col("cnt").desc, col("token")).limit(500)
+      top
+        .withColumn("rank",
+          row_number().over(Window.orderBy(col("cnt").desc, col("token"))))
+        .agg(count(lit(1)).as("n_tokens"),
+          round(regr_slope(log(col("cnt")), log(col("rank")))
+            + lit(1e-9), 4).as("zipf_slope"),
+          round(regr_intercept(log(col("cnt")), log(col("rank")))
+            + lit(1e-9), 4).as("zipf_intercept"))
+    },
+      Oracle("""WITH toks AS (SELECT unnest(regexp_split_to_array(lower(text),
+        |    '\s+')) AS token FROM documents),
+        |f AS (SELECT token, count(*) AS cnt FROM toks GROUP BY token
+        |      ORDER BY cnt DESC, token LIMIT 500),
+        |r AS (SELECT cnt, row_number() OVER (ORDER BY cnt DESC, token)
+        |        AS rank FROM f)
+        |SELECT CAST(count(*) AS BIGINT) AS n_tokens,
+        |       round(regr_slope(ln(cnt), ln(rank)) + 1e-9, 4)
+        |         AS zipf_slope,
+        |       round(regr_intercept(ln(cnt), ln(rank)) + 1e-9, 4)
+        |         AS zipf_intercept
+        |FROM r""".stripMargin)),
+
+    // per-source readability profile: Flesch reading ease from
+    // whitespace words, [.!?]+ sentence runs and [aeiouy]+ vowel-group
+    // syllable proxies — the curation screen next to q27's quality
+    // score and q165's lexical diversity. All three counts are
+    // map-side regexp_extract_all sizes (RE2-compatible patterns, so
+    // both engines count identically); ONE source-keyed rollup
+    Query("q188_readability", (s, dir) => {
+      val m = t(s, dir, "documents").select(col("source"),
+        size(ext.TextOps.tokens(col("text"))).cast("double").as("_w"),
+        greatest(size(regexp_extract_all(col("text"),
+          lit("[.!?]+"), lit(0))), lit(1)).cast("double").as("_s"),
+        size(regexp_extract_all(lower(col("text")),
+          lit("[aeiouy]+"), lit(0))).cast("double").as("_y"))
+      m.select(col("source"), col("_w"), col("_y"),
+          (lit(206.835) - lit(1.015) * col("_w") / col("_s")
+            - lit(84.6) * col("_y") / greatest(col("_w"), lit(1.0)))
+            .as("_f"))
+        .groupBy(col("source"))
+        .agg(count(lit(1)).as("n_docs"),
+          round(avg(col("_w")) + lit(1e-9), 2).as("avg_words"),
+          round(avg(col("_y") / greatest(col("_w"), lit(1.0))) + lit(1e-9), 4)
+            .as("avg_syll_per_word"),
+          round(avg(col("_f")) + lit(1e-9), 4).as("avg_flesch"))
+        .orderBy(col("source"))
+    },
+      Oracle("""WITH m AS (SELECT source,
+        |    CAST(len(regexp_split_to_array(lower(text), '\s+'))
+        |      AS DOUBLE) AS w,
+        |    CAST(greatest(len(regexp_extract_all(text, '[.!?]+')), 1)
+        |      AS DOUBLE) AS s,
+        |    CAST(len(regexp_extract_all(lower(text), '[aeiouy]+'))
+        |      AS DOUBLE) AS y
+        |  FROM documents)
+        |SELECT source, CAST(count(*) AS BIGINT) AS n_docs,
+        |  round(avg(w) + 1e-9, 2) AS avg_words,
+        |  round(avg(y / greatest(w, 1.0)) + 1e-9, 4) AS avg_syll_per_word,
+        |  round(avg(206.835 - 1.015 * w / s
+        |            - 84.6 * y / greatest(w, 1.0)) + 1e-9, 4) AS avg_flesch
+        |FROM m GROUP BY source ORDER BY source""".stripMargin)),
+
+    // top-20 adjacent-bigram collocations by PMI (min pair count 10):
+    // multiword-expression discovery over the documents corpus
+    Query("q194_pmi_collocations", (s, dir) =>
+      ext.TextOps.pmiCollocations(t(s, dir, "documents"), "text",
+        minCount = 10L, k = 20),
+      Oracle("""WITH d AS (SELECT regexp_split_to_array(lower(text), '\s+') AS t
+        |  FROM documents),
+        |bg AS (SELECT unnest(list_transform(
+        |    generate_series(1, len(t) - 1),
+        |    i -> {'w1': t[i], 'w2': t[i + 1]})) AS b
+        |  FROM d WHERE len(t) >= 2),
+        |bc AS (SELECT b.w1 AS w1, b.w2 AS w2, count(*) AS cab
+        |       FROM bg GROUP BY 1, 2),
+        |uc AS (SELECT w, count(*) AS cu FROM (
+        |    SELECT unnest(t) AS w FROM d) GROUP BY w),
+        |t1 AS (SELECT sum(cu) AS t1 FROM uc),
+        |t2 AS (SELECT sum(cab) AS t2 FROM bc)
+        |SELECT w1, w2, CAST(cab AS BIGINT) AS pair_cnt,
+        |  round(ln((cab / t2) / ((a.cu / t1) * (b.cu / t1))) + 1e-9, 4)
+        |    AS pmi
+        |FROM bc JOIN uc a ON a.w = w1 JOIN uc b ON b.w = w2
+        |  CROSS JOIN t1 CROSS JOIN t2
+        |WHERE cab >= 10
+        |ORDER BY pmi DESC, w1, w2 LIMIT 20""".stripMargin)),
+
+    // exact phrase search without an index: per-doc occurrence count of
+    // the adjacent pair via a map-side higher-order filter over the
+    // token array — the grep-style full-scan path (at 100 TB a
+    // positional-postings index buys the sparse-phrase case; the scan
+    // IS the build cost of that index, so the one-shot query is pure
+    // map-side with a k-bounded TakeOrdered on top).
+    // Existence pre-filter: tokens are split(lower(text), "\s+"), so the
+    // adjacent pair (table, part) exists IFF lower(text) matches
+    // (^|\s)table\s+part(\s|$) — a grep-before-parse gate that is exactly
+    // the final n_hits > 0 predicate, letting the non-matching majority
+    // skip tokenize + array-walk entirely; survivors still pay the exact
+    // positional count, so output is bit-identical
+    Query("q196_phrase_search", (s, dir) => {
+      val tks = ext.TextOps.tokens(col("text"))
+      t(s, dir, "documents")
+        .filter(lower(col("text")).rlike("(^|\\s)table\\s+part(\\s|$)"))
+        .select(col("doc_id"), tks.as("_t"), size(tks).as("_n"))
+        .filter(col("_n") >= 2)
+        .select(col("doc_id"),
+          size(filter(transform(sequence(lit(1), col("_n") - 1),
+            i => element_at(col("_t"), i) === lit("table")
+              && element_at(col("_t"), i + 1) === lit("part")),
+            x => x)).cast("long").as("n_hits"))
+        .filter(col("n_hits") > 0)
+        .orderBy(col("n_hits").desc, col("doc_id")).limit(20)
+    },
+      Oracle("""WITH d AS (SELECT doc_id,
+        |    regexp_split_to_array(lower(text), '\s+') AS t
+        |  FROM documents),
+        |h AS (SELECT doc_id,
+        |    CAST(len(list_filter(generate_series(1, len(t) - 1),
+        |      i -> t[i] = 'table' AND t[i + 1] = 'part')) AS BIGINT)
+        |      AS n_hits
+        |  FROM d WHERE len(t) >= 2)
+        |SELECT doc_id, n_hits FROM h WHERE n_hits > 0
+        |ORDER BY n_hits DESC, doc_id LIMIT 20""".stripMargin)),
+
+    // tokenizer-coverage audit: OOV rate per source against the
+    // deterministic top-10 corpus vocabulary (count desc, token asc —
+    // the q71/q181 cut), plus the share of docs over 10% OOV. Vocab
+    // is a broadcast |k|-row frame; scoring is one explode +
+    // broadcast-hash anti-probe + doc-keyed rollup — two corpus scans
+    // total (vocab build, score), the bigramLogProb trade
+    Query("q197_oov_rate", (s, dir) => {
+      val docs = t(s, dir, "documents")
+      val vocab = docs
+        .select(explode(ext.TextOps.tokens(col("text"))).as("_w"))
+        .groupBy(col("_w")).agg(count(lit(1)).as("_c"))
+        .orderBy(col("_c").desc, col("_w")).limit(10)
+        .select(col("_w"), lit(true).as("_in"))
+      val perDoc = docs
+        .select(col("doc_id"), col("source"),
+          explode(ext.TextOps.tokens(col("text"))).as("_w"))
+        .join(broadcast(vocab), Seq("_w"), "left")
+        .groupBy(col("doc_id"), col("source"))
+        .agg(count(lit(1)).as("_n"),
+          sum(when(col("_in").isNull, 1L).otherwise(0L)).as("_oov"))
+      perDoc.groupBy(col("source"))
+        .agg(count(lit(1)).as("n_docs"),
+          round(avg(col("_oov") / col("_n")) + lit(1e-9), 4)
+            .as("avg_oov_rate"),
+          round(avg(when(col("_oov") / col("_n") > 0.1, 1.0)
+            .otherwise(0.0)) + lit(1e-9), 4).as("share_high_oov"))
+        .orderBy(col("source"))
+    },
+      Oracle("""WITH tok AS (SELECT doc_id, source,
+        |    unnest(regexp_split_to_array(lower(text), '\s+')) AS w
+        |  FROM documents),
+        |v AS (SELECT w FROM (SELECT w, count(*) AS c FROM tok
+        |    GROUP BY 1 ORDER BY c DESC, w LIMIT 10)),
+        |d AS (SELECT t.doc_id, t.source, count(*) AS n,
+        |    sum(CASE WHEN v.w IS NULL THEN 1 ELSE 0 END) AS oov
+        |  FROM tok t LEFT JOIN v ON t.w = v.w GROUP BY 1, 2)
+        |SELECT source, CAST(count(*) AS BIGINT) AS n_docs,
+        |  round(avg(oov * 1.0 / n) + 1e-9, 4) AS avg_oov_rate,
+        |  round(avg(CASE WHEN oov * 1.0 / n > 0.1 THEN 1.0 ELSE 0.0 END)
+        |    + 1e-9, 4) AS share_high_oov
+        |FROM d GROUP BY source ORDER BY source""".stripMargin)),
+
+    // context-window packing plan: for each candidate window size, the
+    // share of docs that fit whole and the padding waste ratio
+    // Σ(ceil(n/w)·w − n)/Σn — the capacity-planning stat ahead of
+    // q69's actual packing. Token counts are map-side; the ×4 window
+    // fan-out happens on the counts, and the rollup is 4 rows
+    Query("q198_packing_plan", (s, dir) =>
+      t(s, dir, "documents")
+        .select(ext.TextOps.tokenCount(col("text")).as("_n"))
+        .select(col("_n"),
+          explode(array(Seq(128, 256, 512, 1024).map(lit): _*)).as("w"))
+        .groupBy(col("w"))
+        .agg(count(lit(1)).as("n_docs"),
+          round(avg(when(col("_n") <= col("w"), 1.0).otherwise(0.0))
+            + lit(1e-9), 4).as("share_fit"),
+          round((sum(floor((col("_n") + col("w") - lit(1)) / col("w"))
+              * col("w")) - sum(col("_n"))) / sum(col("_n"))
+            + lit(1e-9), 4).as("waste_ratio"))
+        .orderBy(col("w")),
+      Oracle("""WITH n AS (SELECT CAST(len(regexp_split_to_array(lower(text),
+        |    '\s+')) AS BIGINT) AS n FROM documents),
+        |e AS (SELECT n, unnest([128, 256, 512, 1024]) AS w FROM n)
+        |SELECT w, CAST(count(*) AS BIGINT) AS n_docs,
+        |  round(avg(CASE WHEN n <= w THEN 1.0 ELSE 0.0 END) + 1e-9, 4)
+        |    AS share_fit,
+        |  round((sum(floor((n + w - 1) / w) * w) - sum(n)) * 1.0 / sum(n)
+        |    + 1e-9, 4) AS waste_ratio
+        |FROM e GROUP BY w ORDER BY w""".stripMargin)),
+
+    // near-dup cluster size histogram off the staged chain pair list:
+    // how much of the corpus sits in how-big duplicate families — the
+    // dedup-planning panel next to q177's per-source density
+    Query("q220_cluster_sizes", (s, dir) =>
+      ext.Dedup.duplicateClusters(chainPairList(s, dir))
+        .groupBy(col("cluster_id")).agg(count(lit(1)).as("cluster_size"))
+        .groupBy(col("cluster_size")).agg(count(lit(1)).as("n_clusters"))
+        .orderBy(col("cluster_size")),
+      // same transitive closure, collapsed to a size histogram
+      Oracle((chainClustersSql + """,
+        |cl AS (SELECT id, min(lbl) AS cluster_id FROM reach
+        |  GROUP BY id),
+        |sz AS (SELECT cluster_id, count(*) AS cluster_size FROM cl
+        |  GROUP BY 1)
+        |SELECT CAST(cluster_size AS BIGINT) AS cluster_size,
+        |  CAST(count(*) AS BIGINT) AS n_clusters
+        |FROM sz GROUP BY 1 ORDER BY 1""").stripMargin)),
+
+    // duplication × quality interaction: mean q27 quality for docs
+    // inside vs outside a near-dup cluster (staged chain pair list) —
+    // the "are our duplicates junk?" panel that decides keep-best vs
+    // drop-all retention policy
+    Query("q225_dup_quality", (s, dir) => {
+      val pairs = chainPairList(s, dir)
+      val clustered = pairs.select(col("id_a").as("doc_id"))
+        .unionByName(pairs.select(col("id_b").as("doc_id")))
+        .filter(col("doc_id") < 100000).distinct()
+      ext.TextOps.qualityScore(t(s, dir, "documents"), "text")
+        .select(col("doc_id"), col("quality"))
+        .join(clustered.withColumn("_dup", lit(1L)), Seq("doc_id"),
+          "left")
+        .select(coalesce(col("_dup"), lit(0L)).as("is_clustered"),
+          col("quality"))
+        .groupBy(col("is_clustered"))
+        .agg(count(lit(1)).as("n_docs"),
+          round(avg(col("quality")) + lit(1e-9), 4).as("avg_quality"))
+        .orderBy(col("is_clustered"))
+    },
+      // chain pair list membership (base docs only) × the q27 quality
+      // formula; `reach` goes unused and DuckDB skips it
+      Oracle((chainClustersSql + """,
+        |f AS (SELECT doc_id,
+        |    CAST(len(toks) AS BIGINT) AS n_tokens,
+        |    round(len(list_filter(toks, t -> t IN
+        |      ('the','a','of','and','to','in','is','it','that','for')))
+        |      / greatest(len(toks), 1) + 1e-9, 4) AS stopword_ratio,
+        |    round(list_unique(toks) / greatest(len(toks), 1) + 1e-9, 4)
+        |      AS distinct_ratio,
+        |    round(length(regexp_replace(text, '[^[:punct:]]', '', 'g'))
+        |      / greatest(length(text), 1) + 1e-9, 4) AS punct_ratio
+        |  FROM (SELECT doc_id, text,
+        |          regexp_split_to_array(lower(text), '\s+') AS toks
+        |        FROM documents) tq),
+        |q AS (SELECT doc_id, round(
+        |    CASE WHEN n_tokens BETWEEN 5 AND 10000 THEN 0.4 ELSE 0.0 END
+        |    + 0.3 * distinct_ratio
+        |    + 0.2 * least(stopword_ratio * 2, 1.0)
+        |    + CASE WHEN punct_ratio < 0.2 THEN 0.1 ELSE 0.0 END
+        |    + 1e-9, 4) AS quality
+        |  FROM f),
+        |cb AS (SELECT DISTINCT id_a AS doc_id FROM pairs
+        |    WHERE id_a < 100000
+        |  UNION SELECT id_b FROM pairs WHERE id_b < 100000)
+        |SELECT CAST(CASE WHEN cb.doc_id IS NULL THEN 0 ELSE 1 END
+        |    AS BIGINT) AS is_clustered,
+        |  CAST(count(*) AS BIGINT) AS n_docs,
+        |  round(avg(quality) + 1e-9, 4) AS avg_quality
+        |FROM q LEFT JOIN cb ON q.doc_id = cb.doc_id
+        |GROUP BY 1 ORDER BY 1""").stripMargin)),
+
+    // per-source token Shannon entropy: H = ln N − Σ c·ln c / N off
+    // the (source, token) count frame — the diversity thermometer
+    // next to q82's divergence and q165's type/token profile
+    Query("q229_token_entropy", (s, dir) => {
+      val tc = t(s, dir, "documents")
+        .select(col("source"),
+          explode(ext.TextOps.tokens(col("text"))).as("_tk"))
+        .groupBy(col("source"), col("_tk"))
+        .agg(count(lit(1)).as("_c"))
+      tc.groupBy(col("source"))
+        .agg(sum(col("_c")).as("n_tokens"),
+          count(lit(1)).as("vocab"),
+          round(log(sum(col("_c")))
+            - sum(col("_c") * log(col("_c"))) / sum(col("_c"))
+            + lit(1e-9), 4).as("entropy"))
+        .orderBy(col("source"))
+    },
+      // same (source, token) count frame, H = ln N − Σ c·ln c / N
+      Oracle("""WITH tc AS (SELECT source, tk, count(*) AS c FROM (
+        |    SELECT source, unnest(regexp_split_to_array(lower(text),
+        |      '\s+')) AS tk FROM documents) u
+        |  GROUP BY 1, 2)
+        |SELECT source, CAST(sum(c) AS BIGINT) AS n_tokens,
+        |  CAST(count(*) AS BIGINT) AS vocab,
+        |  round(ln(sum(c)) - sum(c * ln(c)) / sum(c) + 1e-9, 4)
+        |    AS entropy
+        |FROM tc GROUP BY source ORDER BY source""".stripMargin)),
+
+    // TextRank keyword ranking: weighted PageRank over the token
+    // co-occurrence graph — q194's adjacent-bigram frame promoted to
+    // graph centrality (symmetric canonical-pair weights, both
+    // directions emitted, self-loops dropped), ext.Graph's weighted
+    // power iteration. Vocab-bounded: the rank frame is |vocab| rows
+    // regardless of corpus size
+    Query("q251_textrank", (s, dir) => {
+      // NO fan-out (r18): the r17 placement was inert (estimate-based
+      // floor) and its claimed win a first-in-list artifact (VERDICT
+      // r17 #2); engaged by the leaf-bytes gate it regressed (A/B
+      // 1.586 s off vs 1.699 s on) — the bigram explode feeds a
+      // token-keyed aggregate whose shuffle redistributes anyway
+      val toks = t(s, dir, "documents").select(col("text"))
+        .select(ext.TextOps.tokens(col("text")).as("_t"),
+          size(ext.TextOps.tokens(col("text"))).as("_n"))
+        .filter(col("_n") >= 2)
+      val bc = toks.select(explode(transform(
+          sequence(lit(1), col("_n") - 1),
+          i => struct(element_at(col("_t"), i).as("_w1"),
+            element_at(col("_t"), i + 1).as("_w2")))).as("_bg"))
+        .groupBy(col("_bg._w1").as("_w1"), col("_bg._w2").as("_w2"))
+        .agg(count(lit(1)).as("_c"))
+        .filter(col("_w1") =!= col("_w2"))
+      val sym = bc.groupBy(least(col("_w1"), col("_w2")).as("_a"),
+          greatest(col("_w1"), col("_w2")).as("_b"))
+        .agg(sum(col("_c")).as("_w"))
+      val edges = sym.select(col("_a").as("src"), col("_b").as("dst"),
+          col("_w"))
+        .unionByName(sym.select(col("_b").as("src"),
+          col("_a").as("dst"), col("_w")))
+      ext.Graph.pageRankWeighted(edges, iters = 2, weightCol = "_w")
+        .select(col("id").as("token"),
+          round(col("pr_scaled") + lit(1e-9), 4).as("pr_scaled"))
+        .orderBy(col("pr_scaled").desc, col("token")).limit(20)
+    },
+      // same symmetric bigram graph + two unrolled weighted PR rounds
+      Oracle("""WITH d AS (SELECT regexp_split_to_array(lower(text), '\s+')
+        |    AS t FROM documents),
+        |bg AS (SELECT unnest(list_transform(
+        |    generate_series(1, len(t) - 1),
+        |    i -> {'w1': t[i], 'w2': t[i + 1]})) AS b
+        |  FROM d WHERE len(t) >= 2),
+        |bc AS (SELECT b.w1 AS w1, b.w2 AS w2, count(*) AS c
+        |  FROM bg GROUP BY 1, 2),
+        |sym AS (SELECT least(w1, w2) AS a, greatest(w1, w2) AS b,
+        |    sum(c) AS w
+        |  FROM bc WHERE w1 <> w2 GROUP BY 1, 2),
+        |edges AS (SELECT a AS src, b AS dst, w FROM sym
+        |  UNION ALL SELECT b, a, w FROM sym),
+        |ow AS (SELECT src, sum(w) AS wt FROM edges GROUP BY src),
+        |nodes AS (SELECT DISTINCT src AS id FROM edges
+        |  UNION SELECT DISTINCT dst FROM edges),
+        |n AS (SELECT count(*) AS n FROM nodes),
+        |r0 AS (SELECT id, 1.0 / n.n AS pr FROM nodes, n),
+        |s1 AS (SELECT e.dst AS id, sum(0.85 * r.pr * e.w / o.wt) AS s
+        |  FROM edges e JOIN ow o ON o.src = e.src
+        |    JOIN r0 r ON r.id = e.src GROUP BY e.dst),
+        |r1 AS (SELECT nd.id, (1 - 0.85) / n.n + COALESCE(s1.s, 0)
+        |    AS pr FROM nodes nd CROSS JOIN n
+        |  LEFT JOIN s1 ON s1.id = nd.id),
+        |s2 AS (SELECT e.dst AS id, sum(0.85 * r.pr * e.w / o.wt) AS s
+        |  FROM edges e JOIN ow o ON o.src = e.src
+        |    JOIN r1 r ON r.id = e.src GROUP BY e.dst),
+        |r2 AS (SELECT nd.id, (1 - 0.85) / n.n + COALESCE(s2.s, 0)
+        |    AS pr FROM nodes nd CROSS JOIN n
+        |  LEFT JOIN s2 ON s2.id = nd.id)
+        |SELECT id AS token, round(pr * n.n + 1e-9, 4) AS pr_scaled
+        |FROM r2, n ORDER BY pr_scaled DESC, token LIMIT 20""".stripMargin)),
+
+    // sparse TF-IDF cosine doc pairs: idf-weighted DISTINCT 3-gram
+    // shingle vectors, pairwise dot via the posting self-join with
+    // q32's hot-posting cap (df ≤ 64 — norms use the SAME capped set so
+    // the algebra stays a true cosine of the capped vectors), top-20.
+    // The similarity-STRENGTH ranking next to q32's binary Jaccard:
+    // rare shared shingles count for more. idf rounded 6dp before any
+    // product so engine float order can't move the rounded cosine
+    Query("q266_shingle_cosine_pairs", (s, dir) => {
+      // the idf-weighted DISTINCT-shingle posting frame is a corpus-
+      // snapshot artifact (a TF-IDF index is built once per corpus) —
+      // STAGED corpus-keyed like the q295/q296 signature frames; a
+      // cold JVM previously re-paid the shingle explode + df count +
+      // idf math (5.4 s/JVM at sf0.1), now a parquet scan. Inside the
+      // build, df is a count window over postings repartitioned on
+      // the shingle (shinglePairCounts' one-exchange trick: the same
+      // count, no second explode pass and no cache). The
+      // staged scan still backs the norm aggregate AND both self-join
+      // sides — cached so the file is read once
+      val wgt = graft.core.Caches.cached(
+        Staging.frame(s, dir, "documents", "q266wgt") {
+          val nD = t(s, dir, "documents")
+            .agg(count(lit(1)).cast("double").as("_nd"))
+          t(s, dir, "documents")
+            .select(col("doc_id"),
+              explode(ext.TextOps.shingles(col("text"), 3)).as("_sh"))
+            .repartition(col("_sh"))
+            .withColumn("_df", count(lit(1)).over(
+              Window.partitionBy(col("_sh"))))
+            .filter(col("_df") <= 64)
+            .crossJoin(broadcast(nD))
+            .select(col("doc_id"), col("_sh"),
+              round(log((col("_nd") + 1.0) / (col("_df") + 1.0)) + 1.0,
+                6).as("_w"))
+        })
+      val norm = wgt.groupBy(col("doc_id"))
+        .agg(round(sqrt(sum(col("_w") * col("_w"))), 6).as("_nm"))
+      graft.core.Caches.materializedThenRelease(
+        wgt.select(col("_sh"), col("doc_id").as("doc_a"),
+            col("_w").as("_wa"))
+          .join(wgt.select(col("_sh"), col("doc_id").as("doc_b"),
+            col("_w").as("_wb")), Seq("_sh"))
+          .filter(col("doc_a") < col("doc_b"))
+          .groupBy(col("doc_a"), col("doc_b"))
+          .agg(sum(col("_wa") * col("_wb")).as("_dot"))
+          .join(norm.select(col("doc_id").as("doc_a"),
+            col("_nm").as("_na")), Seq("doc_a"))
+          .join(norm.select(col("doc_id").as("doc_b"),
+            col("_nm").as("_nb")), Seq("doc_b"))
+          .select(col("doc_a"), col("doc_b"),
+            round(col("_dot") / (col("_na") * col("_nb"))
+              + lit(1e-9), 4).as("cosine"))
+          .orderBy(col("cosine").desc, col("doc_a"), col("doc_b"))
+          .limit(20),
+        wgt)
+    },
+      // same capped idf postings, posting self-join, rounded cosine
+      Oracle("""WITH d AS (SELECT doc_id,
+        |    list_distinct(list_transform(
+        |      generate_series(1, len(t) - 2),
+        |      i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2])) AS sh
+        |  FROM (SELECT doc_id,
+        |          regexp_split_to_array(lower(text), '\s+') AS t
+        |        FROM documents) q WHERE len(t) >= 3),
+        |post AS (SELECT doc_id, unnest(sh) AS sh FROM d),
+        |nd AS (SELECT CAST(count(*) AS DOUBLE) AS n FROM documents),
+        |dfreq AS (SELECT sh, count(*) AS df FROM post GROUP BY 1
+        |  HAVING count(*) <= 64),
+        |w AS (SELECT p.doc_id, p.sh,
+        |    round(ln((nd.n + 1.0) / (f.df + 1.0)) + 1.0, 6) AS w
+        |  FROM post p JOIN dfreq f USING (sh) CROSS JOIN nd),
+        |nrm AS (SELECT doc_id, round(sqrt(sum(w * w)), 6) AS nm
+        |  FROM w GROUP BY 1),
+        |pr AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
+        |    sum(a.w * b.w) AS dot
+        |  FROM w a JOIN w b ON a.sh = b.sh AND a.doc_id < b.doc_id
+        |  GROUP BY 1, 2)
+        |SELECT doc_a, doc_b,
+        |  round(dot / (na.nm * nb.nm) + 1e-9, 4) AS cosine
+        |FROM pr JOIN nrm na ON na.doc_id = doc_a
+        |JOIN nrm nb ON nb.doc_id = doc_b
+        |ORDER BY cosine DESC, doc_a, doc_b LIMIT 20""".stripMargin)),
+
+    // dedup aggressiveness curve: how many near-dup pairs and how many
+    // distinct member docs each Jaccard threshold captures, over q32's
+    // exact pair frame — the sensitivity panel that PICKS the dedup
+    // stack's 0.6 instead of assuming it. One pair build (cached),
+    // a 5-row broadcast grid, |pairs|-bounded counts
+    Query("q278_dedup_threshold_curve", (s, dir) => {
+      val pairs = graft.core.Caches.cached(
+        ext.Dedup.ngramJaccardPairs(t(s, dir, "documents"), "doc_id",
+            "text", shingleN = 3, partitionCols = Seq("lang", "source"))
+          .select(col("id_a"), col("id_b"),
+            round(col("jaccard"), 4).as("_j")))
+      val grid = s.range(1).select(explode(array(
+        Seq(0.5, 0.6, 0.7, 0.8, 0.9).map(lit(_)): _*)).as("threshold"))
+      val out = pairs.crossJoin(broadcast(grid))
+        .filter(col("_j") >= col("threshold"))
+        .groupBy(col("threshold"))
+        .agg(count(lit(1)).as("n_pairs"),
+          countDistinct(col("id_b")).as("n_droppable_upper"))
+        .orderBy(col("threshold"))
+      graft.core.Caches.materializedThenRelease(out, pairs)
+    },
+      // q32's pair frame swept over the threshold grid — and q32's
+      // posting-join candidate generation (a pair shares >= 1 shingle
+      // IFF the posting join emits it; the blocked all-pairs form is
+      // quadratic in block size on the ladder's documents axis)
+      Oracle("""WITH d AS (
+        |  SELECT doc_id, lang, source,
+        |    list_distinct(list_transform(
+        |      generate_series(1, greatest(len(t) - 2, 1)),
+        |      i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2])) AS sh
+        |  FROM (SELECT doc_id, lang, source,
+        |          regexp_split_to_array(lower(text), '\s+') AS t
+        |        FROM documents)),
+        |ex AS (SELECT doc_id, lang, source, unnest(sh) AS g FROM d),
+        |cand AS (SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
+        |  FROM ex a JOIN ex b ON a.g = b.g AND a.lang = b.lang
+        |    AND a.source = b.source AND a.doc_id < b.doc_id),
+        |p AS (SELECT id_a, id_b,
+        |    round(len(list_intersect(da.sh, db.sh))
+        |      / len(list_distinct(da.sh || db.sh)), 4) AS j
+        |  FROM cand JOIN d da ON da.doc_id = cand.id_a
+        |    JOIN d db ON db.doc_id = cand.id_b),
+        |grid AS (SELECT CAST(unnest([0.5, 0.6, 0.7, 0.8, 0.9])
+        |    AS DOUBLE) AS threshold)
+        |SELECT threshold, CAST(count(*) AS BIGINT) AS n_pairs,
+        |  CAST(count(DISTINCT id_b) AS BIGINT) AS n_droppable_upper
+        |FROM p CROSS JOIN grid WHERE j >= threshold
+        |GROUP BY 1 ORDER BY 1""".stripMargin)),
+
+    // audio feature extraction through the REAL WAV codec, round-trip:
+    // per doc a deterministic PCM16 clip is synthesized from the text
+    // bytes (sample_i = (ascii_i − 96)·256), pushed through
+    // wavEncode → Wav.decode → wavFeatures (container parsing, chunk
+    // walk, 16-bit LE samples — the part a SQL oracle cannot do), and
+    // the ORACLE recomputes the same features from the source samples
+    // directly — the round-trip identity is exactly what's certified.
+    // mapPartitions is the sanctioned multimodal plumbing (q44's tier)
+    Query("q279_audio_features", (s, dir) => {
+      import s.implicits._
+      // fanOutForMapWork (r17, guide §2.5): WAV encode/decode per doc
+      // runs in the scan stage — single-task on a one-row-group input
+      val feats = Tables.fanOutForMapWork(t(s, dir, "documents")
+          .filter(length(col("text")) > 0)
+          .select(col("doc_id").cast("long"), col("source"), col("text")))
+        .as[(Long, String, String)]
+        .mapPartitions(_.map { case (id, src, text) =>
+          // 7-bit mask BOTH here and in the oracle SQL (ascii % 128):
+          // without it a non-ASCII codepoint wraps mod 65536 in toShort
+          // while the oracle computes on the unbounded codepoint —
+          // parity would then rest on the corpus staying ASCII-only.
+          // Masked, (c&0x7f − 96)·256 ∈ [−24576, 7936] is Short-exact.
+          val samples = text.take(200)
+            .map(c => (((c.toInt & 0x7f) - 96) * 256).toShort).toArray
+          val blob = ext.Multimodal.wavEncode(8000, samples)
+          val (dur, rms, zcr) =
+            ext.Multimodal.wavFeatures(ext.Multimodal.Wav.decode(blob))
+          (id, src, dur, rms, zcr)
+        })
+        .toDF("doc_id", "source", "_dur", "_rms", "_zcr")
+      feats.groupBy(col("source"))
+        .agg(count(lit(1)).as("n_clips"),
+          round(sum(col("_dur")) + lit(1e-9), 4).as("total_sec"),
+          round(avg(col("_rms")) + lit(1e-9), 4).as("mean_rms"),
+          round(avg(col("_zcr")) + lit(1e-9), 4).as("mean_zcr"))
+        .orderBy(col("source"))
+    },
+      // the round-trip identity: features recomputed from the SOURCE
+      // samples (ascii-derived ints — integer-exact sums, so only the
+      // per-source averages need the rounding guard). % 128 mirrors the
+      // Spark side's 7-bit mask; empty texts are skipped on both sides
+      Oracle("""WITH ch AS (SELECT doc_id, source, i,
+        |    (ascii(substr(text, i, 1)) % 128 - 96) * 256 AS s
+        |  FROM (SELECT doc_id, source, text,
+        |      unnest(generate_series(1, least(len(text), 200))) AS i
+        |    FROM documents WHERE len(text) > 0) u),
+        |lg AS (SELECT *, lag(s) OVER (PARTITION BY doc_id ORDER BY i)
+        |    AS prev FROM ch),
+        |f AS (SELECT doc_id, source, count(*) AS n,
+        |    sqrt(sum(CAST(s AS DOUBLE) * s) / count(*)) / 32768.0
+        |      AS rms,
+        |    sum(CASE WHEN prev IS NOT NULL
+        |      AND ((prev < 0) <> (s < 0)) THEN 1 ELSE 0 END) AS cr
+        |  FROM lg GROUP BY 1, 2),
+        |g AS (SELECT source, n / 8000.0 AS dur, rms,
+        |    CASE WHEN n > 1 THEN cr / (n - 1.0) ELSE 0.0 END AS zcr
+        |  FROM f)
+        |SELECT source, CAST(count(*) AS BIGINT) AS n_clips,
+        |  round(sum(dur) + 1e-9, 4) AS total_sec,
+        |  round(avg(rms) + 1e-9, 4) AS mean_rms,
+        |  round(avg(zcr) + 1e-9, 4) AS mean_zcr
+        |FROM g GROUP BY 1 ORDER BY 1""".stripMargin)),
+
+    // image statistics through the REAL P5 PGM codec round-trip
+    // (q279's audio twin): a 1×n grayscale raster synthesized from the
+    // text bytes, pushed through header-parse decode + nearest-neighbor
+    // resize to a 4-pixel thumbnail (pure integer index math — the
+    // oracle mirrors floor(x·n/4) exactly), per-source mean-gray and
+    // thumbnail-pixel rollups out
+    Query("q280_image_stats", (s, dir) => {
+      import s.implicits._
+      // fanOutForMapWork (r17): q279's rationale — PGM decode + resize
+      // per doc otherwise runs single-task in the scan stage
+      val feats = Tables.fanOutForMapWork(t(s, dir, "documents")
+          .filter(length(col("text")) > 0)
+          .select(col("doc_id").cast("long"), col("source"), col("text")))
+        .as[(Long, String, String)]
+        .mapPartitions(_.map { case (id, src, text) =>
+          val gray = text.take(200).map(c => (c.toInt & 0x7f).toByte)
+            .toArray
+          val header = s"P5\n${gray.length} 1\n255\n"
+            .getBytes("US-ASCII")
+          val img = ext.Multimodal.Pgm.decode(header ++ gray)
+          val thumb = ext.Multimodal.resize(img, 4, 1)
+          val mean = img.pixels.map(_.toDouble).sum / img.pixels.length
+          (id, src, mean, thumb.pixels(0), thumb.pixels(1),
+            thumb.pixels(2), thumb.pixels(3))
+        })
+        .toDF("doc_id", "source", "_mean", "_t0", "_t1", "_t2", "_t3")
+      feats.groupBy(col("source"))
+        .agg(count(lit(1)).as("n_images"),
+          round(avg(col("_mean")) + lit(1e-9), 4).as("mean_gray"),
+          round(avg(col("_t0")) + lit(1e-9), 4).as("thumb0"),
+          round(avg(col("_t1")) + lit(1e-9), 4).as("thumb1"),
+          round(avg(col("_t2")) + lit(1e-9), 4).as("thumb2"),
+          round(avg(col("_t3")) + lit(1e-9), 4).as("thumb3"))
+        .orderBy(col("source"))
+    },
+      // the round-trip identity for the raster: mean over 7-bit-masked
+      // ascii codes (% 128 mirrors the Spark side's & 0x7f so both
+      // sides agree on ANY input, not just an ASCII-only corpus),
+      // thumbnail = the floor(x·n/4)-indexed source pixels verbatim
+      Oracle("""WITH d AS (SELECT doc_id, source, text,
+        |    least(len(text), 200) AS n FROM documents
+        |  WHERE len(text) > 0),
+        |m AS (SELECT doc_id,
+        |    avg(CAST(ascii(substr(text, i, 1)) % 128 AS DOUBLE))
+        |      AS mean
+        |  FROM (SELECT doc_id, text,
+        |      unnest(generate_series(1, least(len(text), 200))) AS i
+        |    FROM documents) u GROUP BY 1),
+        |th AS (SELECT d.doc_id, d.source, m.mean,
+        |    ascii(substr(text, CAST(floor(0 * n / 4.0) AS INTEGER)
+        |      + 1, 1)) % 128 AS t0,
+        |    ascii(substr(text, CAST(floor(1 * n / 4.0) AS INTEGER)
+        |      + 1, 1)) % 128 AS t1,
+        |    ascii(substr(text, CAST(floor(2 * n / 4.0) AS INTEGER)
+        |      + 1, 1)) % 128 AS t2,
+        |    ascii(substr(text, CAST(floor(3 * n / 4.0) AS INTEGER)
+        |      + 1, 1)) % 128 AS t3
+        |  FROM d JOIN m USING (doc_id))
+        |SELECT source, CAST(count(*) AS BIGINT) AS n_images,
+        |  round(avg(mean) + 1e-9, 4) AS mean_gray,
+        |  round(avg(t0) + 1e-9, 4) AS thumb0,
+        |  round(avg(t1) + 1e-9, 4) AS thumb1,
+        |  round(avg(t2) + 1e-9, 4) AS thumb2,
+        |  round(avg(t3) + 1e-9, 4) AS thumb3
+        |FROM th GROUP BY 1 ORDER BY 1""".stripMargin)),
+
+    // effective corpus composition under dedup-aware weights: each doc
+    // weighted 1/|its near-dup cluster ∩ base docs| (singletons weigh
+    // 1), per-source raw vs effective share — what the training
+    // mixture ACTUALLY contains once duplicates stop multiple-counting
+    // a source. Rides the staged chain pair list; |clusters|-bounded
+    // rollups
+    Query("q281_effective_composition", (s, dir) => {
+      val cl = ext.Dedup.duplicateClusters(chainPairList(s, dir))
+        .filter(col("id") < 100000)
+      val sz = cl.groupBy(col("cluster_id")).agg(count(lit(1)).as("_sz"))
+      val w = cl.join(sz, Seq("cluster_id"))
+        .select(col("id").as("doc_id"), (lit(1.0) / col("_sz")).as("_w"))
+      val docs = t(s, dir, "documents").select(col("doc_id"), col("source"))
+        .join(w, Seq("doc_id"), "left")
+        .select(col("source"), coalesce(col("_w"), lit(1.0)).as("_w"))
+      val tot = docs.agg(count(lit(1)).cast("double").as("_n"),
+        sum(col("_w")).as("_ew"))
+      docs.groupBy(col("source"))
+        .agg(count(lit(1)).as("n_docs"), sum(col("_w")).as("_sew"))
+        .crossJoin(broadcast(tot))
+        .select(col("source"), col("n_docs"),
+          round(col("_sew") + lit(1e-9), 4).as("effective_docs"),
+          round(col("n_docs") / col("_n") + lit(1e-9), 4).as("raw_share"),
+          round(col("_sew") / col("_ew") + lit(1e-9), 4)
+            .as("effective_share"),
+          (round(col("_sew") / col("_ew") - col("n_docs") / col("_n")
+            + lit(1e-9), 4) + lit(0.0)).as("share_shift"))
+        .orderBy(col("source"))
+    },
+      // same cluster weights off the shared chain-cluster CTE
+      Oracle((chainClustersSql + """,
+        |cl AS (SELECT id, min(lbl) AS cluster_id FROM reach
+        |  GROUP BY id),
+        |bc AS (SELECT id, cluster_id FROM cl WHERE id < 100000),
+        |sz AS (SELECT cluster_id, count(*) AS sz FROM bc GROUP BY 1),
+        |w AS (SELECT bc.id AS doc_id, 1.0 / sz.sz AS w
+        |  FROM bc JOIN sz USING (cluster_id)),
+        |dd AS (SELECT d.source, coalesce(w.w, 1.0) AS w
+        |  FROM documents d LEFT JOIN w ON w.doc_id = d.doc_id),
+        |tot AS (SELECT CAST(count(*) AS DOUBLE) AS n, sum(w) AS ew
+        |  FROM dd)
+        |SELECT source, CAST(count(*) AS BIGINT) AS n_docs,
+        |  round(sum(w) + 1e-9, 4) AS effective_docs,
+        |  round(count(*) / tot.n + 1e-9, 4) AS raw_share,
+        |  round(sum(w) / tot.ew + 1e-9, 4) AS effective_share,
+        |  round(sum(w) / tot.ew - count(*) / tot.n + 1e-9, 4) + 0.0
+        |    AS share_shift
+        |FROM dd CROSS JOIN tot GROUP BY source, tot.n, tot.ew
+        |ORDER BY source""").stripMargin)),
+
+    // term burstiness (Church–Gale): per token the mean occurrences in
+    // docs that CONTAIN it and the variance-to-mean ratio — content
+    // words are bursty, function words aren't; the feature behind
+    // stopword-free keyword weighting. Vocab-bounded frames from one
+    // (doc, token) rollup; integer-exact ratios throughout
+    Query("q290_term_burstiness", (s, dir) => {
+      val tf = t(s, dir, "documents")
+        .select(col("doc_id"),
+          explode(ext.TextOps.tokens(col("text"))).as("_tok"))
+        .groupBy(col("doc_id"), col("_tok"))
+        .agg(count(lit(1)).as("_c"))
+      val m = col("_cf") / col("_df").cast("double")
+      tf.groupBy(col("_tok"))
+        .agg(count(lit(1)).as("_df"), sum(col("_c")).as("_cf"),
+          sum(col("_c") * col("_c")).as("_ss"))
+        .filter(col("_cf") >= 50)
+        .select(col("_tok").as("token"), col("_df").as("df"),
+          col("_cf").as("cf"),
+          round(m + lit(1e-9), 4).as("mean_when_present"),
+          round((col("_ss") / col("_df").cast("double") - m * m) / m
+            + lit(1e-9), 4).as("vmr"))
+        .orderBy(col("vmr").desc, col("token"))
+        .limit(20)
+    },
+      // same (doc, token) rollup + integer-exact VMR
+      Oracle("""WITH tf AS (SELECT doc_id, tok, count(*) AS c
+        |  FROM (SELECT doc_id,
+        |      unnest(regexp_split_to_array(lower(text), '\s+')) AS tok
+        |    FROM documents) u
+        |  GROUP BY 1, 2),
+        |agg AS (SELECT tok, CAST(count(*) AS BIGINT) AS df,
+        |    CAST(sum(c) AS BIGINT) AS cf, sum(c * c) AS ss
+        |  FROM tf GROUP BY 1)
+        |SELECT tok AS token, df, cf,
+        |  round(cf / CAST(df AS DOUBLE) + 1e-9, 4)
+        |    AS mean_when_present,
+        |  round((ss / CAST(df AS DOUBLE)
+        |    - (cf / CAST(df AS DOUBLE)) * (cf / CAST(df AS DOUBLE)))
+        |    / (cf / CAST(df AS DOUBLE)) + 1e-9, 4) AS vmr
+        |FROM agg WHERE cf >= 50
+        |ORDER BY vmr DESC, token LIMIT 20""".stripMargin)),
+
+    // MinHash-LSH on an ENGINE-PORTABLE hash (md5), fully oracled — the
+    // q294 promotion applied to the LSH family: q30/q31/q34/q63 are
+    // rows-only because DuckDB cannot replay xxhash64, so the LSH math
+    // itself (shingle → per-seed minhash → banded buckets → candidate
+    // pairs → agreement estimate) had no oracle-checked row — q295/
+    // q296/q297 are the oracled twins (MinHash / SimHash / sign-LSH;
+    // every rows-only LSH member now has one). Same
+    // corpus (docs ∪ 50 truncated copies) and shipped geometry (16
+    // hashes, 4 bands); est_jaccard is an exact k/16 rational
+    // The 16-hash signature frame is STAGED corpus-keyed (q296's
+    // contract — a dedup index builds signatures once per corpus
+    // snapshot): the 16×|shingles| md5 sweep was the whole cold cost
+    // (3.2 s/JVM at sf0.1); off the staged parquet, cold is a scan +
+    // the banded join.
+    Query("q295_minhash_oracled", (s, dir) => {
+      val sigs = Staging.frame(s, dir, "documents", "q295sig") {
+        ext.Dedup.minhashPortableSigs(withNearDups(s, dir),
+          "doc_id", "text")
+      }
+      ext.Dedup.minhashPairsFromSigs(sigs, "doc_id", threshold = 0.5)
+        .orderBy(col("id_a"), col("id_b"))
+    },
+      // the identical md5-minhash pipeline replayed in SQL: same corpus
+      // union (50 truncated copies at +100000), same "s:" seed prefix,
+      // same band concatenation — lexicographic min of fixed-width hex
+      // == numeric min on both engines, and est = k/16 is exact
+      Oracle("""WITH corpus AS (
+        |  SELECT doc_id, text FROM documents
+        |  UNION ALL
+        |  SELECT doc_id + 100000,
+        |    array_to_string(t[1:greatest(len(t) - 1, 1)], ' ')
+        |  FROM (SELECT doc_id, regexp_split_to_array(text, '\s+') AS t
+        |        FROM documents)
+        |  WHERE doc_id < 50),
+        |d AS (SELECT doc_id,
+        |    list_distinct(list_transform(
+        |      generate_series(1, greatest(len(t) - 2, 1)),
+        |      i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2])) AS sh
+        |  FROM (SELECT doc_id, regexp_split_to_array(lower(text), '\s+')
+        |          AS t FROM corpus)),
+        |sigs AS (SELECT doc_id,
+        |    list_transform(range(16), s -> list_min(list_transform(sh,
+        |      x -> md5(s::VARCHAR || ':' || x)))) AS mh
+        |  FROM d),
+        |bnd AS (SELECT doc_id, b,
+        |    mh[4*b+1] || mh[4*b+2] || mh[4*b+3] || mh[4*b+4] AS bucket
+        |  FROM sigs CROSS JOIN (SELECT unnest(range(4)) AS b) g),
+        |cand AS (SELECT DISTINCT a.doc_id AS id_a, c.doc_id AS id_b
+        |  FROM bnd a JOIN bnd c
+        |    ON a.b = c.b AND a.bucket = c.bucket
+        |      AND a.doc_id < c.doc_id)
+        |SELECT id_a, id_b,
+        |  round(len(list_filter(range(16),
+        |    i -> sa.mh[i+1] = sb.mh[i+1])) / 16.0 + 1e-9, 4)
+        |    AS est_jaccard
+        |FROM cand
+        |JOIN sigs sa ON sa.doc_id = id_a
+        |JOIN sigs sb ON sb.doc_id = id_b
+        |WHERE len(list_filter(range(16),
+        |    i -> sa.mh[i+1] = sb.mh[i+1])) / 16.0 >= 0.5
+        |ORDER BY id_a, id_b""".stripMargin)),
+
+    // SimHash on an ENGINE-PORTABLE hash (md5), fully oracled — the
+    // last of the promotion family (q294 ALS, q295 MinHash-LSH): the
+    // shipped q31 keys on the codegen'd seed-42 XXH64 SimHash64, so
+    // only its math twin is DuckDB-replayable. Identical algebra:
+    // per-token 32-bit hash, per-bit majority vote, 4×8-bit
+    // block-exact candidate blocking (exhaustive for Hamming ≤ 3 by
+    // pigeonhole), bit_count verify. Corpus = q31's withNearDups
+    // STRATUM-SLICED to originals doc_id < 1000 (+ the 50 planted
+    // copies): the query's purpose is math identity with DuckDB,
+    // which a slice proves at a fraction of the full corpus's vote
+    // cost (the full run was the single slowest bench row at 5.4 s
+    // for zero extra evidence — VERDICT r11 #4). The slice is applied
+    // to the BASE before planting (mirroring the oracle's corpus CTE)
+    // — the earlier post-union `doc_id >= 100000` arm aliased any
+    // corpus whose native ids reach 1e5 and admitted every MakeTenX
+    // replica at ≥11 copies (the round-12 30x find: 52k within-copy
+    // ambient pairs). At sf0.01 (500 docs) the slice is a no-op, so
+    // that scale still exercises the whole corpus; at sf0.1 it
+    // yields 71 pairs (50 planted + 21 ambient)
+    // The 60-bit sig frame is STAGED corpus-keyed (q108's contract —
+    // a dedup index builds signatures once per corpus snapshot): a
+    // cold JVM previously re-paid the vote AND the 60-term generated
+    // sig expression's planning walk (cold min 5.04 s vs 0.45 steady,
+    // r12 verdict #5); off the staged parquet both are gone and cold
+    // is a scan + the banded join.
+    Query("q296_simhash_oracled", (s, dir) => {
+      val sigs = Staging.frame(s, dir, "documents", "q296sig") {
+        ext.Dedup.simhashPortableSigs(
+          withNearDups(t(s, dir, "documents")
+            .select(col("doc_id"), col("text"))
+            .filter(col("doc_id") < 1000)),
+          "doc_id", "text")
+      }
+      ext.Dedup.simhashPairsFromSigs(sigs, "doc_id", maxHamming = 3)
+        .orderBy(col("id_a"), col("id_b"))
+    },
+      // the identical bit-vote algebra on md5: tokval = first 15 md5 hex
+      // chars as a 60-bit int (('0x'||_)::BIGINT ≡ Spark conv(_,16,10);
+      // 16 chars would overflow signed BIGINT), sig bit i = majority of
+      // token bit i, candidates from exact 15-bit-block agreement
+      // (DISTINCT replaces the Spark side's first-agreeing-block
+      // map-side dedup — same pair set), Hamming via bit_count(xor).
+      // Corpus stratum doc_id < 1000 matches the Spark side (the copies
+      // CTE is already doc_id < 50, so only the originals need the
+      // predicate); no-op at sf0.01, 71 pairs at sf0.1
+      Oracle {
+        val voteSums = (0 until 60).map(i =>
+          s"sum(CASE WHEN (tv >> $i) & 1 = 1 THEN 1 ELSE -1 END) AS s$i")
+          .mkString(",\n    ")
+        val sigExpr = (0 until 60).map(i =>
+          s"(CASE WHEN s$i > 0 THEN ${1L << i} ELSE 0 END)")
+          .mkString(" + ")
+        s"""WITH corpus AS (
+          |  SELECT doc_id, text FROM documents WHERE doc_id < 1000
+          |  UNION ALL
+          |  SELECT doc_id + 100000,
+          |    array_to_string(t[1:greatest(len(t) - 1, 1)], ' ')
+          |  FROM (SELECT doc_id, regexp_split_to_array(text, '\\s+') AS t
+          |        FROM documents)
+          |  WHERE doc_id < 50),
+          |tok AS (SELECT doc_id,
+          |    ('0x' || substring(md5(tok), 1, 15))::BIGINT AS tv
+          |  FROM (SELECT doc_id,
+          |      unnest(regexp_split_to_array(lower(text), '\\s+')) AS tok
+          |    FROM corpus) u),
+          |votes AS (SELECT doc_id,
+          |    $voteSums
+          |  FROM tok GROUP BY doc_id),
+          |sigs AS (SELECT doc_id, $sigExpr AS sig FROM votes),
+          |bnd AS (SELECT doc_id, sig, b,
+          |    (sig >> (15 * b)) & 32767 AS bucket
+          |  FROM sigs CROSS JOIN (SELECT unnest(range(4)) AS b) g),
+          |cand AS (SELECT DISTINCT a.doc_id AS id_a, c.doc_id AS id_b,
+          |    bit_count(xor(a.sig, c.sig)) AS hamming
+          |  FROM bnd a JOIN bnd c
+          |    ON a.b = c.b AND a.bucket = c.bucket AND a.doc_id < c.doc_id
+          |  WHERE bit_count(xor(a.sig, c.sig)) <= 3)
+          |SELECT id_a, id_b, CAST(hamming AS BIGINT) AS hamming
+          |FROM cand ORDER BY id_a, id_b""".stripMargin
+      }),
+
+    // 128-bit SimHash near-dups — q31's scale path (round 15): two
+    // independent-seed signature halves give 4 blocks of 32 bits, so
+    // block occupancy is ∝ n/2^32 instead of n/2^16 and the candidate
+    // join stays linear to ~1e9 docs (the budget audit measured the
+    // 64-bit blocking at ×60.6 budget growth for ×9.2 rows). Hamming
+    // ≤ 3 over 128 bits is a stricter operating point, so exact
+    // copies (+200000) are planted alongside the one-word-truncated
+    // ones to keep a deterministic found set at every sf
+    Query("q298_simhash128_neardup", (s, dir) => {
+      val base = withNearDups(s, dir)
+      val exact = base.filter(col("doc_id") < 25)
+        .select((col("doc_id") + 200000).as("doc_id"), col("text"))
+      ext.Dedup.simhashNearDups128(base.unionByName(exact),
+          "doc_id", "text", maxHamming = 3)
+        .orderBy(col("id_a"), col("id_b"))
+    },
+      RowsOnly(Seq("LshRecallAtScaleSpec", "BucketPairBudgetAuditSpec"))),
+
+    // overlapping token-window chunking (32-token chunks every 24):
+    // map-side explode, no shuffle — the bounded-input prep step for
+    // embedding pipelines
+    Query("q76_chunk_docs", (s, dir) =>
+      ext.TextOps.chunkDocs(t(s, dir, "documents"), "doc_id", "text",
+          chunkTokens = 32, stride = 24)
+        .orderBy(col("doc_id"), col("chunk_id")),
+      Oracle("""WITH d AS (SELECT doc_id,
+        |    regexp_split_to_array(lower(text), '\s+') AS t FROM documents),
+        |starts AS (SELECT doc_id, t,
+        |    unnest(range(0, len(t), 24)) AS st FROM d)
+        |SELECT doc_id, CAST(st // 24 AS BIGINT) AS chunk_id,
+        |  CAST(len(sl) AS BIGINT) AS n_chunk_tokens,
+        |  array_to_string(sl, ' ') AS chunk_text
+        |FROM (SELECT doc_id, st, list_slice(t, st + 1, st + 32) AS sl
+        |      FROM starts)
+        |ORDER BY doc_id, chunk_id""".stripMargin)),
+
+    // per-language quality gate: keep docs at/above their language's
+    // 70th-percentile quality score. Thresholds = tiny broadcast agg;
+    // corpus filtered map-side (no per-group sort window)
+    Query("q75_quality_gate", (s, dir) => {
+      val scored = ext.TextOps.qualityScore(t(s, dir, "documents"), "text")
+        .select(col("doc_id"), col("lang"), col("quality"))
+      ext.TextOps.qualityGate(scored, "lang", "quality", p = 0.7)
+        .select(col("lang"), col("doc_id"), col("quality"))
+        .orderBy(col("lang"), col("doc_id"))
+    },
+      // q27's quality formula, then per-lang quantile_cont(0.7) threshold
+      // (r4-rounded, matching Spark's exact percentile) and the >= filter
+      Oracle("""WITH f AS (
+        |  SELECT doc_id, lang,
+        |    CAST(len(toks) AS BIGINT) AS n_tokens,
+        |    round(len(list_filter(toks, t -> t IN
+        |      ('the','a','of','and','to','in','is','it','that','for')))
+        |      / greatest(len(toks), 1) + 1e-9, 4) AS stopword_ratio,
+        |    round(list_unique(toks) / greatest(len(toks), 1) + 1e-9, 4)
+        |      AS distinct_ratio,
+        |    round(length(regexp_replace(text, '[^[:punct:]]', '', 'g'))
+        |      / greatest(length(text), 1) + 1e-9, 4) AS punct_ratio
+        |  FROM (SELECT doc_id, lang, text,
+        |          regexp_split_to_array(lower(text), '\s+') AS toks
+        |        FROM documents)),
+        |q AS (SELECT doc_id, lang,
+        |  round(CASE WHEN n_tokens BETWEEN 5 AND 10000 THEN 0.4 ELSE 0.0 END
+        |    + 0.3 * distinct_ratio
+        |    + 0.2 * least(stopword_ratio * 2, 1.0)
+        |    + CASE WHEN punct_ratio < 0.2 THEN 0.1 ELSE 0.0 END + 1e-9, 4)
+        |    AS quality FROM f),
+        |thr AS (SELECT lang, round(quantile_cont(quality, 0.7) + 1e-9, 4)
+        |          AS q70 FROM q GROUP BY 1)
+        |SELECT q.lang, q.doc_id, q.quality
+        |FROM q JOIN thr ON q.lang = thr.lang
+        |WHERE q.quality >= thr.q70
+        |ORDER BY q.lang, q.doc_id""".stripMargin)),
+
+    // PII scrubbing: emails + long digit runs masked with typed
+    // placeholders, counts emitted. PII is injected deterministically
+    // (doc_id%4 suffix, reproducible in SQL); patterns are
+    // RE2-compatible so Spark and DuckDB scrub identically
+    Query("q74_pii_scrub", (s, dir) => {
+      val docs = t(s, dir, "documents").select(col("doc_id"),
+        concat(col("text"),
+          when(col("doc_id") % 4 === 0,
+            concat(lit(" contact user"), col("doc_id"),
+              lit("@example.com or call 5551234567")))
+            .otherwise(lit(""))).as("text"))
+      ext.TextOps.scrubPii(docs, "doc_id", "text")
+        .orderBy(col("doc_id"))
+    },
+      Oracle("""WITH d AS (SELECT doc_id, concat(text,
+        |    CASE WHEN doc_id % 4 = 0
+        |         THEN concat(' contact user', CAST(doc_id AS VARCHAR),
+        |                     '@example.com or call 5551234567')
+        |         ELSE '' END) AS text FROM documents)
+        |SELECT doc_id,
+        |  regexp_replace(regexp_replace(text,
+        |      '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}',
+        |      '<EMAIL>', 'g'),
+        |    '[0-9]{7,}', '<NUM>', 'g') AS text_clean,
+        |  CAST(len(regexp_extract_all(text,
+        |    '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}')) AS BIGINT)
+        |    AS n_emails,
+        |  CAST(len(regexp_extract_all(text, '[0-9]{7,}')) AS BIGINT)
+        |    AS n_longnums
+        |FROM d ORDER BY doc_id""".stripMargin)),
+
+    // train/eval decontamination: docs 0-4 stand in for the eval set;
+    // every remaining doc gets its count of distinct shared 3-gram
+    // shingles (eval shingles broadcast, corpus probes map-side)
+    Query("q73_decontaminate", (s, dir) => {
+      val docs = t(s, dir, "documents")
+      ext.Dedup.contaminationStats(
+          docs.filter(col("doc_id") >= 5), docs.filter(col("doc_id") < 5),
+          "doc_id", "text", shingleN = 3)
+        .orderBy(col("doc_id"))
+    },
+      // same 3-gram construction as the q32 oracle; shared-shingle counts
+      // via unnest + join against the eval set's distinct shingles
+      Oracle(decontaminationOracle)),
+
+    // Gopher-style repetition filters: duplicate-token, top-token, and
+    // duplicate-2-gram fractions per document — one tokenization, one
+    // scan, the top-token count an O(L) fold over the sorted array
+    Query("q72_repetition_stats", (s, dir) =>
+      ext.TextOps.repetitionStats(t(s, dir, "documents"), "doc_id", "text")
+        .orderBy(col("doc_id")),
+      Oracle("""WITH d AS (SELECT doc_id,
+        |    regexp_split_to_array(lower(text), '\s+') AS t FROM documents),
+        |topc AS (SELECT doc_id, max(c) AS topc FROM (
+        |    SELECT doc_id, token, count(*) AS c FROM (
+        |      SELECT doc_id, unnest(t) AS token FROM d) GROUP BY 1, 2)
+        |  GROUP BY 1),
+        |m AS (SELECT doc_id, len(t) AS n, len(list_distinct(t)) AS nd,
+        |    len(list_distinct(list_transform(
+        |      generate_series(1, greatest(len(t) - 1, 1)),
+        |      i -> t[i] || ' ' || t[i+1]))) AS d2
+        |  FROM d)
+        |SELECT m.doc_id, CAST(n AS BIGINT) AS n_tokens,
+        |  round(1 - nd / CAST(n AS DOUBLE) + 1e-9, 4) AS dup_token_frac,
+        |  round(topc / CAST(n AS DOUBLE) + 1e-9, 4) AS top_token_frac,
+        |  round(1 - d2 / CAST(greatest(n - 1, 1) AS DOUBLE) + 1e-9, 4)
+        |    AS dup_2gram_frac
+        |FROM m JOIN topc ON m.doc_id = topc.doc_id
+        |ORDER BY m.doc_id""".stripMargin)),
+
+    // exact heavy-hitter tokens via the Misra-Gries candidate pass +
+    // exact recount: bounded state end-to-end, counts exact, so the
+    // result hash-matches the oracle's full groupBy HAVING formulation
+    Query("q71_heavy_tokens", (s, dir) => {
+      val toks = t(s, dir, "documents")
+        .select(explode(ext.TextOps.tokens(col("text"))).as("token"))
+      ext.TextOps.heavyHitters(toks, "token", capacity = 30)
+        .orderBy(col("token"))
+    },
+      // MG guarantees candidate coverage for freq > N/(cap+1); the exact
+      // recount + integer threshold reproduces the full-vocabulary answer
+      Oracle("""WITH toks AS (SELECT unnest(regexp_split_to_array(lower(text),
+        |    '\s+')) AS token FROM documents)
+        |SELECT token, CAST(count(*) AS BIGINT) AS cnt FROM toks
+        |GROUP BY token
+        |HAVING count(*) * 31 > (SELECT count(*) FROM toks)
+        |ORDER BY token""".stripMargin)),
+
+    // C4-style boilerplate-line removal: lines occurring in more than
+    // maxLineDf distinct docs are dropped, docs reassembled in order.
+    // Boilerplate is injected deterministically (doc_id%3 / doc_id%7
+    // suffixes, reproducible in SQL) so the pipeline has true positives;
+    // unique content lines must survive untouched
+    Query("q70_drop_boilerplate", (s, dir) => {
+      val docs = t(s, dir, "documents").select(col("doc_id"),
+        concat(col("text"),
+          when(col("doc_id") % 3 === 0, lit("\nall rights reserved"))
+            .otherwise(lit("")),
+          when(col("doc_id") % 7 === 0, lit("\nsubscribe to our newsletter"))
+            .otherwise(lit(""))).as("text"))
+      ext.Dedup.dropBoilerplateLines(docs, "doc_id", "text", maxLineDf = 10L)
+        .orderBy(col("doc_id"))
+    },
+      Oracle("""WITH d AS (SELECT doc_id, concat(text,
+        |    CASE WHEN doc_id % 3 = 0
+        |         THEN chr(10) || 'all rights reserved' ELSE '' END,
+        |    CASE WHEN doc_id % 7 = 0
+        |         THEN chr(10) || 'subscribe to our newsletter' ELSE '' END)
+        |    AS t FROM documents),
+        |ls AS (SELECT doc_id, string_split(t, chr(10)) AS parts FROM d),
+        |lines AS (SELECT doc_id, generate_subscripts(parts, 1) AS pos,
+        |                 unnest(parts) AS line FROM ls),
+        |hot AS (SELECT line FROM (
+        |    SELECT line, count(DISTINCT doc_id) AS df FROM lines GROUP BY 1)
+        |  WHERE df > 10),
+        |kept AS (SELECT * FROM lines
+        |         WHERE line NOT IN (SELECT line FROM hot)),
+        |outp AS (SELECT doc_id,
+        |    string_agg(line, chr(10) ORDER BY pos) AS text_clean
+        |  FROM kept GROUP BY doc_id)
+        |SELECT d.doc_id, COALESCE(o.text_clean, '') AS text_clean
+        |FROM d LEFT JOIN outp o USING (doc_id)
+        |ORDER BY d.doc_id""".stripMargin)),
+
+    // LLM-pretraining sequence packing: every doc's token interval in
+    // the id-ordered corpus concatenation + the 512-token chunks it
+    // spans. The global cumsum is a hierarchical prefix-sum (bucket
+    // totals → tiny bucket-summary window → within-bucket windows), so
+    // no full-corpus single-reducer sort; all-integer → exact oracle.
+    // bucketSize=64 so sf0.01's 500 docs exercise ~8 real buckets
+    Query("q69_pack_sequences", (s, dir) => {
+      val docs = t(s, dir, "documents")
+      ext.TextOps.packSequences(docs, "doc_id",
+          ext.TextOps.tokenCount(col("text")), budget = 512L,
+          bucketSize = 64L)
+        .orderBy(col("doc_id"))
+    },
+      // the oracle's global-order window IS the semantics; only the Spark
+      // side needs the hierarchical decomposition. All-integer arithmetic
+      Oracle("""WITH d AS (SELECT doc_id,
+        |    CAST(len(regexp_split_to_array(lower(text), '\s+')) AS BIGINT)
+        |      AS n_tokens
+        |  FROM documents),
+        |x AS (SELECT doc_id, n_tokens,
+        |    COALESCE(sum(n_tokens) OVER (ORDER BY doc_id
+        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
+        |      AS start_off
+        |  FROM d)
+        |SELECT doc_id, n_tokens, CAST(start_off AS BIGINT) AS start_off,
+        |  CAST(floor(start_off / 512) AS BIGINT) AS chunk_first,
+        |  CAST(floor((start_off + greatest(n_tokens, 1) - 1) / 512)
+        |    AS BIGINT) AS chunk_last
+        |FROM x ORDER BY doc_id""".stripMargin)),
+
+    // duplicate-cluster assignment = connected components over the
+    // near-dup pair graph (iterated min-label propagation). The corpus
+    // is seeded with CHAINS — doc ~ 75%-prefix copy ~ 50%-prefix copy,
+    // where doc↔50% falls below the threshold — so the transitive
+    // closure is load-bearing: greedy pairwise grouping cannot produce
+    // this answer. Oracle = recursive CTE over the same pair list
+    Query("q78_dedup_clusters", (s, dir) =>
+      ext.Dedup.duplicateClusters(chainPairList(s, dir))
+        .select(col("id").as("doc_id"), col("cluster_id"))
+        .orderBy(col("doc_id")),
+      // same chain corpus (75%- and 50%-prefix copies of docs 0-29) and
+      // same exact-Jaccard pair rule as the Spark side; connected
+      // components via a recursive CTE — min label reachable from each
+      // node over the bidirected edge list
+      Oracle((chainClustersSql + """
+        |SELECT id AS doc_id, CAST(min(lbl) AS BIGINT) AS cluster_id
+        |FROM reach GROUP BY id ORDER BY doc_id""").stripMargin)),
+
+    // the SAME duplicate-cluster semantics via the alternating
+    // large-star/small-star algorithm — O(log diameter) rounds where
+    // q78's min-label propagation pays O(diameter); both must land on
+    // the identical transitive-closure minimum, so the oracle SQL is
+    // shared verbatim with q78 (DedupSpec additionally pins the two
+    // operators equal on path graphs the propagation cannot finish)
+    Query("q112_clusters_altstar", (s, dir) =>
+      ext.Dedup.duplicateClustersAltStar(chainPairList(s, dir))
+        .select(col("id").as("doc_id"), col("cluster_id"))
+        .orderBy(col("doc_id")),
+      // identical ground truth: the algorithm differs, the transitive
+      // closure must not (oracle shared verbatim with q78)
+      Oracle((chainClustersSql + """
+        |SELECT id AS doc_id, CAST(min(lbl) AS BIGINT) AS cluster_id
+        |FROM reach GROUP BY id ORDER BY doc_id""").stripMargin)),
+
+    // dedup SAVINGS report over q78's transitive-closure clusters:
+    // cluster-size histogram + removable-doc count — the before/after
+    // number a curation run reports. Rides the memoized pair list
+    Query("q158_dedup_savings", (s, dir) => {
+      val sizes = ext.Dedup.duplicateClusters(chainPairList(s, dir))
+        .groupBy(col("cluster_id")).agg(count(lit(1)).as("_sz"))
+      sizes.groupBy(col("_sz").as("cluster_size"))
+        .agg(count(lit(1)).as("n_clusters"))
+        .withColumn("docs_removable",
+          (col("cluster_size") - 1) * col("n_clusters"))
+        .orderBy(col("cluster_size"))
+    },
+      // q78's transitive closure, rolled up to the savings histogram
+      Oracle("""WITH RECURSIVE
+        |base AS (SELECT doc_id, lang, source, text FROM documents),
+        |m1 AS (SELECT doc_id + 100000 AS doc_id, lang, source,
+        |  array_to_string(list_slice(regexp_split_to_array(text, '\s+'), 1,
+        |    greatest((3 * len(regexp_split_to_array(text, '\s+'))) // 4,
+        |      1)), ' ') AS text
+        |  FROM base WHERE doc_id < 30),
+        |m2 AS (SELECT doc_id + 200000 AS doc_id, lang, source,
+        |  array_to_string(list_slice(regexp_split_to_array(text, '\s+'), 1,
+        |    greatest(len(regexp_split_to_array(text, '\s+')) // 2,
+        |      1)), ' ') AS text
+        |  FROM base WHERE doc_id < 30),
+        |corpus AS (SELECT * FROM base UNION ALL SELECT * FROM m1
+        |           UNION ALL SELECT * FROM m2),
+        |d AS (SELECT doc_id, lang, source,
+        |    list_distinct(list_transform(
+        |      generate_series(1, greatest(len(t) - 2, 1)),
+        |      i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2])) AS sh
+        |  FROM (SELECT doc_id, lang, source,
+        |          regexp_split_to_array(lower(text), '\s+') AS t
+        |        FROM corpus)),
+        |ex AS (SELECT doc_id, lang, source, unnest(sh) AS g FROM d),
+        |cand AS (SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
+        |  FROM ex a JOIN ex b ON a.g = b.g AND a.lang = b.lang
+        |    AND a.source = b.source AND a.doc_id < b.doc_id),
+        |pairs AS (
+        |  SELECT id_a, id_b FROM cand
+        |  JOIN d da ON da.doc_id = cand.id_a
+        |  JOIN d db ON db.doc_id = cand.id_b
+        |  WHERE len(list_intersect(da.sh, db.sh))
+        |        / len(list_distinct(da.sh || db.sh)) >= 0.6),
+        |edges AS (SELECT id_a AS src, id_b AS dst FROM pairs
+        |          UNION ALL SELECT id_b, id_a FROM pairs),
+        |nodes AS (SELECT DISTINCT src AS id FROM edges),
+        |reach(id, lbl) AS (
+        |  SELECT id, id FROM nodes
+        |  UNION
+        |  SELECT e.dst, r.lbl FROM reach r JOIN edges e ON e.src = r.id),
+        |labels AS (SELECT id, min(lbl) AS cluster_id
+        |  FROM reach GROUP BY id),
+        |sizes AS (SELECT cluster_id, CAST(count(*) AS BIGINT)
+        |    AS cluster_size
+        |  FROM labels GROUP BY 1)
+        |SELECT cluster_size, CAST(count(*) AS BIGINT) AS n_clusters,
+        |  CAST((cluster_size - 1) * count(*) AS BIGINT)
+        |    AS docs_removable
+        |FROM sizes GROUP BY 1 ORDER BY 1""".stripMargin)),
+
+    // verbatim shared-span pairs over the constructed near-dup corpus:
+    // content-defined md5 anchors make window selection alignment-
+    // invariant AND engine-exact (oracle-checked, unlike the xxhash64
+    // LSH family) — the exact-substring contamination signal that
+    // whole-doc Jaccard misses
+    Query("q121_shared_spans", (s, dir) =>
+      ext.Dedup.sharedSpanPairs(withNearDups(s, dir), "doc_id", "text",
+          window = 32, minShared = 2L)
+        .orderBy(col("id_a"), col("id_b")),
+      // same corpus construction as the near-dup fixtures (docs ∪ last-
+      // token-dropped copies at +100000); per-position 32-char windows,
+      // kept iff md5 starts with '0' (the content-defined anchor), hot
+      // windows over df 1000 dropped on both sides
+      Oracle("""WITH m AS (SELECT doc_id + 100000 AS doc_id,
+        |    array_to_string(list_slice(regexp_split_to_array(text, '\s+'),
+        |      1, greatest(len(regexp_split_to_array(text, '\s+')) - 1, 1)),
+        |      ' ') AS text
+        |  FROM documents WHERE doc_id < 50),
+        |corpus AS (SELECT doc_id, text FROM documents
+        |           UNION ALL SELECT doc_id, text FROM m),
+        |w AS (SELECT doc_id, unnest(list_transform(
+        |    generate_series(1, length(text) - 31),
+        |    i -> substring(text, CAST(i AS INT), 32))) AS win
+        |  FROM corpus WHERE length(text) >= 32),
+        |sel AS (SELECT DISTINCT doc_id, win FROM w
+        |  WHERE md5(win) LIKE '0%'),
+        |keep AS (SELECT win FROM sel GROUP BY win
+        |  HAVING count(*) <= 1000),
+        |p AS (SELECT s.doc_id, s.win FROM sel s JOIN keep USING (win))
+        |SELECT a.doc_id AS id_a, b.doc_id AS id_b,
+        |  CAST(count(*) AS BIGINT) AS n_shared
+        |FROM p a JOIN p b ON a.win = b.win AND a.doc_id < b.doc_id
+        |GROUP BY 1, 2 HAVING count(*) >= 2
+        |ORDER BY id_a, id_b""".stripMargin)),
+
+    // DSIR importance weights: score every doc by how 'en'-like its
+    // hashed-bigram profile is — the distribution-matched pretraining
+    // selection signal; weights feed the A-ES weighted sampler (q99).
+    // Closed 256-bucket feature space → both LMs broadcast; the only
+    // corpus-sized shuffle is the (doc, bucket) count
+    Query("q123_importance_weights", (s, dir) =>
+      ext.TextOps.importanceWeights(t(s, dir, "documents"), "doc_id",
+          "text", isTarget = col("lang") === "en", buckets = 256,
+          seed = 42L)
+        .orderBy(col("doc_id")),
+      // same md5-bucket currency as q67/q79 (first 13 hex digits as
+      // BIGINT), 256 hashed-bigram buckets, add-one smoothing over the
+      // bucket space, ln natural; sum order differs between engines →
+      // 4 dp + nudge; + 0.0 normalizes IEEE signed zero
+      Oracle("""WITH d AS (SELECT doc_id, (lang = 'en') AS tgt,
+        |    regexp_split_to_array(lower(text), '\s+') AS t FROM documents),
+        |f AS (SELECT doc_id, tgt,
+        |    CAST(concat('0x', substr(md5(concat('42:', bg)), 1, 13))
+        |      AS BIGINT) % 256 AS b
+        |  FROM (SELECT doc_id, tgt, unnest(list_transform(
+        |      generate_series(1, len(t) - 1),
+        |      i -> concat(t[i], ' ', t[i + 1]))) AS bg
+        |    FROM d WHERE len(t) >= 2)),
+        |db AS (SELECT doc_id, tgt, b, CAST(count(*) AS DOUBLE) AS c
+        |  FROM f GROUP BY 1, 2, 3),
+        |dist AS (SELECT b, sum(CASE WHEN tgt THEN c ELSE 0.0 END) AS ct,
+        |    sum(c) AS cr FROM db GROUP BY b),
+        |tot AS (SELECT sum(CASE WHEN tgt THEN c ELSE 0.0 END) AS nt,
+        |    sum(c) AS nr FROM db)
+        |SELECT doc_id, CAST(sum(c) AS BIGINT) AS n_feats,
+        |  round(sum(c * (ln((ct + 1.0) / (nt + 256.0))
+        |    - ln((cr + 1.0) / (nr + 256.0)))) + 1e-9, 4) + 0.0
+        |    AS log_weight
+        |FROM db JOIN dist USING (b) CROSS JOIN tot
+        |GROUP BY doc_id ORDER BY doc_id""".stripMargin)),
+
+    // per-source near-dup density off the STAGED chain pair list: dup
+    // pairs per source (the pair generator blocks on (lang, source),
+    // so pairs are within-source by construction) over the chained
+    // corpus's per-source doc counts — the "which feed is recycling
+    // content" curation report
+    Query("q177_source_dup_density", (s, dir) => {
+      val pairs = chainPairList(s, dir)
+      val meta = chainedCorpus(s, dir).select(col("doc_id"), col("source"))
+      val dups = pairs.join(meta, pairs("id_a") === meta("doc_id"))
+        .groupBy(col("source")).agg(count(lit(1)).as("_np"))
+      meta.groupBy(col("source")).agg(count(lit(1)).as("n_docs"))
+        .join(dups, Seq("source"), "left")
+        .select(col("source"), col("n_docs"),
+          coalesce(col("_np"), lit(0L)).as("n_dup_pairs"),
+          round(coalesce(col("_np"), lit(0L)).cast("double") /
+            col("n_docs") + lit(1e-9), 4).as("pairs_per_doc"))
+        .orderBy(col("source"))
+    },
+      // q78's chained-corpus + exact-Jaccard pair CTEs, rolled up per
+      // source (pairs are within-source by the blocking key)
+      // posting-join candidate generation (q32's oracle shape — the
+      // blocked all-pairs form is quadratic in block size on the
+      // ladder's documents axis), exact jaccard per unique candidate
+      Oracle("""WITH base AS (SELECT doc_id, lang, source, text FROM documents),
+        |m1 AS (SELECT doc_id + 100000 AS doc_id, lang, source,
+        |  array_to_string(list_slice(regexp_split_to_array(text, '\s+'), 1,
+        |    greatest((3 * len(regexp_split_to_array(text, '\s+'))) // 4,
+        |      1)), ' ') AS text
+        |  FROM base WHERE doc_id < 30),
+        |m2 AS (SELECT doc_id + 200000 AS doc_id, lang, source,
+        |  array_to_string(list_slice(regexp_split_to_array(text, '\s+'), 1,
+        |    greatest(len(regexp_split_to_array(text, '\s+')) // 2,
+        |      1)), ' ') AS text
+        |  FROM base WHERE doc_id < 30),
+        |corpus AS (SELECT * FROM base UNION ALL SELECT * FROM m1
+        |           UNION ALL SELECT * FROM m2),
+        |d AS (SELECT doc_id, lang, source,
+        |    list_distinct(list_transform(
+        |      generate_series(1, greatest(len(t) - 2, 1)),
+        |      i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2])) AS sh
+        |  FROM (SELECT doc_id, lang, source,
+        |          regexp_split_to_array(lower(text), '\s+') AS t
+        |        FROM corpus)),
+        |ex AS (SELECT doc_id, lang, source, unnest(sh) AS g FROM d),
+        |cand AS (SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
+        |  FROM ex a JOIN ex b ON a.g = b.g AND a.lang = b.lang
+        |    AND a.source = b.source AND a.doc_id < b.doc_id),
+        |pairs AS (
+        |  SELECT cand.id_a, cand.id_b, da.source
+        |  FROM cand JOIN d da ON da.doc_id = cand.id_a
+        |    JOIN d db ON db.doc_id = cand.id_b
+        |  WHERE len(list_intersect(da.sh, db.sh))
+        |        / len(list_distinct(da.sh || db.sh)) >= 0.6),
+        |np AS (SELECT source, count(*) AS np FROM pairs GROUP BY source),
+        |nd AS (SELECT source, count(*) AS n_docs FROM corpus
+        |  GROUP BY source)
+        |SELECT nd.source, CAST(nd.n_docs AS BIGINT) AS n_docs,
+        |  CAST(COALESCE(np.np, 0) AS BIGINT) AS n_dup_pairs,
+        |  round(COALESCE(np.np, 0) / CAST(nd.n_docs AS DOUBLE) + 1e-9, 4)
+        |    AS pairs_per_doc
+        |FROM nd LEFT JOIN np ON np.source = nd.source
+        |ORDER BY nd.source""".stripMargin)),
+
+    // pairwise vocabulary Jaccard between sources — the corpus-
+    // comparison matrix next to the distributional drift reports
+    // (q118): one (source, token) distinct, a token-keyed self-join
+    // whose per-token output is ≤|sources|², |sources|²-row result
+    Query("q136_vocab_overlap", (s, dir) =>
+      ext.TextOps.vocabularyOverlap(t(s, dir, "documents"), "source",
+          "text")
+        .orderBy(col("source_a"), col("source_b")),
+      // jaccard is a ratio of exact vocabulary integers — engine-exact
+      // before the 4-dp round
+      Oracle("""WITH v AS (SELECT DISTINCT g, t FROM (
+        |    SELECT source AS g,
+        |      unnest(regexp_split_to_array(lower(text), '\s+')) AS t
+        |    FROM documents)),
+        |s AS (SELECT g, CAST(count(*) AS BIGINT) AS vb FROM v GROUP BY g),
+        |i AS (SELECT a.g AS ga, b.g AS gb,
+        |    CAST(count(*) AS BIGINT) AS n_common
+        |  FROM v a JOIN v b ON a.t = b.t AND a.g < b.g GROUP BY 1, 2)
+        |SELECT ga AS source_a, gb AS source_b, sa.vb AS vocab_a,
+        |  sb.vb AS vocab_b, n_common,
+        |  sa.vb + sb.vb - n_common AS n_union,
+        |  round(n_common / CAST(sa.vb + sb.vb - n_common AS DOUBLE)
+        |    + 1e-9, 4) AS jaccard
+        |FROM i JOIN s sa ON sa.g = i.ga JOIN s sb ON sb.g = i.gb
+        |ORDER BY source_a, source_b""".stripMargin)),
+
+    // per-doc unigram entropy — the diversity/repetition quality
+    // signal next to q72: spam ≈ 0, diverse prose → ln(n_distinct)
+    Query("q145_token_entropy", (s, dir) =>
+      ext.TextOps.tokenEntropy(t(s, dir, "documents"), "doc_id", "text")
+        .orderBy(col("doc_id")),
+      // same token currency as q136; p = c/n exact rationals; ln-sum
+      // rounds at 4 dp; +0.0 for the single-token −0.0
+      Oracle("""WITH tok AS (SELECT doc_id,
+        |    unnest(regexp_split_to_array(lower(text), '\s+')) AS t
+        |  FROM documents),
+        |c AS (SELECT doc_id, t, CAST(count(*) AS BIGINT) AS c
+        |  FROM tok GROUP BY 1, 2),
+        |n AS (SELECT doc_id, sum(c) AS n, CAST(count(*) AS BIGINT) AS nd
+        |  FROM c GROUP BY 1)
+        |SELECT c.doc_id, CAST(n.n AS BIGINT) AS n_tokens,
+        |  n.nd AS n_distinct,
+        |  round(-sum((c / CAST(n.n AS DOUBLE)) *
+        |    ln(c / CAST(n.n AS DOUBLE))) + 1e-9, 4) + 0.0 AS entropy
+        |FROM c JOIN n USING (doc_id) GROUP BY 1, 2, 3
+        |ORDER BY doc_id""".stripMargin)),
+
+    // asymmetric-containment near-dup pairs: |A∩B|/min(|A|,|B|) — the
+    // quote-inclusion/truncated-recrawl signal q32's Jaccard misses
+    Query("q149_containment_pairs", (s, dir) =>
+      ext.Dedup.containmentPairs(t(s, dir, "documents"), "doc_id",
+          "text", shingleN = 3, partitionCols = Seq("lang", "source"))
+        .select(col("id_a"), col("id_b"),
+          round(col("containment") + lit(1e-9), 4).as("containment"))
+        .orderBy(col("containment").desc, col("id_a"), col("id_b"))
+        .limit(20),
+      // same 3-gram/partition construction as the q32 oracle (uncapped:
+      // hash-match holds while no shingle df exceeds 1000 — max ~30 at
+      // test SF); containment = inter / min set size
+      // posting-join candidate generation (q32's oracle shape): the
+      // former blocked all-pairs formulation is quadratic in block size,
+      // and the documents axis of the scale ladder grows blocks linearly
+      // — the 100x rung spent 45+ min inside this one oracle. A pair
+      // shares >= 1 shingle IFF the posting join emits it, so the
+      // candidate set is IDENTICAL and the exact containment is computed
+      // per unique pair, same as before
+      Oracle("""WITH d AS (
+        |  SELECT doc_id, lang, source,
+        |    list_distinct(list_transform(
+        |      generate_series(1, greatest(len(t) - 2, 1)),
+        |      i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2])) AS sh
+        |  FROM (SELECT doc_id, lang, source,
+        |          regexp_split_to_array(lower(text), '\s+') AS t
+        |        FROM documents)),
+        |ex AS (SELECT doc_id, lang, source, unnest(sh) AS g FROM d),
+        |cand AS (SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
+        |  FROM ex a JOIN ex b ON a.g = b.g AND a.lang = b.lang
+        |    AND a.source = b.source AND a.doc_id < b.doc_id)
+        |SELECT id_a, id_b,
+        |  round(len(list_intersect(da.sh, db.sh))
+        |    / least(len(da.sh), len(db.sh)) + 1e-9, 4) AS containment
+        |FROM cand JOIN d da ON da.doc_id = cand.id_a
+        |  JOIN d db ON db.doc_id = cand.id_b
+        |ORDER BY containment DESC, id_a, id_b LIMIT 20""".stripMargin)),
+
+    // per-source one-vs-rest JS drift — the re-mixing report (q82 is
+    // the 2-slice case): one (source, token) shuffle, vocab-sized
+    // derivations, |sources|-bounded expansion. Every source scored in
+    // ONE plan, no per-source corpus passes
+    Query("q118_source_drift", (s, dir) =>
+      ext.TextOps.sourceDrift(t(s, dir, "documents"), "source", "text")
+        .orderBy(col("source")),
+      // one-vs-rest JS per source: same (group, token) counts, global
+      // vocab expanded against EVERY source (absent tokens contribute on
+      // the rest side), natural log, 4 dp with the +1e-9 nudge
+      Oracle("""WITH st AS (SELECT source AS g,
+        |    unnest(regexp_split_to_array(lower(text), '\s+')) AS tok
+        |  FROM documents),
+        |gt AS (SELECT g, tok, CAST(count(*) AS BIGINT) AS cg
+        |  FROM st GROUP BY 1, 2),
+        |gl AS (SELECT tok, CAST(sum(cg) AS BIGINT) AS ct
+        |  FROM gt GROUP BY 1),
+        |ngt AS (SELECT g, CAST(sum(cg) AS BIGINT) AS ng
+        |  FROM gt GROUP BY 1),
+        |ntt AS (SELECT CAST(sum(cg) AS BIGINT) AS nt FROM gt),
+        |ex AS (SELECT ngt.g, gl.tok, gl.ct, ngt.ng, ntt.nt,
+        |    COALESCE(gt.cg, 0) AS cg
+        |  FROM gl CROSS JOIN ngt CROSS JOIN ntt
+        |  LEFT JOIN gt ON gt.g = ngt.g AND gt.tok = gl.tok),
+        |terms AS (SELECT g, cg, ct,
+        |    cg / CAST(ng AS DOUBLE) AS p,
+        |    (ct - cg) / CAST(nt - ng AS DOUBLE) AS q
+        |  FROM ex)
+        |SELECT g AS source,
+        |  CAST(sum(cg) AS BIGINT) AS n_tokens,
+        |  CAST(sum(CASE WHEN cg > 0 THEN 1 ELSE 0 END) AS BIGINT)
+        |    AS vocab_terms,
+        |  round(sum(
+        |    CASE WHEN cg > 0 THEN p * ln(p / ((p + q) / 2)) / 2
+        |         ELSE 0 END +
+        |    CASE WHEN ct > cg THEN q * ln(q / ((p + q) / 2)) / 2
+        |         ELSE 0 END) + 1e-9, 4) AS js_div
+        |FROM terms GROUP BY g ORDER BY source""".stripMargin)),
+
+    // the retention policy a production dedup actually ships: within
+    // each near-dup CLUSTER (q78's transitive closure over the chained
+    // corpus) keep the highest-QUALITY member (q27's scorer), not the
+    // min-id one — composition of clustering + scoring, argmax via ONE
+    // struct-max aggregate (quality desc, id asc tie-break encoded as
+    // max(struct(quality, -id)) — no window over the member stream)
+    Query("q119_dedup_keep_best", (s, dir) => {
+      val members = ext.Dedup.duplicateClusters(chainPairList(s, dir))
+        .join(ext.TextOps.qualityScore(chainedCorpus(s, dir), "text")
+          .select(col("doc_id").as("id"), col("quality")), Seq("id"))
+      members.groupBy(col("cluster_id"))
+        .agg(count(lit(1)).as("n_members"),
+          max(struct(col("quality"), (-col("id")).as("_nid"))).as("_b"))
+        .select(col("cluster_id"),
+          (-col("_b._nid")).cast("long").as("kept_doc_id"),
+          col("_b.quality").as("quality"), col("n_members"))
+        .orderBy(col("cluster_id"))
+    },
+      // q78's recursive-CTE closure + q27's quality battery over the SAME
+      // chained corpus; argmax via row_number (quality desc, id asc) —
+      // identical tie-break to the Spark side's max(struct(quality, -id)).
+      // Pair generation is a shared-shingle POSTING JOIN, not all-pairs
+      // within (lang, source): any pair with Jaccard >= 0.6 > 0 shares a
+      // shingle, so the candidate set is exact — and it keeps the ORACLE
+      // itself scale-robust (the all-pairs form was ~32M list-intersects
+      // at the 10× corpus, hours in DuckDB; posting candidates are 146k,
+      // seconds — round-11 10× window sweep)
+      Oracle("""WITH RECURSIVE
+        |base AS (SELECT doc_id, lang, source, text FROM documents),
+        |m1 AS (SELECT doc_id + 100000 AS doc_id, lang, source,
+        |  array_to_string(list_slice(regexp_split_to_array(text, '\s+'), 1,
+        |    greatest((3 * len(regexp_split_to_array(text, '\s+'))) // 4,
+        |      1)), ' ') AS text
+        |  FROM base WHERE doc_id < 30),
+        |m2 AS (SELECT doc_id + 200000 AS doc_id, lang, source,
+        |  array_to_string(list_slice(regexp_split_to_array(text, '\s+'), 1,
+        |    greatest(len(regexp_split_to_array(text, '\s+')) // 2,
+        |      1)), ' ') AS text
+        |  FROM base WHERE doc_id < 30),
+        |corpus AS (SELECT * FROM base UNION ALL SELECT * FROM m1
+        |           UNION ALL SELECT * FROM m2),
+        |d AS (SELECT doc_id, lang, source,
+        |    list_distinct(list_transform(
+        |      generate_series(1, greatest(len(t) - 2, 1)),
+        |      i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2])) AS sh
+        |  FROM (SELECT doc_id, lang, source,
+        |          regexp_split_to_array(lower(text), '\s+') AS t
+        |        FROM corpus)),
+        |ex AS (SELECT doc_id, lang, source, unnest(sh) AS g FROM d),
+        |cand AS (SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
+        |  FROM ex a JOIN ex b ON a.g = b.g AND a.lang = b.lang
+        |    AND a.source = b.source AND a.doc_id < b.doc_id),
+        |pairs AS (
+        |  SELECT id_a, id_b FROM cand
+        |  JOIN d da ON da.doc_id = cand.id_a
+        |  JOIN d db ON db.doc_id = cand.id_b
+        |  WHERE len(list_intersect(da.sh, db.sh))
+        |        / len(list_distinct(da.sh || db.sh)) >= 0.6),
+        |edges AS (SELECT id_a AS src, id_b AS dst FROM pairs
+        |          UNION ALL SELECT id_b, id_a FROM pairs),
+        |nodes AS (SELECT DISTINCT src AS id FROM edges),
+        |reach(id, lbl) AS (
+        |  SELECT id, id FROM nodes
+        |  UNION
+        |  SELECT e.dst, r.lbl FROM reach r JOIN edges e ON e.src = r.id),
+        |cl AS (SELECT id, CAST(min(lbl) AS BIGINT) AS cluster_id
+        |  FROM reach GROUP BY id),
+        |f AS (SELECT doc_id,
+        |    CAST(len(toks) AS BIGINT) AS n_tokens,
+        |    round(len(list_filter(toks, t -> t IN
+        |      ('the','a','of','and','to','in','is','it','that','for')))
+        |      / greatest(len(toks), 1) + 1e-9, 4) AS stopword_ratio,
+        |    round(list_unique(toks) / greatest(len(toks), 1) + 1e-9, 4)
+        |      AS distinct_ratio,
+        |    round(length(regexp_replace(text, '[^[:punct:]]', '', 'g'))
+        |      / greatest(length(text), 1) + 1e-9, 4) AS punct_ratio
+        |  FROM (SELECT doc_id, text,
+        |          regexp_split_to_array(lower(text), '\s+') AS toks
+        |        FROM corpus)),
+        |qual AS (SELECT doc_id,
+        |    round(CASE WHEN n_tokens BETWEEN 5 AND 10000
+        |               THEN 0.4 ELSE 0.0 END
+        |      + 0.3 * distinct_ratio
+        |      + 0.2 * least(stopword_ratio * 2, 1.0)
+        |      + CASE WHEN punct_ratio < 0.2 THEN 0.1 ELSE 0.0 END
+        |      + 1e-9, 4) AS quality
+        |  FROM f),
+        |mem AS (SELECT cl.cluster_id, cl.id, qual.quality
+        |  FROM cl JOIN qual ON qual.doc_id = cl.id),
+        |sel AS (SELECT cluster_id, id, quality,
+        |    row_number() OVER (PARTITION BY cluster_id
+        |      ORDER BY quality DESC, id ASC) AS rn,
+        |    count(*) OVER (PARTITION BY cluster_id) AS n_members
+        |  FROM mem)
+        |SELECT cluster_id, CAST(id AS BIGINT) AS kept_doc_id, quality,
+        |  CAST(n_members AS BIGINT) AS n_members
+        |FROM sel WHERE rn = 1 ORDER BY cluster_id""".stripMargin)),
+
+    // bloom-prefiltered decontamination — the regime where the eval
+    // shingle set is too big to broadcast raw: ship its bloom filter
+    // (~10 bits/item), cut the corpus stream map-side in codegen, exact
+    // shuffle join over survivors only. No false negatives + exact
+    // verify → identical answer to q73 (same oracle SQL)
+    Query("q81_decontaminate_bloom", (s, dir) => {
+      val docs = t(s, dir, "documents")
+      ext.Dedup.decontaminateBloom(
+          docs.filter(col("doc_id") >= 5), docs.filter(col("doc_id") < 5),
+          "doc_id", "text", shingleN = 3)
+        .orderBy(col("doc_id"))
+    },
+      // bloom prefilter + exact verify computes the SAME answer as the
+      // exact broadcast formulation — one oracle serves both
+      Oracle(decontaminationOracle)),
+
+    // perplexity-style quality signal: add-one-smoothed corpus unigram
+    // LM, per-doc mean token log-prob. Declared in the 100 TB shape —
+    // top-500 broadcast vocabulary, tail scored as OOV (truncation is
+    // deterministic: count desc, token asc — so still oracle-exact)
+    Query("q80_unigram_logprob", (s, dir) =>
+      ext.TextOps.unigramLogProb(t(s, dir, "documents"), "doc_id", "text",
+          vocabSize = 500)
+        .orderBy(col("doc_id")),
+      // same add-one smoothing and deterministic top-500 vocabulary cut
+      // (count desc, token asc) as the Spark side; ln = natural log
+      // (DuckDB log() is base 10); N and V come from the FULL vocabulary
+      Oracle("""WITH toks AS (SELECT doc_id,
+        |    unnest(regexp_split_to_array(lower(text), '\s+')) AS tok
+        |  FROM documents),
+        |counts AS (SELECT tok, count(*) AS c FROM toks GROUP BY tok),
+        |tot AS (SELECT sum(c) AS n, count(*) AS v FROM counts),
+        |vocab AS (SELECT tok, c FROM counts ORDER BY c DESC, tok LIMIT 500)
+        |SELECT t.doc_id, CAST(count(*) AS BIGINT) AS n_tokens,
+        |  round(avg(ln((COALESCE(v.c, 0) + 1.0) / (tot.n + tot.v)))
+        |    + 1e-9, 4) AS avg_logprob
+        |FROM toks t LEFT JOIN vocab v ON t.tok = v.tok CROSS JOIN tot
+        |GROUP BY t.doc_id ORDER BY t.doc_id""".stripMargin)),
+
+    // conditional bigram LM: catches broken word ORDER that the
+    // unigram score (q80) cannot; same add-one smoothing family
+    Query("q97_bigram_logprob", (s, dir) =>
+      ext.TextOps.bigramLogProb(t(s, dir, "documents"), "doc_id", "text")
+        .orderBy(col("doc_id")),
+      // same positional bigrams (1-indexed t[i], t[i+1]), context counts
+      // over ALL occurrences (including sentence-final), ln natural
+      Oracle("""WITH d AS (SELECT doc_id,
+        |    regexp_split_to_array(lower(text), '\s+') AS t
+        |  FROM documents),
+        |pr AS (SELECT doc_id, unnest(list_transform(
+        |    generate_series(1, len(t) - 1),
+        |    i -> {'w1': t[i], 'w2': t[i + 1]})) AS bg
+        |  FROM d WHERE len(t) >= 2),
+        |pairs AS (SELECT doc_id, bg.w1 AS w1, bg.w2 AS w2 FROM pr),
+        |bc AS (SELECT w1, w2, count(*) AS cb FROM pairs GROUP BY 1, 2),
+        |uc AS (SELECT w1, count(*) AS cu FROM (
+        |    SELECT unnest(t) AS w1 FROM d) GROUP BY w1),
+        |v AS (SELECT count(*) AS v FROM uc)
+        |SELECT p.doc_id, CAST(count(*) AS BIGINT) AS n_bigrams,
+        |  round(avg(ln((cb + 1.0) / (cu + v))) + 1e-9, 4) AS avg_logprob
+        |FROM pairs p JOIN bc USING (w1, w2) JOIN uc USING (w1)
+        |  CROSS JOIN v
+        |GROUP BY p.doc_id ORDER BY p.doc_id""".stripMargin)),
+
+    // corpus-mix drift: Jensen-Shannon divergence between the token
+    // distributions of the English slice vs the rest — one token-keyed
+    // shuffle + a map-side totals aggregate, single-row output
+    Query("q82_token_divergence", (s, dir) =>
+      ext.TextOps.tokenDistributionDivergence(
+        t(s, dir, "documents"), "text", col("lang") === "en"),
+      // same JS formula and IEEE op order as the Spark side: p = c/N
+      // (double division), m = (pa+pb)/2, ln = natural log, zero-count
+      // terms contribute 0; single row so GROUP BY the constants
+      Oracle("""WITH toks AS (SELECT (lang = 'en') AS a,
+        |    unnest(regexp_split_to_array(lower(text), '\s+')) AS tok
+        |  FROM documents),
+        |counts AS (SELECT tok,
+        |    sum(CASE WHEN a THEN 1 ELSE 0 END) AS ca,
+        |    sum(CASE WHEN a THEN 0 ELSE 1 END) AS cb
+        |  FROM toks GROUP BY tok),
+        |tot AS (SELECT
+        |    sum(CASE WHEN lang = 'en'
+        |      THEN len(regexp_split_to_array(lower(text), '\s+'))
+        |      ELSE 0 END) AS na,
+        |    sum(CASE WHEN lang = 'en' THEN 0
+        |      ELSE len(regexp_split_to_array(lower(text), '\s+'))
+        |      END) AS nb
+        |  FROM documents)
+        |SELECT CAST(na AS BIGINT) AS n_tokens_a,
+        |  CAST(nb AS BIGINT) AS n_tokens_b,
+        |  CAST(sum(CASE WHEN ca > 0 THEN 1 ELSE 0 END) AS BIGINT)
+        |    AS vocab_a,
+        |  CAST(sum(CASE WHEN cb > 0 THEN 1 ELSE 0 END) AS BIGINT)
+        |    AS vocab_b,
+        |  round(sum(
+        |    CASE WHEN ca > 0 THEN (ca / CAST(na AS DOUBLE))
+        |      * ln((ca / CAST(na AS DOUBLE))
+        |        / ((ca / CAST(na AS DOUBLE) + cb / CAST(nb AS DOUBLE))
+        |           / 2)) / 2 ELSE 0 END
+        |    + CASE WHEN cb > 0 THEN (cb / CAST(nb AS DOUBLE))
+        |      * ln((cb / CAST(nb AS DOUBLE))
+        |        / ((ca / CAST(na AS DOUBLE) + cb / CAST(nb AS DOUBLE))
+        |           / 2)) / 2 ELSE 0 END) + 1e-9, 4) AS js_div
+        |FROM counts, tot GROUP BY na, nb""".stripMargin)),
+
+    // keyword extraction: top-3 tokens per doc by smoothed TF-IDF;
+    // ranking window rides the high-cardinality doc id and compares the
+    // ROUNDED score (cross-engine-stable rank)
+    Query("q84_tfidf_terms", (s, dir) =>
+      ext.TextOps.tfidfTopTerms(t(s, dir, "documents"), "doc_id", "text",
+          k = 3)
+        .orderBy(col("doc_id"), col("rank")),
+      // same smoothed idf and the same ROUNDED-score rank ordering as the
+      // Spark side (rounding before ranking keeps rank engine-stable)
+      Oracle("""WITH toks AS (SELECT doc_id,
+        |    unnest(regexp_split_to_array(lower(text), '\s+')) AS tok
+        |  FROM documents),
+        |tf AS (SELECT doc_id, tok, count(*) AS tf FROM toks GROUP BY 1, 2),
+        |dfq AS (SELECT tok, count(*) AS df FROM tf GROUP BY tok),
+        |n AS (SELECT count(*) AS n FROM documents),
+        |scored AS (SELECT doc_id, tok,
+        |    round(tf * (ln((n + 1.0) / (df + 1.0)) + 1.0) + 1e-9, 4)
+        |      AS score
+        |  FROM tf JOIN dfq USING (tok) CROSS JOIN n)
+        |SELECT doc_id, tok AS term, CAST(rank AS BIGINT) AS rank, score
+        |FROM (SELECT doc_id, tok, score, row_number() OVER (
+        |    PARTITION BY doc_id ORDER BY score DESC, tok) AS rank
+        |  FROM scored)
+        |WHERE rank <= 3 ORDER BY doc_id, rank""".stripMargin)),
+
+    // video-style frame sampling, decode AFTER sample: treat each
+    // document's bytes as a frame stream (16-byte frames, stride 2 —
+    // every second frame), slice the sampled windows out of the binary
+    // WITHOUT decoding (sampleFrames), then run the per-frame feature
+    // on the sampled frames only — the IDR-frame pattern of a real
+    // video pipeline, where decode cost dominates and must never run
+    // on skipped frames. The oracle recomputes the same windows
+    // arithmetically (docs are ASCII, so byte and char offsets agree)
+    Query("q111_frame_sample", (s, dir) => {
+      val sampled = ext.Multimodal.sampleFrames(
+        ext.Multimodal.asBlob(col("text")), frameBytes = 16, stride = 2)
+      t(s, dir, "documents")
+        .select(col("doc_id"),
+          posexplode(sampled).as(Seq("frame_idx", "_fb")))
+        .withColumn("_fs", decode(col("_fb"), "UTF-8"))
+        .select(col("doc_id"),
+          col("frame_idx").cast("long").as("frame_idx"),
+          length(col("_fs")).cast("long").as("frame_len"),
+          aggregate(
+            transform(sequence(lit(1), length(col("_fs"))),
+              i => ascii(col("_fs").substr(i, lit(1))).cast("long")),
+            lit(0L), (acc, x) => acc + x).as("byte_sum"))
+        .orderBy(col("doc_id"), col("frame_idx"))
+    },
+      // same stride-2 16-byte windows recomputed arithmetically; empty
+      // frames sum to 0 (Spark's descending sequence(1,0) folds ascii('')
+      // = 0 twice; DuckDB's empty list_sum is NULL → coalesce)
+      Oracle("""WITH f AS (SELECT doc_id, text,
+        |    unnest(generate_series(0,
+        |      greatest(CAST(floor(length(text) / 32) AS BIGINT) - 1, 0)))
+        |      AS k
+        |  FROM documents),
+        |fr AS (SELECT doc_id, k,
+        |    substring(text, CAST(k * 32 + 1 AS INT), 16) AS s FROM f)
+        |SELECT doc_id, CAST(k AS BIGINT) AS frame_idx,
+        |  CAST(length(s) AS BIGINT) AS frame_len,
+        |  CAST(coalesce(list_sum(list_transform(
+        |    generate_series(1, length(s)),
+        |    i -> ascii(substring(s, i, 1)))), 0) AS BIGINT) AS byte_sum
+        |FROM fr ORDER BY doc_id, frame_idx""".stripMargin)),
+
+    // typo/variant name pairs via the exact SymSpell deletion-
+    // neighborhood join — no all-pairs scan, no blocking recall loss
+    Query("q91_fuzzy_names", (s, dir) =>
+      ext.Dedup.fuzzyNamePairs(t(s, dir, "part"), "p_name")
+        .orderBy(col("name_a"), col("name_b")),
+      // brute-force formulation — the deletion-neighborhood join is an
+      // exact-recall optimization, so the naive all-pairs SQL is the
+      // ground truth it must reproduce bit-for-bit
+      Oracle("""WITH n AS (SELECT DISTINCT p_name FROM part)
+        |SELECT a.p_name AS name_a, b.p_name AS name_b,
+        |  CAST(levenshtein(a.p_name, b.p_name) AS BIGINT) AS dist
+        |FROM n a JOIN n b ON a.p_name < b.p_name
+        |WHERE levenshtein(a.p_name, b.p_name) <= 1
+        |ORDER BY name_a, name_b""".stripMargin))
+  )
+}

@@ -47,8 +47,7 @@ object Tables {
     *     where splits >> cores, so production plans are untouched by
     *     construction;
     *   - the input estimate is at least `minBytes`
-    *     (`SPARK_GRAFT_FANOUT_MIN_BYTES` env, then
-    *     `spark.graft.scan.fanout.minBytes` conf, default 256 KiB) —
+    *     (`spark.graft.scan.fanout.minBytes` conf, default 256 KiB) —
     *     a dimension-sized frame stays put.
     *
     * Row-to-partition placement is Spark's deterministic round-robin
@@ -91,8 +90,7 @@ object Tables {
   def fanOutForMapWork(df: DataFrame): DataFrame = {
     val spark = df.sparkSession
     val target = spark.sparkContext.defaultParallelism
-    val minBytes = sys.env.get("SPARK_GRAFT_FANOUT_MIN_BYTES")
-      .orElse(spark.conf.getOption("spark.graft.scan.fanout.minBytes"))
+    val minBytes = spark.conf.getOption("spark.graft.scan.fanout.minBytes")
       .flatMap { v =>
         val parsed = scala.util.Try(v.trim.toLong).toOption
         if (parsed.isEmpty)

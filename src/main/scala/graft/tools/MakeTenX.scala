@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Build the 10× scale-smoke dataset PLANS.md's growth tables use:
@@ -57,12 +57,7 @@ object MakeTenX {
     val src = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
     val dest = if (args.length > 1) args(1) else "/tmp/sf1"
     val copies = if (args.length > 2) args(2).toInt else 10
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = graft.core.GraftSession.tuned(
-      SparkSession.builder().master(s"local[$cpus]").appName("graft-10x"),
-      shufflePartitions = cpus.toInt
-    ).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.GraftSession.local(appName = "graft-10x")
 
     def load(t: String): DataFrame =
       spark.read.parquet(s"$src/$t.parquet")

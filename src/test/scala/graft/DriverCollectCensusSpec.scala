@@ -42,7 +42,7 @@ class DriverCollectCensusSpec extends org.scalatest.funsuite.AnyFunSuite {
         "codebooks and bounds (2×d / k×d²ᵇ), MMR candidate pool " +
         "(candidate-bounded ≤ poolK), plus one head() on a 1-row " +
         "embedding-dimension probe")),
-    "graft/SparkEntry.scala" -> ((2,
+    "graft/queries/RelationalQueries.scala" -> ((2,
       "q289 PCA power iteration: the d×d=64² Gram matrix — one " +
         "aggregate row per matrix CELL, corpus-independent; one " +
         "head() on a 1-row agg(max,max) key-bound probe")),
@@ -59,10 +59,10 @@ class DriverCollectCensusSpec extends org.scalatest.funsuite.AnyFunSuite {
     * guessing, every argful site is COUNT-PINNED per file. All 15
     * current sites are Scala-collection receivers (reviewed per
     * site): Bench's top-10 sort of an in-driver seconds list,
-    * SparkEntry's string prefixes (PGM/WAV fixture synthesis),
+    * the text queries' string prefixes (PGM/WAV fixture synthesis),
     * Staging's byte-array/string prefixes (digest hex, a tmp-dir
     * name), MakeTenX's alphabet
-    * rotation, BroadcastProbe's schema-name label, and the top-k
+    * rotation, the Cli hints table's schema-name label, and the top-k
     * aggregators' bounded buffer merges. ZERO are Dataset-typed — a
     * Dataset take(n) ships n rows to the driver and would need a
     * named bound here like the argless forms above. A new site (or a
@@ -74,15 +74,15 @@ class DriverCollectCensusSpec extends org.scalatest.funsuite.AnyFunSuite {
       "top-10 selection over the in-driver per-query seconds list; " +
         "failedAll.take(5) — first five names from the in-driver " +
         "failed-query Seq[String] for the broken-run stderr message")),
-    "graft/SparkEntry.scala" -> ((2,
+    "graft/queries/TextQueries.scala" -> ((2,
       "string prefixes: PGM/WAV fixture text (2)")),
     "graft/core/Staging.scala" -> ((3,
       "byte-array/string prefixes: digest hex truncations (2), a UUID " +
         "tmp-dir suffix (1)")),
     "graft/tools/MakeTenX.scala" -> ((1,
       "alphabet-string rotation for replica text mutation")),
-    "graft/tools/BroadcastProbe.scala" -> ((1,
-      "schema field-name prefix for a diagnostic label")),
+    "graft/tools/Cli.scala" -> ((1,
+      "schema field-name prefix for the hints table label")),
     "graft/functions/TopKScored.scala" -> ((3,
       "k-bounded aggregation buffer (Array) inserts/merges")),
     "graft/functions/TopKAggregator.scala" -> ((3,

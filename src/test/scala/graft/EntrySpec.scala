@@ -6,20 +6,31 @@ class EntrySpec extends SparkTestBase {
     assert(SparkEntry.entry(spark).count() > 0)
   }
 
-  test("every declared query has an oracle or is explicitly rows-only") {
-    val missing = SparkEntry.queries.keySet -- SparkEntry.oracleSql.keySet
-    // rows-only queries (non-SQL-expressible) are allowed but tracked here
-    assert(missing.forall(n => SparkEntry.rowsOnly.contains(n)),
-      s"queries without oracle or rowsOnly tag: ${missing -- SparkEntry.rowsOnly}")
-    assert((SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet).isEmpty,
-      "oracle entries without a query")
+  test("the query, oracle and rows-only views agree") {
+    val names = SparkEntry.queries.keySet
+    val oracled = SparkEntry.oracleSql.keySet
+    assert(names === oracled ++ SparkEntry.rowsOnly)
+    assert((oracled intersect SparkEntry.rowsOnly).isEmpty)
+    assert((names.size, oracled.size, SparkEntry.rowsOnly.size) === ((298, 289, 9)))
+  }
+
+  test("every rows-only query names pinning specs that exist") {
+    val pins = SparkEntry.registry.collect {
+      case queries.Query(n, _, queries.RowsOnly(specs)) => n -> specs
+    }
+    pins.foreach { case (n, specs) =>
+      withClue(s"$n: ") {
+        assert(specs.nonEmpty)
+        specs.foreach(c => Class.forName(s"graft.$c"))
+      }
+    }
   }
 
   test("short qNN prefixes are unique across declared queries") {
-    // every bench artifact and CountQ's tiered resolution key on the
-    // short prefix ("q29" for q29_fingerprint); a duplicate would emit
-    // colliding JSON keys in Bench's per-query maps and silently
-    // reintroduce nondeterministic name resolution (ADVICE r16)
+    // every bench artifact and the name resolver key on the short
+    // prefix ("q29" for q29_fingerprint); a duplicate would emit
+    // colliding JSON keys in Bench's per-query maps and make a short
+    // name ambiguous (ADVICE r16)
     val dup = SparkEntry.queries.keys.toSeq
       .groupBy(_.takeWhile(_ != '_')).filter(_._2.size > 1)
     assert(dup.isEmpty, s"duplicate short prefixes: $dup")

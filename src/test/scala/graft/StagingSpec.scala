@@ -19,7 +19,7 @@ class StagingSpec extends SparkTestBase {
 
   test("a staged stream result leaves exactly its published directory " +
     "and no sink directory behind") {
-    val src = SparkEntry.stagedEventStreamSrc(spark, sf)
+    val src = graft.queries.StreamingQueries.stagedEventStreamSrc(spark, sf)
     val name = s"spec_stream_${System.nanoTime()}"
     val before = graftEntries
     val out = SparkEntry.stagedStream(spark, sf, name) { out =>
@@ -44,7 +44,7 @@ class StagingSpec extends SparkTestBase {
     val dest = Staging.dirFor(sf, "events", "q64_src")
     // force the build path: stamp in tmp, then rename
     FileUtils.deleteQuietly(dest)
-    val src = SparkEntry.stagedEventStreamSrc(spark, sf)
+    val src = graft.queries.StreamingQueries.stagedEventStreamSrc(spark, sf)
     assert(src === dest)
     val mtimes = src.listFiles().filter(_.getName.startsWith("part-"))
       .sortBy(_.getName).map(_.lastModified()).toSeq

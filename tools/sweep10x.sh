@@ -20,10 +20,10 @@
 #   3. The EXCLUDED set below is stripped from oracle_sql.json.
 #   4. check_oracle.py runs the remaining oracles in DuckDB
 #      (directory-parquet aware) and compares. Success = exit 0 =
-#      "0 mismatching / N total" with N = 284 at the current surface.
+#      "0 mismatching / N total" with N = 289 - 4 = 285 at the current surface.
 #
 # Exclusions, with rationale (each encoded here, not in prose):
-#   - The 8 rowsOnly queries (no DuckDB-expressible oracle; xxhash64 /
+#   - The 9 rows-only queries (no DuckDB-expressible oracle; xxhash64 /
 #     ALS internals / trained codebooks) are already absent from
 #     oracle_sql.json -- nothing to strip.
 #   - q33/q66/q137/q267: their ORACLES are quadratic all-pairs
