@@ -243,31 +243,6 @@ object SparkEntry {
         pairs.select(col("item_b").as("src"), col("item_a").as("dst")))
   }
 
-  /** SESSION-SHARED persisted projections of the co-engagement graph.
-    * Round 8 measured each graph query re-deriving the same tiny frames
-    * — edge projection and node set (~42k/4k rows at sf0.1) — per
-    * swept-cold call, ~2.5 s of fixed rebuild per query, because every
-    * operator persisted AND released its own helpers (the correct
-    * lifecycle for arbitrary caller graphs). Ownership moves up here:
-    * graph queries call this first, [[graft.core.Caches.cached]]
-    * re-registers the entries after a cache sweep (lazily — no extra
-    * jobs; the next operator action populates them), and the operators'
-    * cached-detection acquire ([[ext.Graph.edgeProj]]/nodesOf build the
-    * IDENTICAL canonical plans, so Spark's cache manager matches) leaves
-    * these caller-owned frames alone. q86's PageRank takes the plain
-    * [[coengagementEdges]] instead: the walk reads its input once, into
-    * its own adjacency, so it neither needs nor populates these frames.
-    * Bounded: two item-vocabulary-sized frames for the session's
-    * lifetime.
-    */
-  private[graft] def coengagementGraphWarm(s: SparkSession, dir: String)
-  : DataFrame = {
-    val edges = coengagementEdges(s, dir)
-    core.Caches.cached(ext.Graph.nodesOf(
-      core.Caches.cached(ext.Graph.edgeProj(edges))))
-    edges
-  }
-
   /** Shared oracle: the chained corpus (75%/50% prefix copies),
     * exact 3-gram Jaccard >= 0.6 pairs, and the recursive
     * transitive-closure CTE down to `reach(id, lbl)` - the ground
@@ -338,7 +313,7 @@ object SparkEntry {
       |     FROM events))""".stripMargin
 
   /** The CHAINED near-dup pair list shared by q78 (min-label
-    * propagation), q112 (alternating star), and q119 (cluster scoring)
+    * propagation), q112 (the same closure), and q119 (cluster scoring)
     * — doc ~ 75%-prefix copy ~ 50%-prefix copy, where doc↔50% falls
     * below the threshold, so the transitive closure is load-bearing.
     * Staged via [[Staging.frame]] (parquet built once per documents

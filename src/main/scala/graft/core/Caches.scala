@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 
 /** Cache-lifecycle helper for iterative/multi-reference operators.
   *
-  * The pattern (same as [[graft.ext.Dedup.duplicateClusters]]): an
+  * The pattern (as in [[graft.ext.Graph.adamicAdar]]): an
   * operator that caches helper frames (edge lists, capped baskets,
   * vocabularies) referenced several times by its output plan must
   * MATERIALIZE the output while those caches are live, then release

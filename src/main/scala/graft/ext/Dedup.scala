@@ -483,214 +483,21 @@ object Dedup {
     * representative per chain (A~B, B~C ⇒ {A,B,C} is one cluster even
     * though A≁C directly).
     *
-    * Each round: newLabel(v) = min(label(v), min over neighbors'
-    * labels) — one shuffle on the edge key and one on the node id per
-    * round, each round's frame run through an eager `localCheckpoint`
-    * so the logical plan stays ONE round deep (the round function
-    * references its predecessor twice — nbrMin and the join back — so
-    * a cache-only loop doubles the plan per round and a long
-    * non-convergent run OOMs the DRIVER in analysis before the
-    * convergence guard can fire; checkpointing truncates that, see
-    * [[duplicateClustersAltStar]]'s lineage note and the 64-node-path
-    * DedupSpec case). Converges in O(component diameter) rounds, NOT
-    * corpus size: near-dup chains are short (a 100 TB corpus has
-    * billions of SMALL clusters, not one long path), so 3–5 rounds is
-    * typical; `maxIter` bounds the pathological path-graph. (At extreme
-    * diameters, alternating large-star/small-star halves path lengths
-    * per round for O(log d) — same per-round plan, different edge
-    * rewrite; this implementation keeps the simpler propagation.)
+    * Runs on [[Graph]]'s vertex-program kernel: each round, the nodes
+    * whose label moved send it to their neighbours and every node keeps
+    * the least label it holds or receives; one small reduce per round
+    * counts the moves, and each round's state is local-checkpointed.
+    * Converges in O(component diameter) rounds, NOT corpus size:
+    * near-dup chains are short (a 100 TB corpus has billions of SMALL
+    * clusters, not one long path), so 3–5 rounds is typical, and a
+    * pathological long chain costs one cheap stage per hop.
     *
     * Input: pairs with (id_a, id_b) columns (any generator above).
     * Output: (id, cluster_id) for every id that appears in a pair —
     * isolated docs aren't duplicated, so they're not in any cluster.
-    *
-    * If a component's diameter exceeds `maxIter` the loop exits with
-    * labels still moving and the transitive-closure contract does NOT
-    * hold; that is a data-shape surprise worth failing loudly on, so
-    * the exit path throws unless the caller opts into best-effort
-    * labels with `failOnNonConvergence = false` (which logs instead).
-    *
-    * `checkpointDir`: when set, rounds truncate through FAULT-TOLERANT
-    * `checkpoint()` into that directory (the cluster choice — blocks
-    * survive executor loss); when None, eager `localCheckpoint()`
-    * (fast, executor-local — fine for local/driver-resilient runs).
-    * Either way each round's storage is RELEASED as soon as the next
-    * round has materialized, so a high-maxIter run holds one round of
-    * labels, not O(iterations) of them.
     */
-  /** Eager plan-truncating checkpoint for the component loops: reliable
-    * `checkpoint()` into `checkpointDir` when set (fault-tolerant — the
-    * multi-executor-cluster choice), eager `localCheckpoint()` otherwise
-    * (fast, executor-local). Both truncate the logical plan to the
-    * stored blocks, which is what the loops need; the context checkpoint
-    * dir is set once if unset (Spark qualifies and sub-dirs it, so a
-    * string compare against getCheckpointDir would never match).
-    */
-  private[ext] def truncated(df: DataFrame, checkpointDir: Option[String])
-  : DataFrame = checkpointDir match {
-    case Some(d) =>
-      val sc = df.sparkSession.sparkContext
-      if (sc.getCheckpointDir.isEmpty) sc.setCheckpointDir(d)
-      df.checkpoint()
-    case None => df.localCheckpoint()
-  }
-
-  def duplicateClusters(pairs: DataFrame, maxIter: Int = 20,
-                        failOnNonConvergence: Boolean = true,
-                        checkpointDir: Option[String] = None): DataFrame = {
-    val edges = truncated(pairs.select(col("id_a").as("src"), col("id_b").as("dst"))
-      .union(pairs.select(col("id_b").as("src"), col("id_a").as("dst"))),
-      checkpointDir)
-    var labelsCkpt = truncated(edges.select(col("src").as("id")).distinct()
-      .select(col("id"), col("id").as("cluster_id")), checkpointDir)
-    var labels = labelsCkpt
-    var iter = 0
-    var converged = false
-    while (!converged && iter < maxIter) {
-      // min label among each node's neighbors (labels keyed to the edge
-      // source; name-based joins, so the edges↔labels self-lineage
-      // resolves cleanly after Spark's relation dedup)
-      val nbrMin = edges
-        .join(labels.select(col("id").as("src"),
-          col("cluster_id").as("_lbl")), Seq("src"))
-        .groupBy(col("dst").as("id")).agg(min(col("_lbl")).as("_nbr_min"))
-      val next = truncated(labels.join(nbrMin, Seq("id"), "left")
-        .select(col("id"),
-          least(col("cluster_id"),
-            coalesce(col("_nbr_min"), col("cluster_id"))).as("cluster_id"),
-          (coalesce(col("_nbr_min"), col("cluster_id"))
-            < col("cluster_id")).as("_changed")),
-        checkpointDir)
-      converged = next.filter(col("_changed")).count() == 0L
-      // next is materialized (eager checkpoint) and the convergence test
-      // is done — the previous round's blocks are dead, release them
-      org.apache.spark.sql.graftbridge.Bridge.releaseCheckpoint(labelsCkpt)
-      labelsCkpt = next
-      labels = next.select(col("id"), col("cluster_id"))
-      iter += 1
-    }
-    // the returned labels frame reads only the FINAL round's blocks —
-    // the edge list is loop-internal, release it
-    org.apache.spark.sql.graftbridge.Bridge.releaseCheckpoint(edges)
-    if (!converged) {
-      val msg = s"duplicateClusters did not converge in $maxIter rounds: " +
-        "a component's diameter exceeds maxIter and cluster_id is NOT the " +
-        "transitive-closure minimum. Raise maxIter (rounds scale with " +
-        "component diameter, not corpus size)."
-      if (failOnNonConvergence) throw new IllegalStateException(msg)
-      else org.slf4j.LoggerFactory.getLogger(getClass).warn(msg)
-    }
-    labels
-  }
-
-  /** Connected components via the ALTERNATING large-star / small-star
-    * algorithm (Kiveris et al., "Connected Components in MapReduce and
-    * Beyond", SoCC'14) — the O(log d) twin of [[duplicateClusters]]'s
-    * O(diameter) min-label propagation, for the pathological corpus
-    * whose near-dup chains are LONG (crawl rings, template drift):
-    * path lengths halve per round instead of shrinking by one.
-    *
-    * Edges are kept canonical (hi > lo). Per round:
-    *   - large-star: every neighbor v > u re-points to
-    *     m(u) = min(Γ(u) ∪ {u}) — hubs collapse toward their minimum;
-    *   - small-star: every neighbor v ≤ u (and u itself) re-points to
-    *     the minimum of that set — local stars flatten.
-    * Both are one groupBy(min) + one equi-join on the node id, the
-    * same shuffle class as a propagation round.
-    *
-    * Lineage: unlike the propagation loop (whose round function
-    * references its predecessor ONCE — linear plan growth, caching
-    * suffices), each star round references the previous edge set ~12
-    * times (two union branches × the min-join × both star phases), so
-    * a cached-only loop builds an EXPONENTIALLY growing logical plan —
-    * measured 36k parquet-scan nodes by round 2, with driver-side
-    * analysis dwarfing execution. Every round therefore runs through
-    * `localCheckpoint` (eager): the frame materializes and its plan is
-    * TRUNCATED to the stored blocks, keeping each round's plan one
-    * round deep. The trade (documented Spark semantics): local
-    * checkpoints are not fault-tolerant — on a cluster that must
-    * survive executor loss, pass `checkpointDir` and every round runs
-    * through reliable `checkpoint()` instead; the algorithm is
-    * unchanged. Each round's storage (both star phases) is RELEASED
-    * once the next round has materialized — the loop holds one round
-    * of edges, not O(iterations) of them.
-    *
-    * Same input/output contract as [[duplicateClusters]]: (id,
-    * cluster_id = component min) for every id appearing in a pair.
-    */
-  def duplicateClustersAltStar(pairs: DataFrame, maxIter: Int = 12,
-                               failOnNonConvergence: Boolean = true,
-                               checkpointDir: Option[String] = None)
-  : DataFrame = {
-    val init = truncated(pairs
-      .select(greatest(col("id_a"), col("id_b")).as("hi"),
-        least(col("id_a"), col("id_b")).as("lo"))
-      .filter(col("hi") =!= col("lo")).distinct(),
-      checkpointDir)
-    val nodes = truncated(init.select(col("hi").as("id"))
-      .union(init.select(col("lo").as("id"))).distinct(),
-      checkpointDir)
-    var edges = init
-    var iter = 0
-    var converged = false
-    while (!converged && iter < maxIter) {
-      // large-star: every neighbor v > u re-points to min(Γ(u) ∪ {u})
-      val nb = edges.select(col("hi").as("u"), col("lo").as("v"))
-        .union(edges.select(col("lo").as("u"), col("hi").as("v")))
-      val mL = nb.groupBy(col("u")).agg(min(col("v")).as("_mn"))
-        .select(col("u"), least(col("_mn"), col("u")).as("_m"))
-      // each row carries a `_ch` rewiring flag instead of the old
-      // count+except set-equality test: zero flags ⟺ both phases were
-      // the identity ⟺ next = edges (every rewiring strictly decreases
-      // an edge lexicographically — large-star lowers lo to m(u) < u,
-      // small-star lowers lo to _m < lo or emits a smaller-hi edge —
-      // so a changed row can never reproduce the input set: the
-      // lexicographically largest edge is only producible by itself,
-      // unchanged, and induction descends from there). One filtered
-      // count over the checkpointed round replaces the two-to-three
-      // jobs the except-based test ran per round. distinct() becomes
-      // groupBy(max) so duplicate placements keep the flag if ANY
-      // contributor rewired.
-      val ls = truncated(nb.join(mL, Seq("u")).filter(col("v") > col("u"))
-        .select(col("v").as("hi"), col("_m").as("lo"),
-          (col("_m") =!= col("u")).as("_ch"))
-        .groupBy(col("hi"), col("lo")).agg(max(col("_ch")).as("_ch")),
-        checkpointDir)
-      // small-star over the canonical (hi > lo) edges: every lo-side
-      // neighbor (and hi itself) re-points to the neighborhood minimum
-      val mS = ls.groupBy(col("hi")).agg(min(col("lo")).as("_m"))
-      val withM = ls.join(mS, Seq("hi"))
-      val next = truncated(withM.filter(col("lo") =!= col("_m"))
-        .select(col("lo").as("hi"), col("_m").as("lo"),
-          lit(true).as("_ch"))
-        .union(withM.select(col("hi"), col("_m").as("lo"),
-          (col("_ch") || col("_m") =!= col("lo")).as("_ch")))
-        .groupBy(col("hi"), col("lo")).agg(max(col("_ch")).as("_ch")),
-        checkpointDir)
-      converged = next.filter(col("_ch")).count() == 0L
-      // next is materialized and the fixpoint test has read the previous
-      // round — release the round's scratch (large-star intermediate)
-      // and the predecessor edge set (round 0's `init` has already
-      // seeded `nodes`, itself checkpointed, so it is safe to drop too)
-      org.apache.spark.sql.graftbridge.Bridge.releaseCheckpoint(ls)
-      org.apache.spark.sql.graftbridge.Bridge.releaseCheckpoint(edges)
-      edges = next
-      iter += 1
-    }
-    val out = nodes
-      .join(edges.select(col("hi").as("id"), col("lo").as("_cl")),
-        Seq("id"), "left")
-      .groupBy(col("id")).agg(min(col("_cl")).as("_cl"))
-      .select(col("id"), coalesce(col("_cl"), col("id")).as("cluster_id"))
-    if (!converged) {
-      val msg = s"duplicateClustersAltStar did not converge in $maxIter " +
-        "rounds (log-diameter bound exceeded — astronomically unlikely " +
-        "on real graphs). Raise maxIter."
-      if (failOnNonConvergence) throw new IllegalStateException(msg)
-      else org.slf4j.LoggerFactory.getLogger(getClass).warn(msg)
-    }
-    out
-  }
+  def duplicateClusters(pairs: DataFrame): DataFrame =
+    Graph.components(pairs, "id_a", "id_b")
 
   /** Exact pairwise shingle-Jaccard via an inverted index: explode each
     * doc's distinct shingles into postings, equi-join postings on the

@@ -2,6 +2,7 @@ package graft.ext
 
 import scala.collection.mutable
 import scala.jdk.CollectionConverters._
+import scala.reflect.ClassTag
 
 import org.apache.spark.HashPartitioner
 import org.apache.spark.rdd.RDD
@@ -9,46 +10,15 @@ import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-/** Graph analytics over plain (src, dst) edge DataFrames — the iterative
-  * join workload Spark was built for. Connected components lives in
-  * [[Dedup.duplicateClusters]] (it is a dedup primitive there); this
-  * module holds scoring/centrality.
+/** Graph analytics over plain (src, dst) edge DataFrames. Every iterative
+  * loop — the three walks, [[labelPropagation]], [[hits]], [[bfsHops]],
+  * [[kCore]] and the connected components behind
+  * [[Dedup.duplicateClusters]] — is a vertex program on one kernel,
+  * [[superstep]], over [[walkGraph]]'s CSR blocks. The neighbourhood
+  * statistics (triangles, Adamic–Adar, clustering, Jaccard,
+  * assortativity) are plain DataFrame plans.
   */
 object Graph {
-
-  /** Canonical projection builders for the helper frames the join-based
-    * operators here ([[labelPropagation]], [[hits]], [[bfsHops]]) derive
-    * from their edge input. They exist so a CALLER can pre-persist
-    * exactly these plans (a session-scoped graph context —
-    * [[graft.SparkEntry.coengagementGraphWarm]]): Spark's cache manager
-    * matches by canonicalized plan, so an operator's internal
-    * [[acquire]] of the same projection becomes a cache HIT and the
-    * operator leaves the frame's lifecycle to its owner. Without a
-    * pre-warmed context each operator persists and releases its own
-    * helpers. The sum-of-messages walks ([[pageRank]] and friends) read
-    * their edge input exactly once, into [[walkGraph]]'s adjacency, so
-    * a pre-warmed [[edgeProj]] only serves as their scan source.
-    */
-  private[graft] def edgeProj(edges: DataFrame, srcCol: String = "src",
-                              dstCol: String = "dst"): DataFrame =
-    edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
-
-  private[graft] def nodesOf(e: DataFrame): DataFrame =
-    e.select(col("src").as("id"))
-      .union(e.select(col("dst").as("id"))).distinct()
-
-  /** Persist `df` unless an identical (canonicalized) plan is already
-    * cached; the flag records who owns the entry — `release` unpersists
-    * only frames THIS call persisted, so a caller-owned shared context
-    * survives the operator.
-    */
-  private def acquire(df: DataFrame): (DataFrame, Boolean) = {
-    val pre = graft.core.Caches.isCached(df)
-    (graft.core.Caches.cached(df), pre)
-  }
-
-  private def release(df: DataFrame, callerOwned: Boolean): Unit =
-    if (!callerOwned) df.unpersist(blocking = false)
 
   /** One hash partition of a [[walkGraph]] adjacency, in compressed
     * sparse row form over dense local indices.
@@ -109,13 +79,17 @@ object Graph {
     else if (b == null) 1
     else a.asInstanceOf[Comparable[Any]].compareTo(b)
 
-  /** The walk adjacency of a (src, dst, w: double) edge frame, built by
-    * ONE shuffle keyed by node id: every node lands in the partition
+  /** The adjacency of a (src, dst, w: double) edge frame, built by ONE
+    * shuffle keyed by node id: every node lands in the partition
     * `HashPartitioner(spark.sql.shuffle.partitions)` gives its id, with
-    * its out-edges and out-total folded in. `seeds` (one column of ids)
-    * marks seed nodes and adds them as nodes; without it every node is
-    * a seed. The blocks are persisted, and the one job that materializes
-    * them also returns the seed count.
+    * its out-edges and out-total folded in. Every src and dst is a node.
+    * `seeds` (one column of ids) marks seed nodes and adds them as
+    * nodes; without it every node is a seed. The blocks are persisted
+    * lazily: the first job that reads them caches them.
+    *
+    * Two edge frames over the same node set (an edge list and its
+    * reverse) get identical local indices, so one state array serves
+    * both adjacencies.
     *
     * Null ids follow SQL equi-join semantics: a null source sends
     * nothing, a null destination receives nothing but still counts
@@ -123,8 +97,8 @@ object Graph {
     * Ids must be of an ordered, hashable type (numeric, string, date);
     * binary and nested ids are refused.
     */
-  private def walkGraph(edges: DataFrame, seeds: Option[DataFrame])
-  : (RDD[WalkBlock], Long) = {
+  private def walkGraph(edges: DataFrame, seeds: Option[DataFrame] = None)
+  : RDD[WalkBlock] = {
     val idType = edges.schema("src").dataType
     require(idType match {
       case _: NumericType | _: StringType | DateType | TimestampType |
@@ -156,13 +130,11 @@ object Graph {
       }
     }
     val allSeeds = seeds.isEmpty
-    val adj = chunks.partitionBy(part)
+    chunks.partitionBy(part)
       .mapPartitionsWithIndex((p, it) =>
         Iterator(buildBlock(p, it.map(_._2), part, allSeeds)),
         preservesPartitioning = true)
       .persist()
-    val nSeeds = adj.map(_.seeds.cardinality.toLong).reduce(_ + _)
-    (adj, nSeeds)
   }
 
   private def buildBlock(p: Int, chunks: Iterator[Recs],
@@ -214,87 +186,204 @@ object Graph {
       recv.map(_.result()))
   }
 
+  /** How a round folds the messages bound for one node: `alloc(n)` is a
+    * block of n empty slots, `add` folds a message into a slot, and
+    * `merge` folds slot j of a received block into slot i.
+    */
+  private abstract class Combiner[M, B] extends Serializable {
+    def alloc(n: Int): B
+    def add(b: B, slot: Int, m: M): Unit
+    def merge(to: B, i: Int, from: B, j: Int): Unit
+  }
+
+  private object SumOf extends Combiner[Double, Array[Double]] {
+    def alloc(n: Int): Array[Double] = new Array[Double](n)
+    def add(b: Array[Double], slot: Int, m: Double): Unit = b(slot) += m
+    def merge(to: Array[Double], i: Int, from: Array[Double], j: Int): Unit =
+      to(i) += from(j)
+  }
+
+  /** The least message by [[idOrder]]. An empty slot is null, so
+    * messages must not be.
+    */
+  private object MinOf extends Combiner[Any, Array[Any]] {
+    def alloc(n: Int): Array[Any] = new Array[Any](n)
+    def add(b: Array[Any], slot: Int, m: Any): Unit = b(slot) = least(b(slot), m)
+    def merge(to: Array[Any], i: Int, from: Array[Any], j: Int): Unit =
+      to(i) = least(to(i), from(j))
+  }
+
+  /** The lesser label by [[idOrder]], where null is "no label yet". */
+  private def least(a: Any, b: Any): Any =
+    if (a == null || (b != null && idOrder.lt(b, a))) b else a
+
+  /** A count per distinct message (label propagation's vote). */
+  private object Tally
+    extends Combiner[Any, Array[java.util.HashMap[Any, java.lang.Long]]] {
+    private type Votes = java.util.HashMap[Any, java.lang.Long]
+    def alloc(n: Int): Array[Votes] = new Array[Votes](n)
+    private def vote(b: Array[Votes], i: Int, m: Any, c: java.lang.Long): Unit = {
+      if (b(i) == null) b(i) = new Votes
+      b(i).merge(m, c, (x: java.lang.Long, y: java.lang.Long) =>
+        java.lang.Long.valueOf(x.longValue + y.longValue))
+    }
+    def add(b: Array[Votes], slot: Int, m: Any): Unit = vote(b, slot, m, 1L)
+    def merge(to: Array[Votes], i: Int, from: Array[Votes], j: Int): Unit =
+      from(j).forEach((m, c) => vote(to, i, m, c))
+  }
+
+  /** One round of a vertex program over the blocks of `adj`, holding
+    * one state `S` per block.
+    *
+    * Every node i in `senders(s)` sends `message(b, s, i, e)` along each
+    * of its out-edges e. `c` folds the messages per destination slot
+    * map-side, so the round's only exchange is one block per (source,
+    * destination) partition pair; each block also ships its state to
+    * itself, so a round reads the previous round's exchange and nothing
+    * older. The receiver merges the blocks in source-partition order —
+    * every fold order is fixed for a given partition count — and
+    * `update(b, s, in, got)` gives its new state, `got` marking the
+    * nodes that received a message.
+    */
+  private def superstep[S: ClassTag, M, B: ClassTag](
+      adj: RDD[WalkBlock], state: RDD[S], c: Combiner[M, B])(
+      senders: S => java.util.BitSet,
+      message: (WalkBlock, S, Int, Int) => M,
+      update: (WalkBlock, S, B, java.util.BitSet) => S): RDD[S] = {
+    val sent = adj.zipPartitions(state) { (bs, ss) =>
+      val (b, s) = (bs.next(), ss.next())
+      val blocks = b.sendSlots.map(c.alloc)
+      val got = b.sendSlots.map(new java.util.BitSet(_))
+      val from = senders(s)
+      var i = from.nextSetBit(0)
+      while (i >= 0) {
+        var e = b.outStart(i)
+        while (e < b.outStart(i + 1)) {
+          val q = b.outPart(e)
+          c.add(blocks(q), b.outSlot(e), message(b, s, i, e))
+          got(q).set(b.outSlot(e))
+          e += 1
+        }
+        i = from.nextSetBit(i + 1)
+      }
+      Iterator(b.part -> Left(s)) ++
+        b.sendSlots.indices.iterator.filter(b.sendSlots(_) > 0)
+          .map(q => q -> Right((b.part, blocks(q), got(q))))
+    }.partitionBy(new HashPartitioner(adj.getNumPartitions))
+    adj.zipPartitions(sent) { (bs, ms) =>
+      val b = bs.next()
+      val (old, blocks) = ms.map(_._2).toArray
+        .partitionMap[S, (Int, B, java.util.BitSet)](identity)
+      val in = c.alloc(b.ids.length)
+      val got = new java.util.BitSet(b.ids.length)
+      blocks.sortBy(_._1).foreach { case (p, blk, g) =>
+        val idx = b.recvIdx(p)
+        var j = g.nextSetBit(0)
+        while (j >= 0) {
+          c.merge(in, idx(j), blk, j)
+          got.set(idx(j))
+          j = g.nextSetBit(j + 1)
+        }
+      }
+      Iterator(update(b, old.head, in, got))
+    }
+  }
+
+  /** Runs `round` until `changed` sums to zero over the blocks, or for
+    * `maxRounds` rounds. Each round's state is local-checkpointed (the
+    * lineage cut of GraphX's Pregel), materialized by the one small
+    * reduce that counts its changes, and its predecessor released; the
+    * returned state keeps its checkpoint, which the result reads.
+    */
+  private def untilStable[S: ClassTag](state: RDD[S], maxRounds: Int)(
+      round: RDD[S] => RDD[S])(changed: S => Int): RDD[S] = {
+    var (s, rounds, moving) = (state, 0, true)
+    while (moving && rounds < maxRounds) {
+      val next = round(s).localCheckpoint()
+      moving = next.map(changed(_).toLong).fold(0L)(_ + _) > 0
+      s.unpersist(blocking = false)
+      s = next
+      rounds += 1
+    }
+    s
+  }
+
+  private def members(s: java.util.BitSet): Iterator[Int] =
+    Iterator.iterate(s.nextSetBit(0))(i => s.nextSetBit(i + 1))
+      .takeWhile(_ >= 0)
+
+  private def allNodes(n: Int): java.util.BitSet = {
+    val s = new java.util.BitSet(n)
+    s.set(0, n)
+    s
+  }
+
+  /** The (id, fields…) frame of a finished loop, `rows` turning each
+    * block's final state into rows; ids are typed like `edges`' src.
+    */
+  private def frame[S: ClassTag](edges: DataFrame, adj: RDD[WalkBlock],
+                                 state: RDD[S], fields: StructField*)(
+      rows: (WalkBlock, S) => Iterator[Row]): DataFrame =
+    edges.sparkSession.createDataFrame(
+      adj.zipPartitions(state)((bs, ss) => rows(bs.next(), ss.next())),
+      StructType(StructField("id", edges.schema("src").dataType) +: fields))
+
+  /** Materializes a loop's result, then releases its adjacencies. */
+  private def finish(out: DataFrame, adj: RDD[WalkBlock]*): DataFrame = {
+    val p = graft.core.Caches.materialized(out)
+    adj.foreach(_.unpersist(blocking = false))
+    p
+  }
+
+  /** (src, dst, w = 1) over the named endpoint columns. */
+  private def unitEdges(edges: DataFrame, srcCol: String = "src",
+                        dstCol: String = "dst"): DataFrame =
+    edges.select(col(srcCol).as("src"), col(dstCol).as("dst"),
+      lit(1.0).as("w"))
+
+  /** [[unitEdges]] in both directions: an undirected pair list. */
+  private def bothWays(pairs: DataFrame, aCol: String, bCol: String)
+  : DataFrame =
+    unitEdges(pairs, aCol, bCol).union(unitEdges(pairs, bCol, aCol))
+
   /** The fixed-iteration sum-of-messages kernel behind [[pageRank]],
     * [[pageRankWeighted]] and [[personalizedPageRank]].
     *
-    * [[walkGraph]] builds and counts the adjacency in one job; then all
-    * `iters` rounds are chained lazily over the cached blocks, with
-    * per-partition state in primitive arrays whatever the id type. Each
-    * round's only exchange is one message block per (source, destination)
-    * partition pair, summed map-side, so the single
-    * [[graft.core.Caches.materialized]] action at the end evaluates the
-    * whole loop: the job count does not grow with `iters`, and no
-    * round's state is ever materialized. The adjacency is released once
-    * the result is cached.
+    * One job builds the adjacency and counts its seeds; then all
+    * `iters` rounds of [[superstep]] are chained lazily over the cached
+    * blocks, with per-partition state in primitive arrays whatever the
+    * id type, so the single [[graft.core.Caches.materialized]] action at
+    * the end evaluates the whole loop: the job count does not grow with
+    * `iters`, and no round's state is ever materialized.
     */
   private def sumWalk(edges: DataFrame, seeds: Option[DataFrame],
                       iters: Int)(walk: Long => Walk): DataFrame = {
-    val (adj, nSeeds) = walkGraph(edges, seeds)
-    val w = walk(nSeeds)
-    val nParts = adj.getNumPartitions
+    val adj = walkGraph(edges, seeds)
+    val w = walk(adj.map(_.seeds.cardinality.toLong).reduce(_ + _))
     var state = adj.map { b =>
       val v = new Array[Double](b.ids.length)
-      var i = b.seeds.nextSetBit(0)
-      while (i >= 0) { v(i) = w.start; i = b.seeds.nextSetBit(i + 1) }
+      members(b.seeds).foreach(v(_) = w.start)
       (v, b.seeds)
     }
-    for (_ <- 1 to iters) {
-      val sent = adj.zipPartitions(state) { (bs, ss) =>
-        val b = bs.next()
-        val (v, active) = ss.next()
-        val sums = b.sendSlots.map(new Array[Double](_))
-        val got = b.sendSlots.map(new java.util.BitSet(_))
-        var i = active.nextSetBit(0)
-        while (i >= 0) {
+    for (_ <- 1 to iters)
+      state = superstep(adj, state, SumOf)(_._2,
+        (b, s, i, e) => {
           val t = b.outTotal(i)
-          var e = b.outStart(i)
-          while (e < b.outStart(i + 1)) {
-            val q = b.outPart(e)
-            // a zero out-total divides to SQL null: the edge reaches
-            // its destination but adds nothing to the sum
-            if (t != 0.0) sums(q)(b.outSlot(e)) += w.message(v(i), b.outW(e), t)
-            got(q).set(b.outSlot(e))
-            e += 1
-          }
-          i = active.nextSetBit(i + 1)
-        }
-        b.sendSlots.indices.iterator.filter(b.sendSlots(_) > 0)
-          .map(q => q -> ((b.part, sums(q), got(q))))
-      }.partitionBy(new HashPartitioner(nParts))
-      state = adj.zipPartitions(sent) { (bs, ms) =>
-        val b = bs.next()
-        val sum = new Array[Double](b.ids.length)
-        val active = b.seeds.clone().asInstanceOf[java.util.BitSet]
-        ms.map(_._2).toArray.sortBy(_._1).foreach { case (p, vals, got) =>
-          val idx = b.recvIdx(p)
-          var j = got.nextSetBit(0)
-          while (j >= 0) {
-            sum(idx(j)) += vals(j)
-            active.set(idx(j))
-            j = got.nextSetBit(j + 1)
-          }
-        }
-        val v = new Array[Double](b.ids.length)
-        var i = active.nextSetBit(0)
-        while (i >= 0) {
-          v(i) = w.update(sum(i), b.seeds.get(i))
-          i = active.nextSetBit(i + 1)
-        }
-        Iterator((v, active))
-      }
-    }
-    val rows = adj.zipPartitions(state) { (bs, ss) =>
-      val b = bs.next()
-      val (v, active) = ss.next()
-      Iterator.iterate(active.nextSetBit(0))(i => active.nextSetBit(i + 1))
-        .takeWhile(_ >= 0).map(i => Row(b.ids(i), v(i)))
-    }
-    val out = graft.core.Caches.materialized(w.output(
-      edges.sparkSession.createDataFrame(rows, StructType(Seq(
-        StructField("id", edges.schema("src").dataType),
-        StructField("_v", DoubleType, nullable = false))))))
-    adj.unpersist(blocking = false)
-    out
+          // a zero out-total divides to SQL null: the edge reaches its
+          // destination but adds nothing to the sum
+          if (t == 0.0) 0.0 else w.message(s._1(i), b.outW(e), t)
+        },
+        (b, _, sum, got) => {
+          val active = b.seeds.clone().asInstanceOf[java.util.BitSet]
+          active.or(got)
+          val v = new Array[Double](b.ids.length)
+          members(active).foreach(i => v(i) = w.update(sum(i), b.seeds.get(i)))
+          (v, active)
+        })
+    finish(w.output(frame(edges, adj, state,
+        StructField("_v", DoubleType, nullable = false)) { (b, s) =>
+      members(s._2).map(i => Row(b.ids(i), s._1(i)))
+    }), adj)
   }
 
   /** Fixed-iteration PageRank over a directed edge list.
@@ -321,8 +410,7 @@ object Graph {
                srcCol: String = "src", dstCol: String = "dst")
   : DataFrame = {
     require(iters >= 1, "pageRank needs at least one iteration")
-    sumWalk(edgeProj(edges, srcCol, dstCol).withColumn("w", lit(1.0)),
-      None, iters) { n =>
+    sumWalk(unitEdges(edges, srcCol, dstCol), None, iters) { n =>
       val teleport = (1.0 - damping) / n
       Walk(1.0 / n, (r, _, d) => r / d, (s, _) => teleport + damping * s,
         scaledRanks(n))
@@ -433,52 +521,42 @@ object Graph {
   /** Synchronous label propagation over a directed edge list: start
     * every node at its own id, then `iters` rounds of "adopt the most
     * common label among in-neighbors" with a DETERMINISTIC tie-break
-    * (count desc, label asc) — community detection's cheapest member,
-    * and unlike [[Dedup.duplicateClusters]]' min-label closure it
-    * respects local density (a node bridging two cliques joins the
-    * bigger one, not whichever has the smaller id).
+    * (count desc, then label asc by id order) — community detection's
+    * cheapest member, and unlike [[Dedup.duplicateClusters]]' min-label
+    * closure it respects local density (a node bridging two cliques
+    * joins the bigger one, not whichever has the smaller id).
     *
-    * Per round: one edge⋈label join (high-cardinality node keys), a
-    * (node, label) count with map-side combine, and the argmax as a
-    * DECLARATIVE `min(struct(-count, label))` — lexicographic struct
-    * min over a negated count IS "count desc, label asc", type-generic
-    * in the label (only the bigint count is negated, so string node
-    * ids work exactly as in [[pageRank]]/[[hits]]), and unlike the
-    * k-bounded UDAF it stays inside whole-stage codegen: the
-    * ObjectHashAggregate + per-row encoder round-trip of the k-general
-    * aggregator measured ~5× slower on the sf0.1 co-engagement graph
-    * for the k=1 case this operator needs. Edge/node frames are cached
-    * across rounds, then released once the final labels are
-    * materialized (same lifecycle as [[pageRank]]). Fixed iterations
-    * for the same bounded-lineage reason as [[pageRank]]. Nodes with
-    * no in-edges keep their label.
+    * Each round is one [[superstep]]: every node sends its label, the
+    * votes are tallied per destination map-side, and the receiver
+    * adopts the argmax. Duplicate edges vote with their multiplicity;
+    * nodes with no in-edges keep their own label. Jobs per call do not
+    * grow with `iters`: the result's materialization also builds the
+    * adjacency.
+    *
+    * Returns (id, label), one row per node.
     */
   def labelPropagation(edges: DataFrame, iters: Int,
                        srcCol: String = "src", dstCol: String = "dst")
   : DataFrame = {
     require(iters >= 1, "labelPropagation needs at least one iteration")
-    val (e, eOwn) = acquire(edgeProj(edges, srcCol, dstCol))
-    val (nodes, nOwn) = acquire(nodesOf(e))
-    var labels = nodes.select(col("id"), col("id").as("label"))
-    for (_ <- 1 to iters) {
-      val counts = e.join(labels, col("src") === col("id"))
-        .groupBy(col("dst"), col("label")).agg(count(lit(1)).as("_c"))
-      // min over (-count, label) IS "count desc, label asc", and since
-      // the negated field is the count (always a bigint) — not the
-      // label — the tie-break stays type-generic: string node ids work
-      // here exactly as they do in pageRank/hits
-      val adopted = counts.groupBy(col("dst"))
-        .agg(min(struct((-col("_c")).as("_nc"),
-          col("label").as("_l"))).as("_m"))
-        .select(col("dst").as("id"), col("_m._l").as("label"))
-      labels = nodes.join(adopted, Seq("id"), "left")
-        .select(col("id"),
-          coalesce(col("label"), col("id")).as("label"))
-    }
-    val out = graft.core.Caches.materialized(labels)
-    release(e, eOwn)
-    release(nodes, nOwn)
-    out
+    val e = unitEdges(edges, srcCol, dstCol)
+    val adj = walkGraph(e)
+    var labels = adj.map(_.ids)
+    for (_ <- 1 to iters)
+      labels = superstep(adj, labels, Tally)(l => allNodes(l.length),
+        (_, l, i, _) => l(i),
+        (b, _, votes, _) => Array.tabulate[Any](b.ids.length) { i =>
+          if (votes(i) == null) b.ids(i)
+          else votes(i).asScala.reduce { (x, y) =>
+            val byCount = java.lang.Long.compare(x._2, y._2)
+            if (byCount < 0 || (byCount == 0 && idOrder.lt(y._1, x._1))) y
+            else x
+          }._1
+        })
+    finish(frame(e, adj, labels,
+        StructField("label", e.schema("src").dataType)) { (b, l) =>
+      b.ids.indices.iterator.map(i => Row(b.ids(i), l(i)))
+    }, adj)
   }
 
   /** HITS (Kleinberg's hubs-and-authorities) over a DIRECTED edge list
@@ -488,77 +566,49 @@ object Graph {
     * they engage authoritative items. The mutual recursion the power
     * iteration solves.
     *
-    * Per iteration (all shuffles on the high-cardinality node id):
-    *   1. authority step: a(v) = Σ_{u→v} h(u) (edge⋈hub join, per-dst
-    *      sum with map-side combine);
-    *   2. hub step: h(u) = Σ_{u→v} a(v).
-    * Normalization happens ONCE at the end, not per half-step: scalar
-    * factors commute through the linear maps (Eᵀ(a/s) = (Eᵀa)/s), so
-    * end-of-loop L1 normalization yields the identical vectors — and
-    * a mid-loop normalizer is a broadcast subtree that re-executes its
-    * whole upstream lineage every time it's referenced, which made the
-    * per-step-normalized formulation ~2^iters-fold redundant (measured
-    * 19 s cold at sf0.1 for iters=2; this form ~5 s). L1 (not the
-    * textbook L2) keeps the normalizer a plain sum — engine-exact up
-    * to float-order, no sqrt — and scores sum to 1. Raw sums stay in
-    * double range for any sane iteration count (magnitudes ~
-    * degreeⁱᵗᵉʳˢ). Nodes with no in-edges have authority 0, no
-    * out-edges hub 0 (the full-outer join of the two final vectors
-    * restores them; a bipartite graph has only such nodes — and their
-    * union IS the node set, so no separate nodesOf scan is needed).
+    * Per iteration, two [[superstep]] half-steps from h₀ = 1:
+    *   1. authority step over the edges: a(v) = Σ_{u→v} h(u);
+    *   2. hub step over the REVERSED edges: h(u) = Σ_{u→v} a(v).
+    * [[walkGraph]] gives both adjacencies the same local indices, so
+    * the half-steps hand one state array back and forth. Duplicate
+    * edges count with their multiplicity. Normalization happens ONCE
+    * at the end: scalar factors commute through the linear maps
+    * (Eᵀ(a/s) = (Eᵀa)/s), so end-of-loop L1 normalization yields the
+    * identical vectors. L1 (not the textbook L2) keeps the normalizer a
+    * plain sum — engine-exact up to float order, no sqrt — and scores
+    * sum to 1. Raw sums stay in double range for any sane iteration
+    * count (magnitudes ~ degreeⁱᵗᵉʳˢ). Nodes with no in-edges have
+    * authority 0, no out-edges hub 0.
     *
-    * SINGLE-JOB shape (round 11): the r10 bench showed this operator
-    * drifting 1.37→1.83 s at sf0.1 on a 5,500-node graph — all fixed
-    * per-job scheduling latency, not data (three eager materialize
-    * counts, a nodesOf distinct-union, two totals jobs ≈ 7 jobs).
-    * Now: (1) the uniform h₀=1 start folds the first authority step
-    * into a plain in-degree aggregate (no initial distinct, one less
-    * join); (2) the final a/h frames are persisted LAZILY — their
-    * in-memory blocks populate inside the one output job and serve
-    * every reference (both L1 totals and the output join) without
-    * betting on exchange reuse; (3) the output, totals, and full-outer
-    * node restoration collapse into ONE materialized plan. At 1000
-    * executors the job-count cut is pure win (driver round-trips);
-    * the per-iteration shuffle shape is unchanged.
-    *
-    * Fixed iteration count, linear lineage, edge frame cached across
-    * rounds and released after the result materializes — the
-    * [[pageRank]] lifecycle.
+    * Jobs per call do not grow with `iters`: the result's
+    * materialization (which also builds both adjacencies) and the
+    * broadcast of the two L1 totals.
     *
     * Returns (id, hub, authority), one row per node.
     */
   def hits(edges: DataFrame, iters: Int, srcCol: String = "src",
            dstCol: String = "dst"): DataFrame = {
     require(iters >= 1, "hits needs at least one iteration")
-    val (e, eOwn) = acquire(edgeProj(edges, srcCol, dstCol))
-    // h₀ = 1 for every source, so authority step 1 is exactly in-degree
-    var auths = e.groupBy(col("dst").as("id"))
-      .agg(count(lit(1)).cast("double").as("_a"))
-    var hubs: DataFrame = null
-    for (i <- 1 to iters) {
-      hubs = e.join(auths.select(col("id").as("dst"), col("_a")),
-          Seq("dst"))
-        .groupBy(col("src").as("id")).agg(sum(col("_a")).as("_h"))
-      if (i < iters)
-        auths = e.join(hubs.select(col("id").as("src"), col("_h")),
-            Seq("src"))
-          .groupBy(col("dst").as("id")).agg(sum(col("_h")).as("_a"))
+    val e = unitEdges(edges, srcCol, dstCol)
+    val (fwd, rev) = (walkGraph(e), walkGraph(unitEdges(e, "dst", "src")))
+    def step(adj: RDD[WalkBlock])(v: RDD[Array[Double]]) =
+      superstep(adj, v, SumOf)(x => allNodes(x.length),
+        (_, x, i, _) => x(i), (_, _, sum, _) => sum)
+    var h = fwd.map(b => Array.fill(b.ids.length)(1.0))
+    var a = h
+    for (_ <- 1 to iters) {
+      a = step(fwd)(h)
+      h = step(rev)(a)
     }
-    // lazy persists: populated once inside the single output job below,
-    // shared by the totals aggregates AND the full-outer join
-    val aFin = graft.core.Caches.cached(auths)
-    val hFin = graft.core.Caches.cached(hubs)
-    val aTot = aFin.agg(sum(col("_a")).as("_at"))
-    val hTot = hFin.agg(sum(col("_h")).as("_ht"))
-    val out = graft.core.Caches.materializedThenRelease(
-      aFin.join(hFin, Seq("id"), "full_outer")
-        .join(broadcast(aTot)).join(broadcast(hTot))
-        .select(col("id"),
-          (coalesce(col("_h"), lit(0.0)) / col("_ht")).as("hub"),
-          (coalesce(col("_a"), lit(0.0)) / col("_at")).as("authority")),
-      aFin, hFin)
-    release(e, eOwn)
-    out
+    val raw = frame(e, fwd, h.zipPartitions(a)((x, y) => Iterator((x.next(), y.next()))),
+        StructField("_h", DoubleType, nullable = false),
+        StructField("_a", DoubleType, nullable = false)) { case (b, (hv, av)) =>
+      b.ids.indices.iterator.map(i => Row(b.ids(i), hv(i), av(i)))
+    }
+    val tot = raw.agg(sum(col("_h")).as("_ht"), sum(col("_a")).as("_at"))
+    finish(raw.crossJoin(broadcast(tot))
+      .select(col("id"), (col("_h") / col("_ht")).as("hub"),
+        (col("_a") / col("_at")).as("authority")), fwd, rev)
   }
 
   /** Global triangle count over a CANONICAL pair list (every undirected
@@ -610,7 +660,7 @@ object Graph {
     */
   def adamicAdar(pairs: DataFrame, aCol: String, bCol: String, k: Int)
   : DataFrame = {
-    val (sym, symOwned) = acquire(
+    val sym = graft.core.Caches.cached(
       pairs.select(col(aCol).as("a"), col(bCol).as("b"))
         .unionByName(pairs.select(col(bCol).as("a"), col(aCol).as("b"))))
     val deg = sym.groupBy(col("a")).agg(count(lit(1)).as("_d"))
@@ -624,10 +674,8 @@ object Graph {
         round(sum(lit(1.0) / log(col("_d"))) + lit(1e-9), 4).as("score"))
       .join(pairs.select(col(aCol).as("a"), col(bCol).as("b")),
         Seq("a", "b"), "left_anti")
-    val out = graft.core.Caches.materialized(
-      scored.orderBy(col("score").desc, col("a"), col("b")).limit(k))
-    release(sym, symOwned)
-    out
+    graft.core.Caches.materializedThenRelease(
+      scored.orderBy(col("score").desc, col("a"), col("b")).limit(k), sym)
   }
 
   /** Local clustering coefficient per node: 2·tri(v) / (d·(d−1)) for
@@ -645,7 +693,7 @@ object Graph {
     */
   def localClustering(pairs: DataFrame, aCol: String, bCol: String)
   : DataFrame = {
-    val (e, eOwned) = acquire(
+    val e = graft.core.Caches.cached(
       pairs.select(col(aCol).as("a"), col(bCol).as("b")))
     val tri = e.join(e.select(col("a").as("b"), col("b").as("c")),
         Seq("b"))
@@ -658,7 +706,7 @@ object Graph {
     val deg = e.select(col("a").as("id"))
       .unionByName(e.select(col("b").as("id")))
       .groupBy(col("id")).agg(count(lit(1)).as("degree"))
-    val out = graft.core.Caches.materialized(
+    graft.core.Caches.materializedThenRelease(
       deg.filter(col("degree") >= 2)
         .join(triPerNode, Seq("id"), "left")
         .select(col("id"), col("degree"),
@@ -666,9 +714,7 @@ object Graph {
           round(lit(2.0) * coalesce(col("n_tri"), lit(0L))
             / (col("degree") * (col("degree") - lit(1))) + lit(1e-9), 4)
             .as("coeff"))
-        .orderBy(col("id")))
-    release(e, eOwned)
-    out
+        .orderBy(col("id")), e)
   }
 
   /** Neighbor-set Jaccard similarity per EXISTING edge: common = #
@@ -685,7 +731,7 @@ object Graph {
     */
   def neighborJaccard(pairs: DataFrame, aCol: String, bCol: String)
   : DataFrame = {
-    val (sym, symOwned) = acquire(
+    val sym = graft.core.Caches.cached(
       pairs.select(col(aCol).as("a"), col(bCol).as("b"))
         .unionByName(pairs.select(col(bCol).as("a"), col(aCol).as("b"))))
     val deg = sym.groupBy(col("a")).agg(count(lit(1)).as("_d"))
@@ -693,7 +739,7 @@ object Graph {
       .join(sym.select(col("a").as("_w"), col("b").as("b")), Seq("_w"))
       .filter(col("a") < col("b"))
       .groupBy(col("a"), col("b")).agg(count(lit(1)).as("n_common"))
-    val out = graft.core.Caches.materialized(
+    graft.core.Caches.materializedThenRelease(
       pairs.select(col(aCol).as("a"), col(bCol).as("b"))
         .join(common, Seq("a", "b"), "left")
         .join(deg.select(col("a"), col("_d").as("_da")), Seq("a"))
@@ -707,9 +753,7 @@ object Graph {
                 / (col("_da") + col("_db")
                    - coalesce(col("n_common"), lit(0L)) - lit(2)))
               + lit(1e-9), 4).as("jaccard"))
-        .orderBy(col("a"), col("b")))
-    release(sym, symOwned)
-    out
+        .orderBy(col("a"), col("b")), sym)
   }
 
   /** k-core of the undirected graph: iteratively peel nodes whose
@@ -718,97 +762,105 @@ object Graph {
     * "dense-enough neighborhood" filter (spam rings, engaged-community
     * cuts) next to [[triangleCount]]'s local density.
     *
-    * SCALE SHAPE: each round is two node-keyed semi-joins of the edge
-    * list against the surviving node set plus one count aggregate —
-    * all keyed on high-cardinality node ids. The fixpoint check rides
-    * the SAME count() that sizes the round (one job per round, the
-    * q112 discipline), and because the alive set shrinks monotonically,
-    * equal consecutive sizes imply an identical set. Each round's
-    * |alive| frame is cached and its predecessor released, so executor
-    * storage holds one round and lineage reads from the cache. Rounds
-    * are bounded by the peel depth (≤ graph degeneracy ordering), 6 at
-    * the oracle SF. At the fixpoint the last aggregate's count IS the
-    * in-core degree, so membership and degree come out of one frame.
+    * Each round is one [[superstep]] over both directions of the pairs:
+    * every surviving node sends 1, a node's in-core degree is the sum it
+    * receives (duplicate pairs and self-loops count with their
+    * multiplicity), and a node with degree under k (or under 1) is
+    * peeled. [[untilStable]] runs rounds until none is peeled — the peel
+    * depth, 6 at the oracle SF — with one small reduce per round. At the
+    * fixpoint the last round's sums ARE the in-core degrees.
     */
   def kCore(pairs: DataFrame, aCol: String, bCol: String, k: Int)
   : DataFrame = {
-    val (sym, symOwned) = acquire(
-      pairs.select(col(aCol).as("a"), col(bCol).as("b"))
-        .unionByName(pairs.select(col(bCol).as("a"), col(aCol).as("b"))))
-    var alive = graft.core.Caches.cached(
-      sym.select(col("a").as("id")).distinct()
-        .select(col("id"), lit(0L).as("core_degree")))
-    var n = alive.count()
-    var out: DataFrame = alive
-    var done = n == 0
-    while (!done) {
-      val next = graft.core.Caches.cached(sym
-        .join(alive.select(col("id").as("a")), Seq("a"))
-        .join(alive.select(col("id").as("b")), Seq("b"))
-        .groupBy(col("a")).agg(count(lit(1)).as("core_degree"))
-        .filter(col("core_degree") >= k)
-        .select(col("a").as("id"), col("core_degree")))
-      val m = next.count()
-      alive.unpersist(blocking = false)
-      if (m == n || m == 0) { out = next; done = true }
-      else { alive = next; n = m }
-    }
-    release(sym, symOwned)
-    out
+    val e = bothWays(pairs, aCol, bCol)
+    val adj = walkGraph(e)
+    val floor = math.max(k, 1)
+    // (alive, in-core degree, peeled this round)
+    val start = adj.map(b =>
+      (allNodes(b.ids.length), new Array[Double](b.ids.length), 0))
+    val core = untilStable(start, Int.MaxValue)(
+      superstep(adj, _, SumOf)(_._1, (_, _, _, _) => 1.0,
+        (_, s, deg, _) => {
+          val alive = s._1.clone().asInstanceOf[java.util.BitSet]
+          members(s._1).filter(deg(_) < floor).foreach(alive.clear)
+          (alive, deg, s._1.cardinality - alive.cardinality)
+        }))(_._3)
+    finish(frame(e, adj, core,
+        StructField("core_degree", LongType, nullable = false)) { (b, s) =>
+      members(s._1).map(i => Row(b.ids(i), s._2(i).toLong))
+    }, adj)
   }
 
-  /** Multi-source BFS: minimum hop distance from ANY seed node, capped
-    * at `maxHops` — reachability ("within k hops of a flagged item"),
-    * expansion sets for candidate generation, blast-radius audits.
-    *
-    * The loop is FRONTIER-driven: each round joins only the newly
-    * discovered nodes (not the full label set) against the edge list,
-    * anti-joins out already-labeled nodes, and stops early when the
-    * frontier empties — so per-round work is |frontier-adjacent edges|,
-    * the textbook distributed-BFS shape. Both the label set and the
-    * frontier are eagerly truncated each round ([[Dedup.truncated]]'s
-    * localCheckpoint, or fault-tolerant `checkpoint()` when
-    * `checkpointDir` is set) and the superseded round's blocks are
-    * released, mirroring the connected-components lifecycle — lineage
-    * stays flat however deep the search runs.
+  /** Min-label propagation to a fixed point: node i starts at
+    * `init(b)(i)` (null: no label yet); each round the nodes whose label
+    * is new send `step(label)` along their out-edges, and every node
+    * keeps the least label, by id order, that it holds or receives.
+    * Stops when no label moves or after `maxRounds` rounds; the state
+    * is (labels, moved this round).
     */
-  def bfsHops(edges: DataFrame, seeds: DataFrame, maxHops: Int,
-              checkpointDir: Option[String] = None): DataFrame = {
-    val (e, eOwn) = acquire(edgeProj(edges))
-    var labels = Dedup.truncated(
-      seeds.select(col("id")).distinct().withColumn("hop", lit(0L)),
-      checkpointDir)
-    var frontier = labels
-    var prevLabels: DataFrame = null
-    var h = 1
-    var done = false
-    while (!done && h <= maxHops) {
-      val next = Dedup.truncated(
-        e.join(frontier.select(col("id").as("src")), Seq("src"))
-          .select(col("dst").as("id")).distinct()
-          .join(labels.select(col("id")), Seq("id"), "left_anti")
-          .withColumn("hop", lit(h.toLong)),
-        checkpointDir)
-      done = next.isEmpty
-      if (!done) {
-        val merged = Dedup.truncated(labels.union(next), checkpointDir)
-        // merged and next are materialized; the superseded label set and
-        // the consumed frontier are dead — release their blocks
-        org.apache.spark.sql.graftbridge.Bridge.releaseCheckpoint(labels)
-        if (prevLabels != null)
-          org.apache.spark.sql.graftbridge.Bridge.releaseCheckpoint(prevLabels)
-        prevLabels = frontier
-        labels = merged
-        frontier = next
-      }
-      h += 1
+  private def minLabels(adj: RDD[WalkBlock], maxRounds: Int)(
+      init: WalkBlock => Array[Any], step: Any => Any)
+  : RDD[(Array[Any], java.util.BitSet)] = {
+    val start = adj.map { b =>
+      val l = init(b)
+      val fresh = new java.util.BitSet(l.length)
+      l.indices.filter(l(_) != null).foreach(fresh.set)
+      (l, fresh)
     }
-    release(e, eOwn)
-    // the merged label set is a checkpoint COPY — the last frontier's
-    // blocks are dead unless no round ever ran (labels IS the seed
-    // frontier then)
-    if (!(frontier eq labels))
-      org.apache.spark.sql.graftbridge.Bridge.releaseCheckpoint(frontier)
-    labels
+    untilStable(start, maxRounds)(
+      superstep(adj, _, MinOf)(_._2, (_, s, i, _) => step(s._1(i)),
+        (_, s, in, got) => {
+          val l = s._1.clone()
+          val moved = new java.util.BitSet(l.length)
+          members(got).filter(i => l(i) == null || idOrder.lt(in(i), l(i)))
+            .foreach { i =>
+              l(i) = in(i)
+              moved.set(i)
+            }
+          (l, moved)
+        }))(_._2.cardinality)
+  }
+
+  /** Connected components of an undirected pair list: every node gets
+    * the least id (by id order) of its component, by [[minLabels]] over
+    * both directions of the pairs. Rounds are bounded by the
+    * component diameter, not the corpus size, so no round bound is
+    * needed. Returns (id, cluster_id) for every id in a pair.
+    */
+  private[ext] def components(pairs: DataFrame, aCol: String, bCol: String)
+  : DataFrame = {
+    val e = bothWays(pairs, aCol, bCol)
+    val adj = walkGraph(e)
+    finish(frame(e, adj, minLabels(adj, Int.MaxValue)(_.ids, identity),
+        StructField("cluster_id", e.schema("src").dataType)) { (b, s) =>
+      b.ids.indices.iterator.map(i => Row(b.ids(i), s._1(i)))
+    }, adj)
+  }
+
+  /** Multi-source BFS: minimum hop distance from ANY seed node (the `id`
+    * column of `seeds`), capped at `maxHops` — reachability ("within k
+    * hops of a flagged item"), expansion sets for candidate generation,
+    * blast-radius audits.
+    *
+    * [[minLabels]] with the seeds at hop 0 and a message of hop + 1: each
+    * round only the newly reached frontier sends, and the loop stops
+    * early when the frontier empties — one small reduce per round.
+    * Seeds that are not in the graph come back at hop 0.
+    *
+    * Returns (id, hop) for every reached node.
+    */
+  def bfsHops(edges: DataFrame, seeds: DataFrame, maxHops: Int)
+  : DataFrame = {
+    val e = unitEdges(edges)
+    val adj = walkGraph(e, Some(seeds.select(col("id"))))
+    val hops = minLabels(adj, maxHops)(
+      b => Array.tabulate[Any](b.ids.length)(i =>
+        if (b.seeds.get(i)) 0L else null),
+      h => h.asInstanceOf[Long] + 1L)
+    finish(frame(e, adj, hops,
+        StructField("hop", LongType, nullable = false)) { (b, s) =>
+      b.ids.indices.iterator.filter(s._1(_) != null)
+        .map(i => Row(b.ids(i), s._1(i)))
+    }, adj)
   }
 }

@@ -181,10 +181,10 @@ object Similarity {
         val cachedBelow =
           plan.find(_.isInstanceOf[InMemoryRelation]).isDefined
         if (derived && !cachedBelow)
-          System.err.println(
-            "[graft] sign-LSH: adaptive-planes count() over an uncached " +
-              "derived input evaluates it twice — cache the input or " +
-              "pass targetBucketRows=0 with explicit planes")
+          org.slf4j.LoggerFactory.getLogger(getClass).warn(
+            "sign-LSH: adaptive-planes count() over an uncached derived " +
+              "input evaluates it twice - cache the input or pass " +
+              "targetBucketRows=0 with explicit planes")
       }
       adaptivePlanes(df.count(), planes, targetBucketRows)
     } else planes

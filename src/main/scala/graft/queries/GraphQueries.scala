@@ -14,8 +14,8 @@ object GraphQueries {
 
   val all: Seq[Query] = Seq(
     // 3-core of the co-engagement graph: iterative peel until
-    // fixpoint (Graph.kCore — one node-keyed semi-join pair + count
-    // per round), membership + in-core degree; the dense-community
+    // fixpoint (Graph.kCore — one kernel round + one small count per
+    // peel), membership + in-core degree; the dense-community
     // cut next to q96's triangles and q100's label-prop, on the same
     // staged pair list. Oracle unrolls 8 peel rounds (fixpoint in 6
     // at sf0.01, 2 at sf0.1 — monotone, so extra rounds are no-ops)
@@ -124,7 +124,7 @@ object GraphQueries {
     Query("q206_modularity", (s, dir) => {
       val pairs = coengagementPairs(s, dir)
       val labels = ext.Graph.labelPropagation(
-        coengagementGraphWarm(s, dir), iters = 2)
+        coengagementEdges(s, dir), iters = 2)
       val deg = pairs.select(col("item_a").as("id"))
         .unionByName(pairs.select(col("item_b").as("id")))
         .groupBy(col("id")).agg(count(lit(1)).as("_d"))
@@ -462,7 +462,7 @@ object GraphQueries {
     Query("q100_label_communities", (s, dir) => {
       // staged pair list (coengagementPairs): q86, q96, q141, and both
       // bench passes read the same fingerprint-keyed parquet
-      ext.Graph.labelPropagation(coengagementGraphWarm(s, dir), iters = 2)
+      ext.Graph.labelPropagation(coengagementEdges(s, dir), iters = 2)
         .groupBy(col("label").as("community"))
         .agg(count(lit(1)).as("n_members"))
         .orderBy(col("community"))
@@ -514,7 +514,7 @@ object GraphQueries {
     // frontier-driven loop. Oracle is a DuckDB recursive CTE (UNION
     // dedup bounds the walk) + min(hop)
     Query("q141_bfs_hops", (s, dir) => {
-      val edges = coengagementGraphWarm(s, dir)
+      val edges = coengagementEdges(s, dir)
       val seeds = edges.select(col("src").as("id"))
         .filter(col("id") < 200).distinct()
       ext.Graph.bfsHops(edges, seeds, maxHops = 3)
@@ -544,9 +544,7 @@ object GraphQueries {
     // and rounded so the top-20 ordering is engine-stable
     Query("q86_pagerank", (s, dir) => {
       // staged pair list (coengagementPairs): q96, q100, q141, and both
-      // bench passes read the same fingerprint-keyed parquet. The walk
-      // reads its edges once, into its own adjacency, so it takes the
-      // plain edge list rather than the persisted warm context
+      // bench passes read the same fingerprint-keyed parquet
       ext.Graph.pageRank(coengagementEdges(s, dir), iters = 2)
         .select(col("id").as("item"),
           round(col("pr_scaled") + lit(1e-9), 4).as("pr_scaled"))

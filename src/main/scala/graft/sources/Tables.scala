@@ -46,9 +46,8 @@ object Tables {
     *     parallelism — never true of a real multi-file table at scale,
     *     where splits >> cores, so production plans are untouched by
     *     construction;
-    *   - the input estimate is at least `minBytes`
-    *     (`spark.graft.scan.fanout.minBytes` conf, default 256 KiB) —
-    *     a dimension-sized frame stays put.
+    *   - the input is at least [[fanOutMinBytes]] (256 KiB) — a
+    *     dimension-sized frame stays put.
     *
     * Row-to-partition placement is Spark's deterministic round-robin
     * (sort-before-repartition on); no query result may depend on
@@ -75,11 +74,8 @@ object Tables {
     *    and skipping also keeps the `.rdd` fallback (non-file leaves,
     *    e.g. test LocalRelations or cached frames) safe to probe;
     *  - a decline in the would-fire regime (fewer partitions than the
-    *    session) logs one stderr line, so an inert placement is
-    *    observable instead of silent;
-    *  - a malformed minBytes override degrades to the default with a
-    *    warning instead of throwing NumberFormatException inside every
-    *    fanned operator.
+    *    session) logs one INFO line, so an inert placement is
+    *    observable instead of silent.
     *
     * The bytes-derived count assumes every file splits at
     * maxPartitionBytes. A non-splittable file (gzipped JSON/CSV) scans
@@ -87,17 +83,13 @@ object Tables {
     * would decline and some leaf file cannot split, the real partition
     * count is probed instead — safe, since the input plans no exchange.
     */
+  private[graft] val fanOutMinBytes: Long = 256L * 1024
+
+  private lazy val log = org.slf4j.LoggerFactory.getLogger(getClass)
+
   def fanOutForMapWork(df: DataFrame): DataFrame = {
     val spark = df.sparkSession
     val target = spark.sparkContext.defaultParallelism
-    val minBytes = spark.conf.getOption("spark.graft.scan.fanout.minBytes")
-      .flatMap { v =>
-        val parsed = scala.util.Try(v.trim.toLong).toOption
-        if (parsed.isEmpty)
-          System.err.println(s"[graft] fanOutForMapWork: malformed " +
-            s"minBytes override '$v' — using default 262144")
-        parsed
-      }.getOrElse(256L * 1024)
     import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Deduplicate, GlobalLimit, Join, RepartitionOperation, Sort, Window => LWindow}
     import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
     val plan = df.queryExecution.optimizedPlan
@@ -108,10 +100,10 @@ object Tables {
     }.isDefined
     if (shuffling) {
       // precondition violated (scan-stage frames only) — the shuffle
-      // below redistributes anyway; loudly, because every committed
+      // below redistributes anyway; logged, because every committed
       // call site is scan-stage and this firing means a drifted caller
-      System.err.println("[graft] fanOutForMapWork: declined — input " +
-        "plans its own exchange (scan-stage frames only); returning as-is")
+      log.info("fanOutForMapWork: declined - input plans its own " +
+        "exchange (scan-stage frames only); returning as-is")
       return df
     }
     val leaves = plan.collectLeaves()
@@ -139,10 +131,9 @@ object Tables {
           else est)
       } else (plan.stats.sizeInBytes, probed)
     if (estPartitions >= target) df // the at-scale case: silent by design
-    else if (inputBytes < BigInt(minBytes)) {
-      System.err.println(s"[graft] fanOutForMapWork: declined — input " +
-        s"~${inputBytes} B under floor $minBytes B " +
-        s"(est $estPartitions < $target partitions)")
+    else if (inputBytes < BigInt(fanOutMinBytes)) {
+      log.info(s"fanOutForMapWork: declined - input ~$inputBytes B under " +
+        s"floor $fanOutMinBytes B (est $estPartitions < $target partitions)")
       df
     } else df.repartition(target)
   }

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.{BROADCAST, LogicalPlan, ResolvedHint}
 import org.apache.spark.sql.execution.ExplainMode
 import org.apache.spark.sql.graftbridge.Bridge
@@ -27,7 +27,8 @@ import graft.SparkEntry
   *  - `rows`: the row count of each named query (every query when none
   *    is named); exits 1 if any is empty or fails.
   *  - `explain`: `explain("formatted")` of each query, to stdout or to
-  *    `outDir/qNN.txt`.
+  *    `outDir/qNN.txt`, without Spark's session-global counters
+  *    ([[stableExplain]]).
   *  - `hints`: the growth table behind BroadcastScaleAuditSpec — every
   *    distinct `broadcast()`-hinted subtree across all queries, its rows
   *    at two corpus rungs, the growth factor and the growth⁴ projection
@@ -100,8 +101,7 @@ object Cli {
                       outDir: Option[String]): Int = {
     outDir.foreach(d => new java.io.File(d).mkdirs())
     qs.foreach { q =>
-      val txt = SparkEntry.queries(q)(spark, dir).queryExecution
-        .explainString(ExplainMode.fromString("formatted"))
+      val txt = stableExplain(SparkEntry.queries(q)(spark, dir))
       outDir match {
         case Some(d) =>
           val f = new java.io.File(d, q.takeWhile(_ != '_') + ".txt")
@@ -111,6 +111,19 @@ object Cli {
       }
     }
     0
+  }
+
+  /** `explain("formatted")` text with Spark's session-global counters
+    * taken out: exchange `plan_id`s are dropped and expression ids are
+    * renumbered in order of first appearance, so one plan explains to
+    * one text however often, and after whatever else, it is built.
+    */
+  private def stableExplain(df: DataFrame): String = {
+    val txt = df.queryExecution.explainString(ExplainMode.fromString("formatted"))
+      .replaceAll("(,\\s*)?\\[plan_id=\\d+\\]", "")
+    val ids = collection.mutable.HashMap[String, Int]()
+    "#(\\d+)".r.replaceAllIn(txt, m =>
+      "#" + ids.getOrElseUpdate(m.group(1), ids.size))
   }
 
   private def hints(spark: SparkSession, small: String, big: String): Int = {

@@ -24,28 +24,4 @@ object Bridge {
   : org.apache.spark.sql.DataFrame =
     org.apache.spark.sql.classic.Dataset.ofRows(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
-
-  /** Release the storage behind a CHECKPOINTED DataFrame: unpersist the
-    * LogicalRDD's backing RDD (localCheckpoint keeps its blocks in the
-    * block manager until GC of the RDD reference — an iterative loop
-    * that checkpoints per round would otherwise hold O(rounds) dead
-    * label/edge copies in executor storage) and, for reliable
-    * checkpoints, delete the round's checkpoint files. No-op on
-    * anything that is not a checkpoint-backed frame; never touches
-    * frames a caller could still recompute-from-lineage (a LogicalRDD
-    * HAS no lineage — callers must only release rounds they no longer
-    * read, which is the point).
-    */
-  def releaseCheckpoint(df: org.apache.spark.sql.DataFrame): Unit =
-    df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]]
-      .queryExecution.analyzed match {
-      case l: org.apache.spark.sql.execution.LogicalRDD =>
-        val r = l.rdd
-        r.unpersist(blocking = false)
-        if (r.getCheckpointFile.isDefined) // reliable only; None for local
-          try org.apache.spark.rdd.ReliableRDDCheckpointData
-            .cleanCheckpoint(r.sparkContext, r.id)
-          catch { case _: Exception => () } // best-effort file cleanup
-      case _ => ()
-    }
 }

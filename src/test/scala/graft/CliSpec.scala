@@ -35,6 +35,15 @@ class CliSpec extends SparkTestBase {
     } finally org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
   }
 
+  test("explain gives identical text for two builds of one query in one " +
+    "session") {
+    val (rc1, first) = out("explain", sf, "q17")
+    val (rc2, second) = out("explain", sf, "q17")
+    assert(rc1 === 0 && rc2 === 0)
+    assert(first.contains("Exchange"), first)
+    assert(first === second)
+  }
+
   test("time with one pass prints the minimum per query") {
     val (rc, txt) = out("time", sf, "q02", "1")
     assert(rc === 0)

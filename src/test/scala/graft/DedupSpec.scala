@@ -323,33 +323,12 @@ class DedupSpec extends SparkTestBase {
     assert(got === Map(1L -> 1L, 7L -> 1L, 8L -> 1L, 9L -> 1L))
   }
 
-  test("altStar equals min-label propagation on mixed components") {
-    val pairs = Seq(
-      (1L, 2L), (2L, 3L), (3L, 4L),         // chain
-      (10L, 11L), (11L, 12L), (10L, 12L),   // triangle
-      (20L, 21L),                           // pair
-      (31L, 30L), (30L, 32L))               // star, reversed orientation
-      .toDF("id_a", "id_b")
-    val prop = Dedup.duplicateClusters(pairs)
-      .as[(Long, Long)].collect().toMap
-    val star = Dedup.duplicateClustersAltStar(pairs)
-      .as[(Long, Long)].collect().toMap
-    assert(star === prop)
-    assert(star(4L) === 1L && star(12L) === 10L && star(32L) === 30L)
-  }
-
-  test("altStar converges in O(log d) where propagation's O(d) budget " +
-    "throws: a 64-node path") {
-    val path = (1L until 64L).map(i => (i, i + 1)).toDF("id_a", "id_b")
-    // min-label propagation moves the label one hop per round: a
-    // 63-hop path cannot finish in 20 rounds and must fail loudly
-    intercept[IllegalStateException] {
-      Dedup.duplicateClusters(path, maxIter = 20).count()
-    }
-    // alternating star halves path lengths per round
-    val got = Dedup.duplicateClustersAltStar(path, maxIter = 12)
-      .as[(Long, Long)].collect()
-    assert(got.length === 64)
+  test("duplicateClusters labels a 64-node path under default arguments") {
+    // a 63-hop chain, against the pair orientation: the least id must
+    // travel the whole path, one hop per round, with no round bound
+    val path = (1L until 64L).map(i => (i + 1, i)).toDF("id_a", "id_b")
+    val got = Dedup.duplicateClusters(path).as[(Long, Long)].collect()
+    assert(got.map(_._1).sorted.toSeq === (1L to 64L))
     assert(got.forall(_._2 == 1L))
   }
 
@@ -373,28 +352,6 @@ class DedupSpec extends SparkTestBase {
   test("sharedSpanPairs: docs shorter than the window yield no postings") {
     val docs = Seq((1L, "short"), (2L, "short")).toDF("doc_id", "text")
     assert(Dedup.sharedSpanPairs(docs, "doc_id", "text").count() === 0L)
-  }
-
-  test("both component loops produce identical labels under reliable " +
-    "checkpointing (checkpointDir set)") {
-    // the fault-tolerant path a multi-executor cluster runs: every round
-    // truncates through checkpoint() into a real directory instead of
-    // executor-local blocks — same algorithm, same labels
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_ckpt_").toString
-    val pairs = Seq(
-      (1L, 2L), (2L, 3L), (3L, 4L),       // chain
-      (10L, 11L), (11L, 12L), (10L, 12L), // triangle
-      (20L, 21L))                         // pair
-      .toDF("id_a", "id_b")
-    val expected = Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L,
-      10L -> 10L, 11L -> 10L, 12L -> 10L, 20L -> 20L, 21L -> 20L)
-    val prop = Dedup.duplicateClusters(pairs, checkpointDir = Some(dir))
-      .as[(Long, Long)].collect().toMap
-    val star = Dedup.duplicateClustersAltStar(pairs, checkpointDir = Some(dir))
-      .as[(Long, Long)].collect().toMap
-    assert(prop === expected)
-    assert(star === expected)
   }
 
   /** Every node of the final plan, AQE stages opened up. Runs the frame
@@ -446,23 +403,22 @@ class DedupSpec extends SparkTestBase {
     "exchange, and pairs postings over one posting-key exchange") {
     import org.apache.spark.sql.catalyst.plans.physical.RoundRobinPartitioning
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
-    val key = "spark.graft.scan.fanout.minBytes"
-    val docs = graft.sources.Tables.load(spark, sf, "documents")
-    try {
-      spark.conf.set(key, "1") // the one-file fixture fans out
-      val nodes = assertOnePostingExchange(
-        Dedup.ngramJaccardPairs(docs, "doc_id", "text", 3,
-          Seq("lang", "source")), "ngramJaccardPairs")
-      val shingling = nodes.filter(_.expressions.exists(
-        _.exists(_.isInstanceOf[graft.functions.ShingleHashes])))
-      assert(shingling.size === 1,
-        s"shingle_hashes evaluated ${shingling.size}×:\n${nodes.head}")
-      assert(subtree(shingling.head).exists {
-        case e: ShuffleExchangeExec =>
-          e.outputPartitioning.isInstanceOf[RoundRobinPartitioning]
-        case _ => false
-      }, s"shingling must sit above the fan-out exchange:\n${nodes.head}")
-    } finally spark.conf.unset(key)
+    // the sf0.1 file is over the fan-out floor; the filter keeps the
+    // pair stream at the sf0.001 corpus size without changing the leaf
+    val docs = graft.sources.Tables.load(spark, sf01, "documents")
+      .filter($"doc_id" < 500)
+    val nodes = assertOnePostingExchange(
+      Dedup.ngramJaccardPairs(docs, "doc_id", "text", 3,
+        Seq("lang", "source")), "ngramJaccardPairs")
+    val shingling = nodes.filter(_.expressions.exists(
+      _.exists(_.isInstanceOf[graft.functions.ShingleHashes])))
+    assert(shingling.size === 1,
+      s"shingle_hashes evaluated ${shingling.size}×:\n${nodes.head}")
+    assert(subtree(shingling.head).exists {
+      case e: ShuffleExchangeExec =>
+        e.outputPartitioning.isInstanceOf[RoundRobinPartitioning]
+      case _ => false
+    }, s"shingling must sit above the fan-out exchange:\n${nodes.head}")
   }
 
   test("sharedSpanPairs pairs postings over one posting-key exchange, " +

@@ -8,7 +8,7 @@ import org.apache.spark.ListenerBusSync
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.ext.Graph
+import graft.ext.{Dedup, Graph}
 
 class GraphSpec extends SparkTestBase {
   import spark.implicits._
@@ -149,30 +149,160 @@ class GraphSpec extends SparkTestBase {
       Seq("n5", "n45").toDF("id"))
   }
 
+  /** Spark jobs one call of `op` launches. */
+  private def jobs(op: => DataFrame): Int = {
+    val sc = spark.sparkContext
+    val n = new AtomicInteger
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        n.incrementAndGet()
+    }
+    ListenerBusSync.drain(sc)
+    sc.addSparkListener(l)
+    try {
+      op.unpersist()
+      ListenerBusSync.drain(sc)
+      n.get
+    } finally sc.removeSparkListener(l)
+  }
+
+  private def unweightedGraph(seed: Long) =
+    randomGraph(seed, _.toLong).map(e => (e._1, e._2)).toDF("src", "dst")
+
   test("pageRank launches the same number of Spark jobs for 2 and 6 " +
     "iterations") {
-    val sc = spark.sparkContext
-    val edges = randomGraph(3L, _.toLong).map(e => (e._1, e._2))
-      .toDF("src", "dst")
-    def jobs(iters: Int): Int = {
-      val n = new AtomicInteger
-      val l = new SparkListener {
-        override def onJobStart(e: SparkListenerJobStart): Unit =
-          n.incrementAndGet()
-      }
-      ListenerBusSync.drain(sc)
-      sc.addSparkListener(l)
-      try {
-        Graph.pageRank(edges, iters).unpersist()
-        ListenerBusSync.drain(sc)
-        n.get
-      } finally sc.removeSparkListener(l)
-    }
+    val edges = unweightedGraph(3L)
     // one adjacency job, then the result's materialization (under AQE:
     // the cache build, the count's map stage and its final stage)
-    val two = jobs(2)
-    assert(two === jobs(6))
+    val two = jobs(Graph.pageRank(edges, 2))
+    assert(two === jobs(Graph.pageRank(edges, 6)))
     assert(two <= 4, s"$two jobs")
+  }
+
+  test("labelPropagation and hits launch the same number of Spark jobs " +
+    "for 2 and 6 iterations") {
+    val edges = unweightedGraph(5L)
+    val lp = jobs(Graph.labelPropagation(edges, 2))
+    assert(lp === jobs(Graph.labelPropagation(edges, 6)))
+    val h = jobs(Graph.hits(edges, 2))
+    assert(h === jobs(Graph.hits(edges, 6)))
+  }
+
+  /** Plain-Scala definitions of the convergence and voting loops. */
+  private def refComponents[K: Ordering](pairs: Seq[(K, K)]): Map[K, K] = {
+    val ord = implicitly[Ordering[K]]
+    var l = pairs.flatMap(p => Seq(p._1, p._2)).map(v => v -> v).toMap
+    var moving = true
+    while (moving) {
+      val next = pairs.foldLeft(l) { case (m, (a, b)) =>
+        val x = ord.min(m(a), m(b))
+        m.updated(a, x).updated(b, x)
+      }
+      moving = next != l
+      l = next
+    }
+    l
+  }
+
+  private def refBfs[K](edges: Seq[(K, K)], seeds: Set[K], maxHops: Int)
+  : Map[K, Long] = {
+    var hops = seeds.map(_ -> 0L).toMap
+    var frontier = seeds
+    for (h <- 1 to maxHops) {
+      frontier = edges.collect { case (s, d) if frontier(s) => d }
+        .filterNot(hops.contains).toSet
+      hops ++= frontier.map(_ -> h.toLong)
+    }
+    hops
+  }
+
+  private def refKCore[K](pairs: Seq[(K, K)], k: Int): Map[K, Long] = {
+    val sym = pairs ++ pairs.map(_.swap)
+    var alive = sym.map(_._1).toSet
+    var deg = Map.empty[K, Long]
+    var moving = true
+    while (moving) {
+      deg = sym.filter(e => alive(e._1) && alive(e._2))
+        .groupMapReduce(_._1)(_ => 1L)(_ + _).filter(_._2 >= k)
+      moving = deg.keySet != alive
+      alive = deg.keySet
+    }
+    deg
+  }
+
+  private def refLabels[K: Ordering](edges: Seq[(K, K)], iters: Int)
+  : Map[K, K] = {
+    val nodes = edges.flatMap(e => Seq(e._1, e._2)).distinct
+    var l = nodes.map(v => v -> v).toMap
+    for (_ <- 1 to iters) {
+      val votes = edges.groupMapReduce(e => (e._2, l(e._1)))(_ => 1L)(_ + _)
+        .groupBy(_._1._1)
+      l = nodes.map(v => v -> votes.get(v).fold(v)(_.toSeq
+        .minBy { case ((_, lbl), c) => (-c, lbl) }._1._2)).toMap
+    }
+    l
+  }
+
+  private def refHits[K](edges: Seq[(K, K)], iters: Int)
+  : Map[K, (Double, Double)] = {
+    val nodes = edges.flatMap(e => Seq(e._1, e._2)).distinct
+    var h = nodes.map(_ -> 1.0).toMap
+    var a = h
+    for (_ <- 1 to iters) {
+      val in = edges.groupMapReduce(_._2)(e => h(e._1))(_ + _)
+      a = nodes.map(v => v -> in.getOrElse(v, 0.0)).toMap
+      val out = edges.groupMapReduce(_._1)(e => a(e._2))(_ + _)
+      h = nodes.map(v => v -> out.getOrElse(v, 0.0)).toMap
+    }
+    val (ht, at) = (h.values.sum, a.values.sum)
+    nodes.map(v => v -> ((h(v) / ht, a(v) / at))).toMap
+  }
+
+  /** `sparse` (as an id_a, id_b frame) is the first 30 `edges`: several
+    * components and trees.
+    */
+  private def loopCase[K: Ordering](edges: Seq[(K, K)], seeds: Set[K],
+                                    df: DataFrame, seedDf: DataFrame,
+                                    sparse: DataFrame): Unit = {
+    for (p <- Seq(1, 4, 7)) withShufflePartitions(p) {
+      def rows(out: DataFrame) = out.collect().map(r =>
+        r.get(0).asInstanceOf[K] -> r.get(1)).toMap
+      val what = s"partitions=$p"
+      assert(rows(Dedup.duplicateClusters(sparse)) ===
+        refComponents(edges.take(30)), s"components $what")
+      assert(rows(Graph.bfsHops(df, seedDf, 3)) ===
+        refBfs(edges, seeds, 3), s"bfsHops $what")
+      for (k <- Seq(3, 6))
+        assert(rows(Graph.kCore(df, "src", "dst", k)) ===
+          refKCore(edges, k), s"kCore k=$k $what")
+      assert(rows(Graph.labelPropagation(df, 3)) === refLabels(edges, 3),
+        s"labelPropagation $what")
+      val hits = Graph.hits(df, 2).collect().map(r =>
+        r.get(0).asInstanceOf[K] -> ((r.getDouble(1), r.getDouble(2)))).toMap
+      val want = refHits(edges, 2)
+      assert(hits.keySet === want.keySet, s"hits $what")
+      hits.foreach { case (v, (h, a)) =>
+        assert(math.abs(h - want(v)._1) < 1e-12 &&
+          math.abs(a - want(v)._2) < 1e-12, s"hits $what: node $v")
+      }
+    }
+  }
+
+  test("components, BFS, k-core, label propagation and HITS match plain " +
+    "Scala definitions on random multigraphs at any partition count " +
+    "(Long ids)") {
+    val edges = randomGraph(13L, _.toLong).map(e => (e._1, e._2))
+    // seed 99 is not in the graph: it comes back at hop 0
+    loopCase(edges, Set(3L, 41L, 99L), edges.toDF("src", "dst"),
+      Seq(3L, 41L, 99L, 3L).toDF("id"), edges.take(30).toDF("id_a", "id_b"))
+  }
+
+  test("components, BFS, k-core, label propagation and HITS match plain " +
+    "Scala definitions on random multigraphs at any partition count " +
+    "(String ids)") {
+    val edges = randomGraph(17L, i => s"n$i").map(e => (e._1, e._2))
+    loopCase(edges, Set("n5", "n45"), edges.toDF("src", "dst"),
+      Seq("n5", "n45").toDF("id"), edges.take(30).toDF("id_a", "id_b"))
   }
 
   test("labelPropagation: triangle + pendant converges to one community; " +

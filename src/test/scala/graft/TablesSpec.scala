@@ -62,75 +62,65 @@ class TablesSpec extends SparkTestBase {
 
   test("fanOutForMapWork gates on LEAF-SCAN bytes, not the projected " +
       "estimate (VERDICT r17 #1)") {
-    val key = "spark.graft.scan.fanout.minBytes"
-    val fileBytes = new java.io.File(s"$sf/documents.parquet").length
+    val fileBytes = new java.io.File(s"$sf01/documents.parquet").length
     val target = spark.sparkContext.defaultParallelism
     // a text-only projection: Catalyst's fallback estimate prices the
-    // string column at ~20 B/row (well under the real file size) — the
-    // r17 estimate-based floor declined exactly this shape. Floor set
-    // to the exact on-disk size: the leaf-bytes gate fires iff it reads
-    // the file size, not the projected estimate.
-    val txt = Tables.load(spark, sf, "documents").select("text")
+    // string column at ~20 B/row, under the floor, while the file on
+    // disk is over it — the r17 estimate-based floor declined exactly
+    // this shape. The leaf-bytes gate fires iff it reads the file size,
+    // not the projected estimate.
+    val txt = Tables.load(spark, sf01, "documents").select("text")
     assert(txt.queryExecution.optimizedPlan.stats.sizeInBytes <
-      BigInt(fileBytes), "precondition: projected estimate under file size")
-    try {
-      spark.conf.set(key, fileBytes.toString)
-      assert(Tables.fanOutForMapWork(txt).rdd.getNumPartitions === target)
-    } finally spark.conf.unset(key)
-    // default 256 KiB floor: a 64 KB leaf declines — and stays ONE
+      BigInt(Tables.fanOutMinBytes) && fileBytes >= Tables.fanOutMinBytes,
+      "precondition: projected estimate under the floor, file over it")
+    assert(Tables.fanOutForMapWork(txt).rdd.getNumPartitions === target)
+    // a 64 KB leaf is under the floor: declined, and stays ONE
     // partition (no exchange added)
-    assert(Tables.fanOutForMapWork(txt).rdd.getNumPartitions === 1)
+    val small = Tables.load(spark, sf, "documents").select("text")
+    assert(Tables.fanOutForMapWork(small).rdd.getNumPartitions === 1)
   }
 
-  test("fanOutForMapWork declines shuffling inputs and survives a " +
-      "malformed floor override (ADVICE r17)") {
-    val key = "spark.graft.scan.fanout.minBytes"
+  test("fanOutForMapWork declines shuffling inputs (ADVICE r17)") {
     import org.apache.spark.sql.functions._
-    val docs = Tables.load(spark, sf, "documents")
-    try {
-      spark.conf.set(key, "1")
-      // exchange-inducing input (aggregate): returned unchanged even
-      // with the floor at 1 byte — the downstream shuffle redistributes
-      // anyway, and probing .rdd under AQE would materialize stages
-      val agg = docs.groupBy(col("lang")).agg(count(lit(1)).as("n"))
-      assert(Tables.fanOutForMapWork(agg) eq agg)
-      // scan-stage input with a 1-byte floor fires
-      assert(Tables.fanOutForMapWork(docs.select("text"))
-        .rdd.getNumPartitions === spark.sparkContext.defaultParallelism)
-      // malformed override degrades to the 256 KiB default (declines
-      // on a 64 KB leaf) instead of throwing NumberFormatException
-      spark.conf.set(key, "not-a-number")
-      assert(Tables.fanOutForMapWork(docs.select("text"))
-        .rdd.getNumPartitions === 1)
-    } finally spark.conf.unset(key)
+    val docs = Tables.load(spark, sf01, "documents")
+    // exchange-inducing input (aggregate) over a leaf above the floor:
+    // returned unchanged — the downstream shuffle redistributes anyway,
+    // and probing .rdd under AQE would materialize stages
+    val agg = docs.groupBy(col("lang")).agg(count(lit(1)).as("n"))
+    assert(Tables.fanOutForMapWork(agg) eq agg)
+    // the same leaf as a scan-stage input fires
+    assert(Tables.fanOutForMapWork(docs.select("text"))
+      .rdd.getNumPartitions === spark.sparkContext.defaultParallelism)
   }
 
   test("fanOutForMapWork fans out a non-splittable file that the bytes " +
       "estimate prices as many splits") {
     val dir = java.nio.file.Files.createTempDirectory("fanout-gz").toString
     val target = spark.sparkContext.defaultParallelism
-    val docs = Tables.load(spark, sf, "documents").select("doc_id", "text")
+    val docs = Tables.load(spark, sf01, "documents")
+      .select("doc_id", "text")
     docs.coalesce(1).write.mode("overwrite")
       .option("compression", "gzip").json(s"$dir/gz")
     docs.coalesce(1).write.mode("overwrite").json(s"$dir/plain")
-    val keys = Seq("spark.graft.scan.fanout.minBytes",
-      "spark.sql.files.maxPartitionBytes")
+    val key = "spark.sql.files.maxPartitionBytes"
     try {
-      spark.conf.set(keys(0), "1")
       // 2 KiB splits: the gzipped file's bytes alone price it at over
       // `target` partitions, yet it scans in ONE task
-      spark.conf.set(keys(1), "2048")
+      spark.conf.set(key, "2048")
       val gz = spark.read.schema(docs.schema).json(s"$dir/gz")
       assert(gz.rdd.getNumPartitions === 1, "precondition: one task")
-      assert(new java.io.File(s"$dir/gz").listFiles()
-        .filter(_.getName.endsWith(".gz")).map(_.length).sum > 2048L * target,
+      val gzBytes = new java.io.File(s"$dir/gz").listFiles()
+        .filter(_.getName.endsWith(".gz")).map(_.length).sum
+      assert(gzBytes > 2048L * target,
         "precondition: the bytes estimate reaches target")
+      assert(gzBytes >= Tables.fanOutMinBytes,
+        "precondition: the file is over the floor")
       assert(Tables.fanOutForMapWork(gz).rdd.getNumPartitions === target)
       // the same rows uncompressed really split: returned unchanged
       val plain = spark.read.schema(docs.schema).json(s"$dir/plain")
       assert(Tables.fanOutForMapWork(plain) eq plain)
     } finally {
-      keys.foreach(spark.conf.unset)
+      spark.conf.unset(key)
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
     }
   }
