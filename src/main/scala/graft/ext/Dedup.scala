@@ -8,15 +8,20 @@ import org.apache.spark.sql.functions._
   *
   *  - exact:      hash-groupBy on a content digest (one shuffle on the
   *                digest — uniform keys, no skew)
-  *  - MinHash+LSH: shingle → minhash signature (map-side) → band →
-  *                bucket-join (shuffle on band hash only; candidate pairs
-  *                verified in-bucket, never all-pairs)
-  *  - SimHash:    64-bit signature (map-side) → bucket on signature
+  *  - banded LSH: every signature path — MinHash (q30/q63 and the md5
+  *                twin q295), SimHash and the bit-signature twins
+  *                ([[hammingPairs]]), sign-LSH
+  *                ([[Similarity.lshNearNeighbors]]) and embedding cells
+  *                ([[embeddingNearDups]]) — computes per-band bucket keys
+  *                map-side and pairs through ONE operator,
+  *                [[bandPairs]]: one (band, bucket) self-join, each pair
+  *                kept once at its first agreeing band, then verified
+  *                (shingle Jaccard, signature agreement, Hamming,
+  *                cosine). Bucket-local, never all-pairs.
   *  - n-gram Jaccard / containment / shared spans: inverted index —
   *                postings shuffled once on a 64-bit posting key, then
   *                capped and paired in one streaming pass
   *                ([[graft.plans.PostingPairs]]), never all-pairs
-  *  - embedding near-dup: sign-LSH buckets → in-bucket cosine
   */
 object Dedup {
 
@@ -52,27 +57,95 @@ object Dedup {
         lit(Long.MaxValue))
     }: _*))
 
-  /** MinHash LSH banding: (band_id, hash of the band's signature slice)
-    * pairs. Rows sharing any band bucket are near-dup candidates.
-    * One explode (rows × bands) + one shuffle on the bucket key.
+  /** Candidate pairs of rows sharing a bucket in any band: the one
+    * banded self-join behind every LSH near-dup path here and in
+    * [[Similarity.lshNearNeighbors]]. `keys` holds one bucket-key
+    * expression per band, over `rows`' columns. Each row is posted once
+    * per band as (band, bucket), and the postings self-join on
+    * (band, bucket) with id_a < id_b — the pair count is bucket-local,
+    * never corpus².
+    *
+    * A pair sharing buckets in several bands meets once per shared
+    * band. It is kept only at its FIRST band whose keys are equal,
+    * compared from the key arrays both sides carry: the same values the
+    * join matched on, so the result is exactly the `distinct()` pair
+    * set over all shared buckets, without a shuffle of the pair stream.
+    * A null key never joins and never agrees.
+    *
+    * `postings` transforms the posting frame (`idCol`, the carried
+    * columns, band, bucket) before the join — the hook an occupancy cap
+    * uses. Lazy: building the frame launches no job. Output: id_a,
+    * `c`_a for each carried column `c`, id_b, `c`_b.
     */
-  /** ENGINE-PORTABLE MinHash-LSH near-dup candidates: identical math to
-    * [[minhashNearDups]] but built on `md5` — a hash BOTH Spark and
-    * DuckDB implement bit-identically — so the whole pipeline (shingle →
-    * per-seed minhash → banded buckets → candidate pairs → signature-
-    * agreement estimate) is replayable by the SQL oracle, promoting the
-    * LSH *math* from CI-pinned to oracle-checked the way q294 did for
-    * ALS. The shipped q30/q63 operators keep `xxhash64` (codegen'd
-    * long-arithmetic, no hex strings — the fast path); this is the
-    * portable twin that certifies the algebra.
+  def bandPairs(rows: DataFrame, idCol: String, keys: Seq[Column],
+                carried: Seq[String] = Nil,
+                postings: DataFrame => DataFrame = identity): DataFrame = {
+    val kept = col(idCol) +: col("_keys") +: carried.map(col)
+    // posexplode_outer, not posexplode: for an inner generator Spark
+    // infers `size(_keys) > 0` and pushes it, with the key expressions
+    // inlined, below the generator, so every signature would be
+    // computed again per band. The key array is never empty or null,
+    // so the outer generator emits the same rows.
+    val posted = postings(rows
+      .select(col(idCol) +: array(keys: _*).as("_keys") +: carried.map(col): _*)
+      .select(kept :+ posexplode_outer(col("_keys")).as(Seq("band", "bucket")): _*))
+    def side(s: String): DataFrame = posted.select(col("band") +:
+      col("bucket") +: col(idCol).as(s"id_$s") +: col("_keys").as(s"_keys_$s") +:
+      carried.map(c => col(c).as(s"${c}_$s")): _*)
+    def agree(k: Int): Column = col("_keys_a")(k) === col("_keys_b")(k)
+    val firstAgreeing = (1 until keys.size)
+      .foldLeft(when(agree(0), 0))((acc, k) => acc.when(agree(k), k))
+    def out(s: String) = col(s"id_$s") +: carried.map(c => col(s"${c}_$s"))
+    side("a").join(side("b"), Seq("band", "bucket"))
+      .filter(col("id_a") < col("id_b") && col("band") === firstAgreeing)
+      .select(out("a") ++ out("b"): _*)
+  }
+
+  /** Pairs of bit signatures within Hamming distance `maxHamming`. Each
+    * of the `words` long columns holds a signature of `bits` bits
+    * (the low ones); each word is cut into `blocks` equal blocks, the
+    * blocks are the band keys of [[bandPairs]], and every candidate is
+    * verified with Σ bit_count(xor) over the words. Two signatures
+    * within distance d < |blocks| agree exactly on at least one block
+    * (pigeonhole), so the blocking is EXHAUSTIVE: the result is every
+    * pair at distance ≤ `maxHamming`, once, with id_a < id_b. Output:
+    * (id_a, id_b, hamming: long).
+    */
+  def hammingPairs(sigs: DataFrame, idCol: String, words: Seq[String],
+                   bits: Int, blocks: Int, maxHamming: Int): DataFrame = {
+    require(words.nonEmpty && bits > 0 && bits <= 64 && blocks > 0 &&
+      bits % blocks == 0, "blocks must divide the bit count of a long")
+    require(maxHamming < blocks * words.size,
+      "pigeonhole exhaustiveness needs maxHamming < blocks")
+    val width = bits / blocks
+    // mask AFTER the shift: shiftright is arithmetic, and a word with
+    // bit 63 set would otherwise sign-extend into its top block
+    val keys = for (w <- words; b <- 0 until blocks)
+      yield shiftright(col(w), b * width).bitwiseAND(-1L >>> (64 - width))
+    val hamming = words.map(w =>
+      bit_count(col(s"${w}_a").bitwiseXOR(col(s"${w}_b")))).reduce(_ + _)
+    bandPairs(sigs, idCol, keys, words)
+      .select(col("id_a"), col("id_b"), hamming.cast("long").as("hamming"))
+      .filter(col("hamming") <= maxHamming)
+  }
+
+  /** ENGINE-PORTABLE MinHash signatures (the q295 twin's sig half):
+    * identical math to [[minhashNearDups]] but built on `md5` — a hash
+    * BOTH Spark and DuckDB implement bit-identically — so the whole
+    * pipeline (shingle → per-seed minhash → banded buckets → candidate
+    * pairs → signature-agreement estimate, [[minhashPairsFromSigs]]) is
+    * replayable by the SQL oracle, promoting the LSH *math* from
+    * CI-pinned to oracle-checked the way q294 did for ALS. The shipped
+    * q30/q63 operators keep `xxhash64` (codegen'd long-arithmetic, no
+    * hex strings — the fast path); both pair through [[bandPairs]].
     *
     * minhash_s(doc) = min over shingles of md5("s:" || shingle) — a
     * fixed-width lowercase-hex string, so lexicographic MIN equals
-    * numeric min. Bands of `numHashes/bands` concatenated hashes bucket
-    * the candidates; est_jaccard = (#agreeing seeds)/numHashes, an
-    * exact k/n rational (no float drift). Scale shape matches
-    * [[minhashNearDups]]: the self-join is (band, bucket)-local, never
-    * corpus².
+    * numeric min. Per-doc array `mh` of `numHashes` min-hashes over
+    * distinct `shingleN`-gram shingles. Separate from the pair half so
+    * a caller can MATERIALIZE it (corpus-keyed parquet staging — a
+    * production dedup index builds signatures once per corpus
+    * snapshot): the 16×|shingles| md5 sweep is the whole cold cost.
     *
     * Short docs (< shingleN tokens) are safe under ANSI mode (the
     * Spark 4 default): token lookups use `try_element_at`, which
@@ -81,25 +154,6 @@ object Dedup {
     * `||` — the doc's lone shingle is NULL, its md5s are NULL, `min`
     * skips it, and the all-null signature can never clear the
     * agreement threshold, so both engines drop the doc gracefully.
-    */
-  def minhashNearDupsPortable(df: DataFrame, idCol: String, textCol: String,
-                              threshold: Double = 0.5, numHashes: Int = 16,
-                              bands: Int = 4, shingleN: Int = 3): DataFrame = {
-    // three consumers read the signature frame (banding + both sides of
-    // the estimate join) — cached so the 16×|shingles| md5 sweep runs
-    // once (the multi-reference rule; measured 3× recompute without it)
-    val sigs = graft.core.Caches.cached(
-      minhashPortableSigs(df, idCol, textCol, numHashes, shingleN))
-    minhashPairsFromSigs(sigs, idCol, threshold, numHashes, bands)
-  }
-
-  /** The signature half of [[minhashNearDupsPortable]]: per-doc array
-    * of `numHashes` md5 min-hashes over distinct `shingleN`-gram
-    * shingles. Exposed separately so a caller can MATERIALIZE the sig
-    * frame (cache, or corpus-keyed parquet staging — a production
-    * dedup index builds signatures once per corpus snapshot) before
-    * the banded pair join: the 16×|shingles| md5 sweep is the whole
-    * cold cost of the composite operator.
     */
   def minhashPortableSigs(df: DataFrame, idCol: String, textCol: String,
                           numHashes: Int = 16, shingleN: Int = 3)
@@ -130,49 +184,63 @@ object Dedup {
         array((0 until numHashes).map(s => col(s"_m$s")): _*).as("mh"))
   }
 
-  /** The pair half of [[minhashNearDupsPortable]]: banded bucketing
-    * over an existing (id, mh) frame, candidate dedup, agreement
-    * estimate. The caller owns `sigs`' materialization.
+  /** The pair half of the q295 twin, over an (id, mh) frame from
+    * [[minhashPortableSigs]]: a band's bucket key is the concatenation
+    * of its `numHashes/bands` hashes, [[bandPairs]] pairs them, and
+    * est_jaccard = (#agreeing seeds)/numHashes — an exact k/n rational
+    * (no float drift). Bands are compared as these strings, the values
+    * the join matched on: `concat_ws` skips nulls, so equal strings are
+    * not the same relation as equal components.
     */
   def minhashPairsFromSigs(sigs: DataFrame, idCol: String,
                            threshold: Double = 0.5, numHashes: Int = 16,
                            bands: Int = 4): DataFrame = {
     val rowsPerBand = numHashes / bands
-    val bnd = sigs.select(col(idCol), col("mh"), posexplode(
-      transform(sequence(lit(0), lit(bands - 1)), b =>
-        concat_ws("", (0 until rowsPerBand).map(r =>
-          element_at(col("mh"), b * rowsPerBand + r + 1)): _*)))
-      .as(Seq("band", "bucket")))
-    val cand = bnd.select(col("band"), col("bucket"), col(idCol).as("id_a"))
-      .join(bnd.select(col("band"), col("bucket"), col(idCol).as("id_b")),
-        Seq("band", "bucket"))
-      .filter(col("id_a") < col("id_b"))
-      .select("id_a", "id_b").distinct()
-    graft.core.Caches.materializedThenRelease(
-      cand
-        .join(sigs.select(col(idCol).as("id_a"), col("mh").as("mh_a")),
-          "id_a")
-        .join(sigs.select(col(idCol).as("id_b"), col("mh").as("mh_b")),
-          "id_b")
-        .withColumn("est_jaccard",
-          round(aggregate(zip_with(col("mh_a"), col("mh_b"),
-              (x, y) => when(x === y, 1).otherwise(0)),
-            lit(0), _ + _).cast("double") / numHashes + lit(1e-9), 4))
-        .filter(col("est_jaccard") >= threshold)
-        .select("id_a", "id_b", "est_jaccard"),
-      sigs)
+    val keys = (0 until bands).map(b => concat_ws("", (0 until rowsPerBand)
+      .map(r => element_at(col("mh"), b * rowsPerBand + r + 1)): _*))
+    bandPairs(sigs, idCol, keys)
+      .join(sigs.select(col(idCol).as("id_a"), col("mh").as("mh_a")), "id_a")
+      .join(sigs.select(col(idCol).as("id_b"), col("mh").as("mh_b")), "id_b")
+      .withColumn("est_jaccard",
+        round(aggregate(zip_with(col("mh_a"), col("mh_b"),
+            (x, y) => when(x === y, 1).otherwise(0)),
+          lit(0), _ + _).cast("double") / numHashes + lit(1e-9), 4))
+      .filter(col("est_jaccard") >= threshold)
+      .select("id_a", "id_b", "est_jaccard")
   }
 
-  private val portableSimhashBits = 60
-  private val portableSimhashBlocks = 4
+  /** Width of [[simhashPortableSigs]]' signature. */
+  val portableSimhashBits = 60
 
-  /** The signature half of [[simhashNearDupsPortable]]: per-doc 60-bit
-    * portable SimHash (md5 token hash, per-bit majority vote). Exposed
-    * separately so a caller can MATERIALIZE the sig frame (cache, or
-    * corpus-keyed parquet staging — a production dedup index builds
-    * signatures once per corpus snapshot) before the banded pair join;
-    * the boundary is also what bounds CollapseProject (see
-    * [[simhashNearDupsPortable]]'s cache note).
+  /** ENGINE-PORTABLE SimHash signatures (the q296 twin's sig half) —
+    * the q295 promotion applied to the bit-vote math: the shipped q31
+    * operator keys on the codegen'd seed-42 XXH64
+    * [[graft.functions.SimHash64]] (Spark-internal, not replayable by a
+    * SQL oracle). This twin runs the IDENTICAL algebra — per-token
+    * hash, per-bit majority vote, and, through [[hammingPairs]], the
+    * same block-exact candidate generation and bit_count verify — on
+    * md5, which Spark and DuckDB implement bit-identically.
+    *
+    * tokval(t) = first 15 md5 hex chars of the lowercase token as a
+    * 60-bit integer (Spark `conv(_,16,10)` ≡ DuckDB `('0x'||_)::BIGINT`;
+    * 15 hex chars is the widest value that fits a SIGNED 64-bit int in
+    * both engines — 16 would overflow BIGINT); signature bit i is set
+    * iff Σ_tokens (2·bit_i(tokval) − 1) > 0 — exactly
+    * [[simhashFromHashes]]' vote at width 60, within 4 bits of the
+    * shipped 64-bit strictness (a 32-bit draft emitted 85k pairs at
+    * sf0.1 where the shipped q31 finds ~60 — same math, far looser
+    * Hamming-≤-3 semantics). With 4 blocks of 15 bits a random-doc
+    * pair sits at expected Hamming 30, so the output is near-dup
+    * pairs, not bucket noise.
+    *
+    * Scale shape: one md5 + 60 bit-tests per token row, map-side
+    * combined into 60 per-doc sums; everything downstream is
+    * |docs|-sized. The vote runs over token ROWS (explode, plain
+    * aggregates) for the same CollapseProject reason as
+    * [[minhashPortableSigs]]. The sig column is a 60-term sum of whens;
+    * without a materialization boundary CollapseProject inlines that
+    * tree into every block key on both join sides, so callers stage
+    * the frame (q296 stages it corpus-keyed).
     */
   def simhashPortableSigs(df: DataFrame, idCol: String, textCol: String)
   : DataFrame = {
@@ -195,140 +263,24 @@ object Dedup {
           .reduce(_ + _).as("sig"))
   }
 
-  /** The pair half of [[simhashNearDupsPortable]]: block-exact banding
-    * over an existing (id, sig) frame, first-agreeing-block dedup,
-    * bit_count verify. The caller owns `sigs`' materialization.
-    */
-  def simhashPairsFromSigs(sigs: DataFrame, idCol: String,
-                           maxHamming: Int = 3): DataFrame =
-    bitSigPairsFromSigs(sigs, idCol, maxHamming,
-      portableSimhashBits, portableSimhashBlocks)
-
-  /** Generalized block-exact Hamming pair join over any (id, sig)
-    * bit-signature frame (`sig` a long holding `totalBits` bits):
-    * candidates from exact agreement on one of `blocks` disjoint
-    * `totalBits/blocks`-bit blocks — EXHAUSTIVE for Hamming ≤
-    * `maxHamming` whenever `maxHamming < blocks` (pigeonhole) — kept
-    * only at their FIRST agreeing block (map-side dedup, no distinct
-    * shuffle on the pair stream), then `bit_count(xor)` verify. Shared
-    * by the SimHash (q296) and sign-LSH (q297) portable twins; the
-    * (block, bucket)-local join is never corpus².
-    */
-  def bitSigPairsFromSigs(sigs: DataFrame, idCol: String,
-                          maxHamming: Int, totalBits: Int,
-                          blocks: Int): DataFrame = {
-    require(totalBits % blocks == 0, "blocks must divide totalBits")
-    require(maxHamming < blocks,
-      "pigeonhole exhaustiveness needs maxHamming < blocks")
-    val bitsPerBlock = totalBits / blocks
-    val bnd = sigs.select(col(idCol), col("sig"), posexplode(
-        array((0 until blocks).map(b =>
-          shiftright(col("sig"), b * bitsPerBlock)
-            .bitwiseAND((1L << bitsPerBlock) - 1)): _*))
-      .as(Seq("block", "bucket")))
-    val l = bnd.select(col("block"), col("bucket"),
-      col(idCol).as("id_a"), col("sig").as("sig_a"))
-    val r = bnd.select(col("block"), col("bucket"),
-      col(idCol).as("id_b"), col("sig").as("sig_b"))
-    val xor = col("sig_a").bitwiseXOR(col("sig_b"))
-    def blockAgrees(b: Int): Column =
-      shiftright(xor, b * bitsPerBlock)
-        .bitwiseAND((1L << bitsPerBlock) - 1) === 0
-    val firstAgreeing = (0 until blocks - 1).foldLeft(
-        when(blockAgrees(0), 0)) { (acc, b) =>
-      if (b == 0) acc else acc.when(blockAgrees(b), b)
-    }.otherwise(blocks - 1)
-    graft.core.Caches.materializedThenRelease(
-      l.join(r, Seq("block", "bucket"))
-        .filter(col("id_a") < col("id_b"))
-        .filter(col("block") === firstAgreeing)
-        .withColumn("hamming", bit_count(xor))
-        .filter(col("hamming") <= maxHamming)
-        .select(col("id_a"), col("id_b"),
-          col("hamming").cast("long").as("hamming")),
-      sigs)
-  }
-
-  /** ENGINE-PORTABLE SimHash near-dup twin (q296) — the q295 promotion
-    * applied to the bit-vote math: the shipped q31 operator keys on the
-    * codegen'd seed-42 XXH64 [[graft.functions.SimHash64]] (Spark-
-    * internal, not replayable by a SQL oracle), so its correctness was
-    * CI-pinned only. This twin runs the IDENTICAL algebra — per-token
-    * hash, per-bit majority vote, block-exact Hamming candidate
-    * generation, bit_count verify — on md5, which Spark and DuckDB
-    * implement bit-identically, promoting the SimHash *math* from
-    * CI-pinned to oracle-checked.
-    *
-    * tokval(t) = first 15 md5 hex chars of the lowercase token as a
-    * 60-bit integer (Spark `conv(_,16,10)` ≡ DuckDB `('0x'||_)::BIGINT`;
-    * 15 hex chars is the widest value that fits a SIGNED 64-bit int in
-    * both engines — 16 would overflow BIGINT); signature bit i is set
-    * iff Σ_tokens (2·bit_i(tokval) − 1) > 0 — exactly
-    * [[simhashFromHashes]]' vote at width 60, within 4 bits of the
-    * shipped 64-bit strictness (a 32-bit draft emitted 85k pairs at
-    * sf0.1 where the shipped q31 finds ~60 — same math, far looser
-    * Hamming-≤-3 semantics). Candidates come from exact agreement on
-    * one of 4 disjoint 15-bit blocks (pigeonhole: Hamming ≤ 3 forces
-    * ≥ 1 exact block, so blocking is EXHAUSTIVE), kept only at their
-    * FIRST agreeing block — [[simhashNearDups]]' map-side dedup, no
-    * distinct shuffle on the pair stream. A random-doc pair sits at
-    * expected Hamming 30, so the output is near-dup pairs, not bucket
-    * noise, and the (block, bucket)-local join is never corpus².
-    *
-    * Scale shape: one md5 + 32 bit-tests per token row, map-side
-    * combined into 32 per-doc sums; everything downstream is
-    * |docs|-sized. The vote runs over token ROWS (explode, plain
-    * aggregates) for the same CollapseProject reason as
-    * [[minhashNearDupsPortable]].
-    */
-  def simhashNearDupsPortable(df: DataFrame, idCol: String, textCol: String,
-                              maxHamming: Int = 3): DataFrame = {
-    // CACHED for the same reason minhashNearDupsPortable caches its
-    // signature frame, but here the dominant cost is DRIVER-side: the
-    // sig column is a 60-term sum of whens over the 60 vote columns,
-    // and without a materialization boundary CollapseProject inlines
-    // that tree into the 4-element banding array on BOTH join sides —
-    // the optimizer then walks ~8 copies of the 60-term tree on every
-    // execution (measured: 1.9 s/run planning-bound vs 0.65 s cached
-    // at sf0.1, identical output; the executed work is |docs|-sized
-    // either way). The cache cuts the lineage to a plain attribute.
-    // (q296 goes further: it STAGES the sig frame corpus-keyed, so a
-    // cold JVM pays a parquet scan, not the vote + the 60-term plan.)
-    val sigs = graft.core.Caches.cached(
-      simhashPortableSigs(df, idCol, textCol))
-    simhashPairsFromSigs(sigs, idCol, maxHamming)
-  }
-
-  def minhashBands(df: DataFrame, idCol: String, textCol: String,
-                   numHashes: Int = 16, bands: Int = 4,
-                   shingleN: Int = 3): DataFrame = {
-    val rowsPerBand = numHashes / bands
-    // fused native expression (spec pins equality with the staged
-    // minhashSignatureFromHashes ∘ ShingleHashes composition)
-    df.select(col(idCol),
-        graft.functions.MinHashSignature(col(textCol), shingleN, numHashes)
-          .as("sig"))
-      .select(col(idCol), posexplode(
-        transform(sequence(lit(0), lit(bands - 1)), b =>
-          xxhash64(concat_ws(",",
-            slice(col("sig"), b * rowsPerBand + 1, lit(rowsPerBand))), b)))
-        .as(Seq("band", "bucket")))
-  }
-
   /** Candidate near-dup pairs from shared LSH buckets, verified with
-    * exact shingle-Jaccard ≥ `threshold`. The self-join is on
-    * (band, bucket) — only same-bucket rows meet, so the pair count is
+    * exact shingle-Jaccard ≥ `threshold`. A band's bucket key is the
+    * xxhash64 of its `numHashes/bands` signature slice, seeded by the
+    * band index; [[bandPairs]] pairs the rows, so the pair count is
     * bucket-local, not quadratic in the corpus.
     */
   def minhashNearDups(df: DataFrame, idCol: String, textCol: String,
                       threshold: Double = 0.7, numHashes: Int = 16,
                       bands: Int = 4, shingleN: Int = 3): DataFrame = {
-    val b = minhashBands(df, idCol, textCol, numHashes, bands, shingleN)
-    val l = b.select(col("band"), col("bucket"), col(idCol).as("id_a"))
-    val r = b.select(col("band"), col("bucket"), col(idCol).as("id_b"))
-    val candidates = l.join(r, Seq("band", "bucket"))
-      .filter(col("id_a") < col("id_b"))
-      .select("id_a", "id_b").distinct()
+    val rowsPerBand = numHashes / bands
+    // fused native expression (spec pins equality with the staged
+    // minhashSignatureFromHashes ∘ ShingleHashes composition)
+    val sigs = df.select(col(idCol),
+      graft.functions.MinHashSignature(col(textCol), shingleN, numHashes)
+        .as("sig"))
+    val candidates = bandPairs(sigs, idCol, (0 until bands).map(b =>
+      xxhash64(concat_ws(",",
+        slice(col("sig"), b * rowsPerBand + 1, rowsPerBand)), lit(b))))
     // verification Jaccard runs on the hash arrays — set sizes are
     // identical to string-shingle sets modulo 64-bit collisions. The
     // native JaccardSim expression (one hash-probe loop per pair, no
@@ -357,9 +309,11 @@ object Dedup {
     bits.reduce(_ bitwiseOR _)
   }
 
-  /** SimHash near-dup candidates: exact signature match per 16-bit block
-    * (Hamming-distance blocking: two signatures within Hamming distance 3
-    * must agree on at least one of 4 blocks).
+  /** SimHash near-dup pairs: [[hammingPairs]] over the 64-bit
+    * [[graft.functions.SimHash64]] signature in 4 blocks of 16 bits
+    * (two signatures within Hamming distance 3 must agree on at least
+    * one block). A `maxHamming` above 3 takes the smallest power-of-two
+    * block count above it, so the blocking stays exhaustive.
     *
     * BOUNDED-CORPUS VARIANT (round 15/16 adjudication): 16-bit blocks
     * are the widest exhaustive blocking a 64-bit signature allows at
@@ -370,37 +324,13 @@ object Dedup {
     * different operating point (Hamming over 128 bits), not a drop-in.
     * q31 keeps this shape because the q296 oracle twin mirrors its
     * 64-bit algebra; it is the only main-source caller.
-    *
-    * A pair agreeing on SEVERAL blocks meets once per agreeing block;
-    * instead of a `distinct()` (a full shuffle of the pair stream), each
-    * pair is kept only where the join block is the FIRST agreeing block —
-    * computable per row from the signature XOR, so dedup is a map-side
-    * filter and the only shuffle left is the bucket join itself.
     */
   def simhashNearDups(df: DataFrame, idCol: String, textCol: String,
-                      maxHamming: Int = 3): DataFrame = {
-    val withSig = df
-      .select(col(idCol), graft.functions.SimHash64(col(textCol)).as("sig"))
-    val blocks = withSig.select(col(idCol), col("sig"),
-      posexplode(array((0 until 4).map(b =>
-        shiftright(col("sig"), b * 16).bitwiseAND(0xFFFFL)): _*))
-        .as(Seq("block", "block_val")))
-    val l = blocks.select(col("block"), col("block_val"),
-      col(idCol).as("id_a"), col("sig").as("sig_a"))
-    val r = blocks.select(col("block"), col("block_val"),
-      col(idCol).as("id_b"), col("sig").as("sig_b"))
-    val xor = col("sig_a").bitwiseXOR(col("sig_b"))
-    def blockAgrees(b: Int): Column =
-      shiftright(xor, b * 16).bitwiseAND(0xFFFFL) === 0
-    val firstAgreeing = when(blockAgrees(0), 0).when(blockAgrees(1), 1)
-      .when(blockAgrees(2), 2).otherwise(3)
-    l.join(r, Seq("block", "block_val"))
-      .filter(col("id_a") < col("id_b"))
-      .filter(col("block") === firstAgreeing)
-      .withColumn("hamming", bit_count(xor))
-      .filter(col("hamming") <= maxHamming)
-      .select(col("id_a"), col("id_b"), col("hamming").cast("long").as("hamming"))
-  }
+                      maxHamming: Int = 3): DataFrame =
+    hammingPairs(
+      df.select(col(idCol), graft.functions.SimHash64(col(textCol)).as("sig")),
+      idCol, Seq("sig"), bits = 64,
+      blocks = math.max(4, Integer.highestOneBit(maxHamming) * 2), maxHamming)
 
   /** 128-bit SimHash near-dup pairs — [[simhashNearDups]]' scale path
     * (BucketPairBudgetAuditSpec, round 15). The 64-bit operator's
@@ -411,54 +341,22 @@ object Dedup {
     * budget growth for ×9.2 rows on the sf0.01→sf0.1 rung while the
     * true-pair output stayed linear (59→588). The fix the audit
     * prescribes is a WIDER KEY SPACE: two independent seed-42/seed-1042
-    * XXH64 signature halves form a 128-bit SimHash whose 4 blocks are
-    * 32 bits wide — same ≥-1-exact-block exhaustiveness at d ≤ 3, but
-    * occupancy ∝ n/2^32, pushing the quadratic knee out by 2^16×
-    * (linear to ~10^9 docs). Hamming is over all 128 bits, so d ≤ 3
-    * here is a STRICTER near-dup test than the 64-bit operator's (the
-    * bit budget doubles but the threshold doesn't) — a different
+    * XXH64 signature halves form a 128-bit SimHash whose 4 blocks (two
+    * per half) are 32 bits wide — same ≥-1-exact-block exhaustiveness
+    * at d ≤ 3, but occupancy ∝ n/2^32, pushing the quadratic knee out
+    * by 2^16× (linear to ~10^9 docs). Hamming is over all 128 bits, so
+    * d ≤ 3 here is a STRICTER near-dup test than the 64-bit operator's
+    * (the bit budget doubles but the threshold doesn't) — a different
     * operating point, not a drop-in: q31 keeps the 64-bit fixture the
     * q296 oracle twin mirrors, and callers pick by corpus size.
     */
   def simhashNearDups128(df: DataFrame, idCol: String, textCol: String,
-                         maxHamming: Int = 3): DataFrame = {
-    require(maxHamming < 4,
-      "pigeonhole exhaustiveness over 4 blocks needs maxHamming < 4")
-    val withSig = df.select(col(idCol),
-      graft.functions.SimHash64(col(textCol)).as("sig_lo"),
-      graft.functions.SimHash64Seeded(col(textCol), 1042L).as("sig_hi"))
-    // 4 disjoint 32-bit blocks: (lo half, hi half) of each signature;
-    // mask AFTER the shift — shiftright is arithmetic, and a sig with
-    // bit 63 set would otherwise sign-extend into the block value
-    def blockVal(sig: Column, half: Int): Column =
-      shiftright(sig, half * 32).bitwiseAND(0xFFFFFFFFL)
-    val blocks = withSig.select(col(idCol), col("sig_lo"), col("sig_hi"),
-      posexplode(array(
-        blockVal(col("sig_lo"), 0), blockVal(col("sig_lo"), 1),
-        blockVal(col("sig_hi"), 0), blockVal(col("sig_hi"), 1)))
-        .as(Seq("block", "block_val")))
-    val l = blocks.select(col("block"), col("block_val"),
-      col(idCol).as("id_a"), col("sig_lo").as("lo_a"),
-      col("sig_hi").as("hi_a"))
-    val r = blocks.select(col("block"), col("block_val"),
-      col(idCol).as("id_b"), col("sig_lo").as("lo_b"),
-      col("sig_hi").as("hi_b"))
-    val xorLo = col("lo_a").bitwiseXOR(col("lo_b"))
-    val xorHi = col("hi_a").bitwiseXOR(col("hi_b"))
-    def blockAgrees(b: Int): Column = {
-      val (sig, half) = if (b < 2) (xorLo, b) else (xorHi, b - 2)
-      shiftright(sig, half * 32).bitwiseAND(0xFFFFFFFFL) === 0
-    }
-    val firstAgreeing = when(blockAgrees(0), 0).when(blockAgrees(1), 1)
-      .when(blockAgrees(2), 2).otherwise(3)
-    l.join(r, Seq("block", "block_val"))
-      .filter(col("id_a") < col("id_b"))
-      .filter(col("block") === firstAgreeing)
-      .withColumn("hamming", bit_count(xorLo) + bit_count(xorHi))
-      .filter(col("hamming") <= maxHamming)
-      .select(col("id_a"), col("id_b"),
-        col("hamming").cast("long").as("hamming"))
-  }
+                         maxHamming: Int = 3): DataFrame =
+    hammingPairs(
+      df.select(col(idCol),
+        graft.functions.SimHash64(col(textCol)).as("sig_lo"),
+        graft.functions.SimHash64Seeded(col(textCol), 1042L).as("sig_hi")),
+      idCol, Seq("sig_lo", "sig_hi"), bits = 64, blocks = 2, maxHamming)
 
   /** Apply a near-dup pair list to the corpus: drop every document that
     * has a LOWER-id near-duplicate partner, keeping the canonical (min-id)
@@ -855,10 +753,10 @@ object Dedup {
     * smoke in PLANS.md measures exactly that on the fixed-k q66.
     *
     * The corpus is scanned once; the vector rides through the argmax
-    * window (no re-join to fetch it back). The self-join shuffles both
-    * sides on `centroid_id` — one exchange, reused across the two sides.
-    * Emits (id_a, id_b, cos) with id_a < id_b, ready for
-    * [[dropNearDups]].
+    * window (no re-join to fetch it back). The cell id is the single
+    * band key of [[bandPairs]], so the pair join shuffles on
+    * (band, cell) — one exchange, reused across the two sides. Emits
+    * (id_a, id_b, cos) with id_a < id_b, ready for [[dropNearDups]].
     */
   def embeddingNearDups(df: DataFrame, centroids: DataFrame,
                         threshold: Double, idCol: String = "vec_id",
@@ -871,12 +769,9 @@ object Dedup {
     val asg = Relational.topKPerGroup(joined, 1, Seq(idCol),
         Seq(col("_cos").desc, col(cIdCol)))
       .select(col(cIdCol), col(idCol), col(vecCol))
-    val a = asg.select(col(cIdCol),
-      col(idCol).as("id_a"), col(vecCol).as("_va"))
-    val b = asg.select(col(cIdCol).as("_cid_b"),
-      col(idCol).as("id_b"), col(vecCol).as("_vb"))
-    a.join(b, col(cIdCol) === col("_cid_b") && col("id_a") < col("id_b"))
-      .withColumn("cos", Similarity.cosine(col("_va"), col("_vb")))
+    bandPairs(asg, idCol, Seq(col(cIdCol)), Seq(vecCol))
+      .withColumn("cos",
+        Similarity.cosine(col(s"${vecCol}_a"), col(s"${vecCol}_b")))
       .filter(col("cos") >= threshold)
       .select(col("id_a"), col("id_b"), col("cos"))
   }

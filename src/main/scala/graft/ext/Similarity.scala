@@ -11,9 +11,11 @@ import graft.operators.Relational
   * set against a distributed scan of the corpus; exact, one pass, no
   * shuffle on the corpus side until the per-query top-k.
   *
-  * Scale path: sign-LSH (random-hyperplane) bucketing — signature computed
-  * map-side, candidates meet via a bucket equi-join, so the pair count is
-  * bucket-local. Recall < 1 by construction; widen with more probes/bands.
+  * Scale path: sign-LSH (random-hyperplane) bucketing — one signature
+  * per band computed map-side, candidates paired by the shared banded
+  * operator [[Dedup.bandPairs]] (one (band, bucket) equi-join), so the
+  * pair count is bucket-local. Recall < 1 by construction; widen with
+  * more bands.
   */
 object Similarity {
 
@@ -189,18 +191,24 @@ object Similarity {
       adaptivePlanes(df.count(), planes, targetBucketRows)
     } else planes
 
+  /** Per-band sign-LSH bucket keys: band k hashes with its own
+    * disjoint family of `planes` planes. The one key construction
+    * behind [[lshNearNeighbors]] and [[lshBucketStats]].
+    */
+  private def signLshKeys(vec: Column, planes: Int, bands: Int): Seq[Column] =
+    (0 until bands).map(k => signLshSignature(vec, planes, k * planes))
+
   /** Approximate near-neighbor pairs: same sign-LSH bucket in ANY band →
-    * exact cosine ≥ threshold. The join key is (band, bucket), so
-    * candidate generation is linear in bucket occupancy — the 100 TB-safe
-    * shape.
+    * exact cosine ≥ threshold. Candidates come from
+    * [[Dedup.bandPairs]], whose join key is (band, bucket), so
+    * candidate generation is linear in bucket occupancy — the
+    * 100 TB-safe shape.
     *
     * `bands` is the recall knob: each band hashes with its own disjoint
     * plane family, and a pair qualifies if any band agrees — recall goes
     * from p (one band) to 1−(1−p)^bands for candidate-probability p,
     * at the cost of `bands`× posting rows. Pairs agreeing in several
-    * bands are kept only at their FIRST agreeing band (computed per row
-    * from the carried signature arrays — a map-side filter, no
-    * `distinct()` shuffle of the pair stream).
+    * bands are kept once, at their FIRST agreeing band.
     *
     * Scale safety — two independent guards, both ON by default, keep
     * the band-bucket self-join's candidate budget O(corpus) instead of
@@ -222,11 +230,12 @@ object Similarity {
     *    precision/recall dial, compensated by `bands` if a caller needs
     *    a recall guarantee far from 1.0.
     *  - `maxBucketRows > 0` hard-caps per-(band,bucket) occupancy by
-    *    rank-truncation (row_number over the bucket window, ordered by
-    *    id — deterministic), the posting-cap discipline of the dedup
-    *    family (Dedup.sharedSpanPairs' maxPostingDf) adapted to keep
-    *    the cap's survivors rather than drop the hot key outright
-    *    (a hot LSH bucket still holds real neighbors; a hot shingle is
+    *    rank-truncation of the postings before pairing (row_number over
+    *    the bucket window, ordered by id — deterministic), the
+    *    posting-cap discipline of the dedup family
+    *    (Dedup.sharedSpanPairs' maxPostingDf) adapted to keep the cap's
+    *    survivors rather than drop the hot key outright (a hot LSH
+    *    bucket still holds real neighbors; a hot shingle is
     *    boilerplate). The window rides the same hash exchange the
     *    self-join needs, so the cap adds no extra shuffle. This bounds
     *    the worst case (adversarial/degenerate vectors collapsing to
@@ -242,70 +251,35 @@ object Similarity {
                        maxBucketRows: Int = 4096)
   : DataFrame = {
     val planesEff = effectivePlanes(df, planes, targetBucketRows)
-    // per-(band,bucket) occupancy cap; partitioning by the join key
-    // means the row_number exchange is exactly the one the self-join
-    // reuses on the build of each side
-    def capOccupancy(sig: DataFrame, keys: Seq[String]): DataFrame =
+    // partitioning by the join key means the row_number exchange is
+    // exactly the one the self-join reuses on each side
+    def capOccupancy(postings: DataFrame): DataFrame =
       if (maxBucketRows > 0) {
         import org.apache.spark.sql.expressions.Window
-        val w = Window.partitionBy(keys.map(col): _*).orderBy(col(idCol))
-        sig.repartition(keys.map(col): _*)
-          .withColumn("_rn", row_number().over(w))
+        val key = Seq(col("band"), col("bucket"))
+        postings.repartition(key: _*)
+          .withColumn("_rn", row_number().over(
+            Window.partitionBy(key: _*).orderBy(col(idCol))))
           .filter(col("_rn") <= maxBucketRows).drop("_rn")
-      } else sig
+      } else postings
     // compute each vector's norm ONCE before the pair join and carry it
     // through as a scalar (the join node blocks project-collapse, so it
     // cannot be re-inlined); per-pair work is then one dot + one divide
     // instead of dot + two norm recomputations per candidate pair
-    val pairs =
-      if (bands == 1) {
-        // single band: the first-agreeing-band filter is vacuous, so
-        // neither the signature array nor the band column is built or
-        // carried through the join — each side ships only
-        // (bucket, id, vec, norm), the minimum the verify step needs
-        val sig = capOccupancy(df.select(col(idCol), col(vecCol),
-          l2Norm(col(vecCol)).as("_norm"),
-          signLshSignature(col(vecCol), planesEff, 0).as("bucket")),
-          Seq("bucket"))
-        val l = sig.select(col("bucket"), col(idCol).as("id_a"),
-          col(vecCol).as("v_a"), col("_norm").as("norm_a"))
-        val r = sig.select(col("bucket"), col(idCol).as("id_b"),
-          col(vecCol).as("v_b"), col("_norm").as("norm_b"))
-        l.join(r, Seq("bucket")).filter(col("id_a") < col("id_b"))
-      } else {
-        val sig = capOccupancy(df
-          .select(col(idCol), col(vecCol), l2Norm(col(vecCol)).as("_norm"),
-            array((0 until bands).map(k =>
-              signLshSignature(col(vecCol), planesEff, k * planesEff)): _*)
-              .as("_sigs"))
-          .select(col(idCol), col(vecCol), col("_norm"), col("_sigs"),
-            posexplode(col("_sigs")).as(Seq("band", "bucket"))),
-          Seq("band", "bucket"))
-        val l = sig.select(col("band"), col("bucket"), col(idCol).as("id_a"),
-          col(vecCol).as("v_a"), col("_norm").as("norm_a"),
-          col("_sigs").as("sigs_a"))
-        val r = sig.select(col("band"), col("bucket"), col(idCol).as("id_b"),
-          col(vecCol).as("v_b"), col("_norm").as("norm_b"),
-          col("_sigs").as("sigs_b"))
-        val firstAgreeing = (bands - 1 to 0 by -1).foldLeft(lit(bands): Column) {
-          (acc, k) => when(element_at(col("sigs_a"), k + 1) ===
-            element_at(col("sigs_b"), k + 1), lit(k)).otherwise(acc)
-        }
-        l.join(r, Seq("band", "bucket"))
-          .filter(col("id_a") < col("id_b"))
-          .filter(col("band") === firstAgreeing)
-      }
-    pairs
-      .withColumn("cos", round(
-        dot(col("v_a"), col("v_b")) / (col("norm_a") * col("norm_b")), 4))
+    Dedup.bandPairs(
+        df.select(col(idCol), col(vecCol), l2Norm(col(vecCol)).as("_norm")),
+        idCol, signLshKeys(col(vecCol), planesEff, bands),
+        Seq(vecCol, "_norm"), capOccupancy)
+      .withColumn("cos", round(dot(col(s"${vecCol}_a"), col(s"${vecCol}_b")) /
+        (col("_norm_a") * col("_norm_b")), 4))
       .filter(col("cos") >= threshold)
       .select("id_a", "id_b", "cos")
   }
 
   /** Diagnostic companion to [[lshNearNeighbors]]: per-(band, bucket)
     * posting occupancy under the SAME plane parameterization (adaptive
-    * knee included), so an engaged `maxBucketRows` cap is OBSERVABLE
-    * instead of silent (ADVICE r15) — any row with
+    * knee included) and the same keys, so an engaged `maxBucketRows`
+    * cap is OBSERVABLE instead of silent (ADVICE r15) — any row with
     * `occupancy > maxBucketRows` is a bucket the pair join truncated
     * (recall-only, survivors are the cap smallest ids). One groupBy on
     * the join key; no pair join is run. Columns: band, bucket,
@@ -316,15 +290,12 @@ object Similarity {
                      bands: Int = 1, targetBucketRows: Int = 128)
   : DataFrame = {
     val planesEff = effectivePlanes(df, planes, targetBucketRows)
-    val keyed =
-      if (bands == 1)
-        df.select(lit(0).as("band"),
-          signLshSignature(col(vecCol), planesEff, 0).as("bucket"))
-      else
-        df.select(posexplode(array((0 until bands).map(k =>
-          signLshSignature(col(vecCol), planesEff, k * planesEff)): _*))
-          .as(Seq("band", "bucket")))
-    keyed.groupBy("band", "bucket").agg(count(lit(1)).as("occupancy"))
+    // outer, as in Dedup.bandPairs: an inner generator would re-run
+    // every signature in an inferred `size(...) > 0` filter
+    df.select(posexplode_outer(
+        array(signLshKeys(col(vecCol), planesEff, bands): _*))
+        .as(Seq("band", "bucket")))
+      .groupBy("band", "bucket").agg(count(lit(1)).as("occupancy"))
   }
 
   /** IVF-style coarse quantization: assign each vector to the nearest of

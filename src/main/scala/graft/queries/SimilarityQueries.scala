@@ -311,8 +311,8 @@ object SimilarityQueries {
       val sigs = Staging.frame(s, dir, "embeddings", "q297sig") {
         q297SigInput(t(s, dir, "embeddings"))
       }
-      ext.Dedup.bitSigPairsFromSigs(sigs, "vec_id", maxHamming = 3,
-          totalBits = 32, blocks = 4)
+      ext.Dedup.hammingPairs(sigs, "vec_id", Seq("sig"), bits = 32,
+          blocks = 4, maxHamming = 3)
         .orderBy(col("id_a"), col("id_b"))
     },
       // the identical sign-LSH algebra on md5 plane signs: quantize

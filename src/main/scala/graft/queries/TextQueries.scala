@@ -1123,7 +1123,8 @@ object TextQueries {
             .filter(col("doc_id") < 1000)),
           "doc_id", "text")
       }
-      ext.Dedup.simhashPairsFromSigs(sigs, "doc_id", maxHamming = 3)
+      ext.Dedup.hammingPairs(sigs, "doc_id", Seq("sig"),
+          bits = ext.Dedup.portableSimhashBits, blocks = 4, maxHamming = 3)
         .orderBy(col("id_a"), col("id_b"))
     },
       // the identical bit-vote algebra on md5: tokval = first 15 md5 hex

@@ -69,7 +69,7 @@ class BucketPairBudgetAuditSpec extends SparkTestBase {
     * the executable spec that pins it.
     */
   private val adjudicated: Map[String, String] = Map(
-    "q34_lsh_neighbors :: join#0 [bucket | bucket]" ->
+    "q34_lsh_neighbors :: join#0 [band,bucket | band,bucket]" ->
       ("adaptive-planes knee sits just above the probe rungs: planes = " +
         "max(4, ceil(log2(n/128))) stays at the floor through n = 2048, " +
         "and sf0.1's corpus is 2000 vectors, so both rungs see the same " +
@@ -78,7 +78,7 @@ class BucketPairBudgetAuditSpec extends SparkTestBase {
         "hard-caps degenerate collapse; LshRecallAtScaleSpec's " +
         "16×-grown rung asserts budget ≤ 4·128·n (measured 4.9M vs the " +
         "fixed-planes 66.2M) with recall ≥ 0.8 through the shipped path."),
-    "q31_simhash_neardup :: join#0 [block,block_val | block,block_val]" ->
+    "q31_simhash_neardup :: join#0 [band,bucket | band,bucket]" ->
       ("16-bit blocks are the WIDEST pigeonhole-exhaustive blocking for " +
         "Hamming ≤ 3 on a 64-bit signature (needs ≥ d+1 = 4 blocks), so " +
         "occupancy ∝ n/2^16 and the budget is Θ(n²/2^16) by the " +
@@ -91,7 +91,7 @@ class BucketPairBudgetAuditSpec extends SparkTestBase {
         "ladder pins: budget ×9.3 for rows ×8.8 on sf0.01→sf0.1 vs the " +
         "64-bit ×60.6 for ×9.2; 3.8 s at the 100× rung). q31 keeps " +
         "the 64-bit fixture at oracle-checkable corpus sizes."),
-    "q66_dedup_embedding :: join#1 [centroid_id | _cid_b]" ->
+    "q66_dedup_embedding :: join#1 [band,bucket | band,bucket]" ->
       ("exact cell-pair semantics over CALLER-CHOSEN centroids: the " +
         "q66 oracle fixture pins 8 fixed centroids so DuckDB can replay " +
         "the assign→pair→drop chain hash-exactly, which makes per-cell " +
@@ -100,7 +100,7 @@ class BucketPairBudgetAuditSpec extends SparkTestBase {
         "cells with the corpus via the engine's own kmeans/ivfAssign " +
         "(SimilaritySpec pins both); the VERDICT r13/r14 100× " +
         "adjudication for q66 names the same exact-cell-pair class."),
-    "q66_dedup_embedding :: join#3 [centroid_id | _cid_b]" ->
+    "q66_dedup_embedding :: join#3 [band,bucket | band,bucket]" ->
       ("same site as join#1 — the dedup chain is not a shared subtree " +
         "at the logical level, so the optimized tree carries two " +
         "copies of the one cell-pair join (both flag with identical " +

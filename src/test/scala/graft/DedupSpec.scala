@@ -43,8 +43,8 @@ class DedupSpec extends SparkTestBase {
     assert(!pairs.exists(p => p._1 == 3 || p._2 == 3))
   }
 
-  test("minhashNearDupsPortable survives sub-shingle docs under ANSI " +
-    "(try_element_at null-propagation, no INVALID_ARRAY_INDEX)") {
+  test("q295 composition survives sub-shingle docs under ANSI " +
+    "(try_element_at nulls)") {
     // Spark 4 runs ANSI-on by default: a plain element_at past the end
     // of the token array would throw, not null. Docs with 1 or 2 tokens
     // (< shingleN=3) must flow through as all-null signatures — dropped
@@ -56,7 +56,8 @@ class DedupSpec extends SparkTestBase {
       (3, "solo"),          // 1 token: every shingle slot out of range
       (4, "two tokens"),    // 2 tokens: third slot out of range
       (5, "")).toDF("doc_id", "text")
-    val pairs = Dedup.minhashNearDupsPortable(df, "doc_id", "text",
+    val pairs = Dedup.minhashPairsFromSigs(
+        Dedup.minhashPortableSigs(df, "doc_id", "text"), "doc_id",
         threshold = 0.5)
       .select($"id_a", $"id_b").as[(Int, Int)].collect().toSet
     assert(pairs.contains((1, 2)))

@@ -68,8 +68,9 @@ class LshRecallSpec extends SparkTestBase {
       .select("id_a", "id_b")
     val nTruth = truth.count()
     assert(nTruth >= 25L, s"vacuous truth set ($nTruth pairs)")
-    val found = Dedup.minhashNearDupsPortable(corpus, "doc_id", "text",
-      threshold = 0.5).select("id_a", "id_b")
+    val found = Dedup.minhashPairsFromSigs(
+        Dedup.minhashPortableSigs(corpus, "doc_id", "text"), "doc_id",
+        threshold = 0.5).select("id_a", "id_b")
     val hits = truth.join(found, Seq("id_a", "id_b"), "left_semi").count()
     val recall = hits.toDouble / nTruth
     info(f"portable minhash recall: $hits/$nTruth = $recall%.3f")

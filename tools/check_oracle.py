@@ -6,7 +6,9 @@ Usage: python3 tools/check_oracle.py <sfdir> <verify_outdir>
 Reads <verify_outdir>/oracle_sql.json, runs each SQL in DuckDB against
 views over <sfdir>/*.parquet, loads the Spark result parquet from
 <verify_outdir>/<name>/, sorts columns by name and rows by all columns,
-and compares values. Exit code = number of mismatching queries.
+and compares values. Exit code = number of mismatching queries. The
+line before the final `N mismatching / M total` names every comparison
+of 0 rows against 0 rows (it passes, but checks nothing).
 
 Driver-side tooling only (python/duckdb are not available to the engine).
 """
@@ -33,6 +35,7 @@ def main(sfdir, outdir):
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{path}'")
     oracle = json.load(open(f"{outdir}/oracle_sql.json"))
     bad = 0
+    empty = []  # compared 0 rows against 0 rows: passes, but checks nothing
     for name, sql in sorted(oracle.items()):
         try:
             exp = con.execute(sql).fetchdf()
@@ -91,6 +94,11 @@ def main(sfdir, outdir):
                   if str(exp_n[c].dtype) != str(got_n[c].dtype)]
             note = f"  (dtype drift: {dt})" if dt else ""
             print(f"OK   {name} ({len(got_n)} rows){note}")
+            if len(got_n) == 0:
+                empty.append(name)
+    # before the summary line, which stays last and unchanged
+    print(f"{len(empty)} empty (0 rows against 0 rows): "
+          f"{' '.join(empty) if empty else '-'}")
     print(f"{bad} mismatching / {len(oracle)} total")
     return bad
 
