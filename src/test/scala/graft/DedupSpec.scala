@@ -43,8 +43,10 @@ class DedupSpec extends SparkTestBase {
     assert(!pairs.exists(p => p._1 == 3 || p._2 == 3))
   }
 
-  test("q295 composition survives sub-shingle docs under ANSI " +
-    "(try_element_at nulls)") {
+  // The name keeps the former wrapper's name; the body runs the
+  // minhashPortableSigs + minhashPairsFromSigs composition q295 runs.
+  test("minhashNearDupsPortable survives sub-shingle docs under ANSI " +
+    "(try_element_at null-propagation, no INVALID_ARRAY_INDEX)") {
     // Spark 4 runs ANSI-on by default: a plain element_at past the end
     // of the token array would throw, not null. Docs with 1 or 2 tokens
     // (< shingleN=3) must flow through as all-null signatures — dropped
